@@ -1231,8 +1231,9 @@ def _emit_records(timings: dict[str, float], sf: str) -> list[str]:
     in small, whole lines inside the tail window:
 
     - the trend-ratio records carry every banded slope watch NOT already
-      inside the headline's watches — the doc-trend x8-over-x1 ratios,
-      the q124 fixed-cells ratio, and the skew-over-balanced ratios —
+      inside the headline's watches — the doc-trend x8-over-x1 ratios
+      (q124_semdedup's included) and the skew-over-balanced ratios; the
+      q124 fixed-cells ratio is a watch, so it rides in the headline —
       with tail-budget key encoding ``<query>_x8r`` =
       ``trend_<query>_x8_over_x1_ratio`` and ``<query>_skewr`` =
       ``trend_<query>_skew_over_balanced_ratio`` (values rounded to 3
@@ -1388,8 +1389,9 @@ def _emit_records(timings: dict[str, float], sf: str) -> list[str]:
     )
 
     # Compact trend-ratio records: every banded slope watch NOT already
-    # inside the headline's watches — doc-trend x8/x1 ratios, the q124
-    # fixed-cells ratio, skew-over-balanced ratios — chunked into whole
+    # inside the headline's watches — doc-trend x8/x1 ratios and
+    # skew-over-balanced ratios (the q124 fixed-cells ratio is a watch and
+    # rides in the headline) — chunked into whole
     # lines that fit the driver's tail window. (Norm twins moved to the
     # full record only in round 14 — see the docstring.)
     # Key encoding (tail budget): '<query>_xNr' = trend_<query>_xN_over_x1

@@ -11,6 +11,7 @@ kept name-compatible (see :mod:`hdfs_hive_sql_playground_spark.cli`).
 
 from __future__ import annotations
 
+import logging
 import os
 import re
 import tempfile
@@ -22,8 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from hdfs_hive_sql_playground_spark import dialect
 from hdfs_hive_sql_playground_spark.session import get_spark
 from hdfs_hive_sql_playground_spark.sinks import DEFAULT_WAREHOUSE, ctas_text, read_text_table
-from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, jdbc_ddl, read_jdbc
-from hdfs_hive_sql_playground_spark.tables import TABLES, load
+from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, jdbc_count, jdbc_ddl
+from hdfs_hive_sql_playground_spark.tables import register_all
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -172,8 +175,8 @@ class Engine:
             if self._catalog_is_hive():
                 try:
                     self.spark.sql(sql)  # catalog parity (SHOW PARTITIONS etc.)
-                except Exception:
-                    pass
+                except Exception as exc:
+                    log.warning("DDL shim: catalog statement %r failed: %s", sql, exc)
             self._text_shims[name] = {
                 "row_col": row_col,
                 "partition_col": part_col,
@@ -187,15 +190,16 @@ class Engine:
         if m and m.group(1) in getattr(self, "_text_shims", {}):
             name, col, value, path = m.group(1), m.group(2), m.group(3), m.group(4)
             if self._catalog_is_hive():
+                # Qualified name bypasses the shim temp view so the
+                # catalog partition registers (SHOW PARTITIONS parity).
+                stmt = (
+                    f"ALTER TABLE spark_catalog.default.{name} "
+                    f"ADD PARTITION ({col}='{value}') LOCATION '{path}'"
+                )
                 try:
-                    # Qualified name bypasses the shim temp view so the
-                    # catalog partition registers (SHOW PARTITIONS parity).
-                    self.spark.sql(
-                        f"ALTER TABLE spark_catalog.default.{name} "
-                        f"ADD PARTITION ({col}='{value}') LOCATION '{path}'"
-                    )
-                except Exception:
-                    pass
+                    self.spark.sql(stmt)
+                except Exception as exc:
+                    log.warning("DDL shim: catalog statement %r failed: %s", stmt, exc)
             self._text_shims[name]["partitions"][value] = path
             self._refresh_text_shim(name)
             return self.spark.sql("SELECT 1 AS ok").limit(0)
@@ -264,10 +268,7 @@ class Engine:
         return [self.exec_sql(s) for s in self.split_statements(text)]
 
     def register_testdata(self, sf_dir: str) -> None:
-        for name in TABLES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.exists(path):
-                load(self.spark, sf_dir, name).createOrReplaceTempView(name)
+        register_all(self.spark, sf_dir)
 
     def ingest(self, src_dir: str, dest_dir: str) -> int:
         """``hadoop fs -put`` analog (A1, ``playground.py:210-214``): stage a
@@ -315,9 +316,10 @@ class Engine:
         batchsize: int = 1000,
         create_ddl: str | None = None,
     ) -> int:
-        """JDBC export + verification count (runall steps 7-10, A18-A26)."""
+        """JDBC export + verification count on the target (runall steps
+        7-10, A18-A26)."""
         if create_ddl:
             jdbc_ddl(self.spark, url, create_ddl)
         df = self.spark.table(table)
         export_jdbc(df, url, table, num_partitions=num_partitions, batchsize=batchsize)
-        return read_jdbc(self.spark, url, table).count()
+        return jdbc_count(self.spark, url, table)

@@ -1263,7 +1263,7 @@ def q136_segment_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The join itself still carries (doc_id, text) — the rewrite side's
     # words column materializes AFTER the join, so the fallback branch
     # shuffles exactly what it always shuffled.
-    if parquet_row_count(os.path.join(sf_dir, "documents.parquet")) <= REWRITE_BCAST_CAP:
+    if parquet_row_count(spark, os.path.join(sf_dir, "documents.parquet")) <= REWRITE_BCAST_CAP:
         rewrite = d.join(F.broadcast(removals), "doc_id", "left")
     else:
         rewrite = d.join(removals.hint("shuffle_hash"), "doc_id", "left")

@@ -26,6 +26,8 @@ from hdfs_hive_sql_playground_spark.queries import register
 from hdfs_hive_sql_playground_spark.sinks import DEFAULT_WAREHOUSE, write_range_layout
 from hdfs_hive_sql_playground_spark.tables import load
 
+N_BUCKETS = 8  # q78's bucket count
+
 _AGG_ORACLE = """
     SELECT
       l_returnflag,
@@ -133,20 +135,20 @@ def q78_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 1-3 cores. Spread rows by the bucket key first: repartition uses
         # the same murmur3 hash family as bucket assignment, so with a task
         # count that is a multiple of the bucket count each task writes
-        # exactly one bucket's rows — rounded UP to the next multiple of 8
-        # (round-13 ADVICE: on hosts where cores % 8 != 0 the invariant
-        # broke, tasks straddled buckets, and each task wrote several
-        # per-bucket files). Gated on the scan's partition count —
+        # exactly one bucket's rows — rounded UP to the next multiple of
+        # N_BUCKETS (round-13 ADVICE: on hosts where cores % 8 != 0 the
+        # invariant broke, tasks straddled buckets, and each task wrote
+        # several per-bucket files). Gated on the scan's partition count —
         # production scans already carry >= cores partitions and skip the
         # exchange.
         par = spark.sparkContext.defaultParallelism
-        par = max(8, ((par + 7) // 8) * 8)
+        par = max(N_BUCKETS, ((par + N_BUCKETS - 1) // N_BUCKETS) * N_BUCKETS)
         if src.rdd.getNumPartitions() < par:
             src = src.repartition(par, F.col(key))
         (
             src
             .write.mode("overwrite")
-            .bucketBy(8, key)
+            .bucketBy(N_BUCKETS, key)
             .sortBy(key)
             .option("path", os.path.join(DEFAULT_WAREHOUSE, tbl))
             .saveAsTable(tbl)

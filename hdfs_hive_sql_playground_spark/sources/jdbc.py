@@ -122,3 +122,19 @@ def jdbc_ddl(spark: SparkSession, url: str, *statements: str) -> None:
         stmt.close()
     finally:
         conn.close()
+
+
+def jdbc_count(spark: SparkSession, url: str, table: str) -> int:
+    """``SELECT COUNT(*)`` on the export target through the driver's
+    DriverManager (as :func:`jdbc_ddl`): the target counts its own rows,
+    so none travel back through Spark."""
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        stmt = conn.createStatement()
+        rs = stmt.executeQuery(f"SELECT COUNT(*) FROM {table}")
+        rs.next()
+        n = rs.getLong(1)
+        stmt.close()
+        return n
+    finally:
+        conn.close()

@@ -55,36 +55,40 @@ _GUARD_CACHE_ENABLED = (
 _guard_ok: set[tuple[str, int]] = set()
 
 
-def _check_wholetext_sizes(spark: SparkSession, path: str, limit: int) -> None:
-    """Driver-side size guard for the wholetext path, via the Hadoop
-    FileSystem API so EVERY scheme Spark can read (file:, hdfs://, s3a://)
-    is guarded, not just local paths. Metadata-only: globStatus +
-    listStatus — the same listing the scan itself performs, so the cost is
-    already paid at 100 TB. Hidden files (``_``/``.`` prefixes) are skipped
-    exactly as FileInputFormat skips them."""
-    if _GUARD_CACHE_ENABLED and (path, limit) in _guard_ok:
-        return
+def data_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ...]:
+    """(path, size, mtime ms) of every data file at ``path`` (a file, a
+    directory tree or a glob), sorted. Listed through the Hadoop
+    FileSystem API, so EVERY scheme Spark can read (file:, hdfs://,
+    s3a://) works, not just local paths. Metadata-only: globStatus +
+    listStatus, the same listing a scan itself performs. Hidden files
+    (``_``/``.`` prefixes) are skipped exactly as FileInputFormat skips
+    them."""
     jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(hconf)
-    statuses = fs.globStatus(hpath)
-    if statuses is None:
-        return
-    stack = list(statuses)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    stack = list(fs.globStatus(hpath) or [])
+    files = []
     while stack:
         st = stack.pop()
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
+        if st.getPath().getName().startswith(("_", ".")):
             continue
         if st.isDirectory():
             stack.extend(fs.listStatus(st.getPath()))
-            continue
-        size = st.getLen()
+        else:
+            files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(files))
+
+
+def _check_wholetext_sizes(spark: SparkSession, path: str, limit: int) -> None:
+    """Driver-side size guard for the wholetext path, over
+    :func:`data_files` so every scheme Spark reads is guarded."""
+    if _GUARD_CACHE_ENABLED and (path, limit) in _guard_ok:
+        return
+    for f, size, _mtime in data_files(spark, path):
         if size > limit:
             raise ValueError(
                 f"header-skip text scan reads whole files into memory; "
-                f"{st.getPath().toString()!r} is {size} bytes (> {limit}). "
+                f"{f!r} is {size} bytes (> {limit}). "
                 "Split the file upstream or read it without "
                 "skip_header_lines."
             )

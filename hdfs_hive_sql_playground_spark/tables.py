@@ -5,6 +5,16 @@ distributed store; the access pattern is identical — ``spark.read.parquet``
 on a directory — so nothing here changes with scale. Column pruning and
 predicate pushdown reach the parquet scan because every consumer expresses
 its query declaratively on the returned DataFrame.
+
+Schemas are resolved once per process, as the reference's Hive metastore
+holds them: a query there finds a table's schema by name without opening a
+data file. ``load()`` infers a table's schema from its parquet footers on
+the first call only (one small Spark job) and caches it; later calls, from
+any session in the process, read with that schema and start no job. The
+cache key is the table path, the (path, size, mtime) of each data file
+(:func:`~.sources.text.data_files`) and the values of the session confs in
+``_SCHEMA_CONFS``, which change what Spark infers from a footer. A
+rewritten file or a changed conf is therefore a miss; nothing else evicts.
 """
 
 from __future__ import annotations
@@ -14,7 +24,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
+
+from hdfs_hive_sql_playground_spark.sources.text import data_files
 
 TABLES = (
     "region",
@@ -30,6 +42,15 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_schemas: dict[tuple, StructType] = {}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -51,7 +72,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # inherits the host JVM zone — set it here so correctness never rides
     # on the host being UTC.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = (path, data_files(spark, path), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    if key not in _schemas:
+        _schemas[key] = spark.read.parquet(path).schema
+    df = spark.read.schema(_schemas[key]).parquet(path)
     # events.ts is parquet TIMESTAMP(NANOS), which Spark's reader rejects
     # (PARQUET_TYPE_ILLEGAL). The session sets
     # spark.sql.legacy.parquet.nanosAsLong=true so it scans as a raw
@@ -65,7 +90,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def parquet_row_count(path: str) -> int:
+def parquet_row_count(spark: SparkSession, path: str) -> int:
     """Total row count of a parquet file or directory from FOOTER METADATA
     only — no data pages read, no Spark job scheduled.
 
@@ -77,35 +102,25 @@ def parquet_row_count(path: str) -> int:
     query keeps. A parquet footer is a few KB per file regardless of data
     size, so this stays O(#files) metadata reads at 100 TB (and on a real
     cluster the same number would come from catalog stats / manifest
-    files). Cached per (path, file-list fingerprint): the fingerprint
-    (sorted names + sizes + mtime_ns, pure os.stat — no footer reads)
-    invalidates the entry when a path is rewritten in-process (e.g. a
-    regenerated .bench_data trend fixture after a partial prior run), so a
-    stale count can never silently flip q136's broadcast-vs-shuffle pick.
+    files). Cached per file fingerprint (:func:`data_files`, the listing
+    the schema cache keys on), so a path rewritten in-process (e.g. a
+    regenerated .bench_data trend fixture after a partial prior run) is
+    re-counted and a stale count can never silently flip q136's
+    broadcast-vs-shuffle pick.
     """
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(root, fn)
-            for root, _dirs, fns in os.walk(path)
-            for fn in fns
-            if fn.endswith(".parquet") and not fn.startswith(("_", "."))
-        )
-    else:
-        files = [path]
-    stats = tuple(
-        (f, st.st_size, st.st_mtime_ns) for f in files for st in (os.stat(f),)
-    )
-    return _footer_row_count(stats)
+    return _footer_row_count(data_files(spark, path))
 
 
 @functools.lru_cache(maxsize=None)
-def _footer_row_count(stats: tuple[tuple[str, int, int], ...]) -> int:
+def _footer_row_count(files: tuple[tuple[str, int, int], ...]) -> int:
     import pyarrow.parquet as pq
 
-    return sum(pq.read_metadata(f).num_rows for f, _size, _mtime in stats)
+    return sum(pq.read_metadata(f).num_rows for f, _size, _mtime in files)
 
 
 def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so plain SQL can reference it."""
+    """Register every table present under ``sf_dir`` as a temp view so
+    plain SQL can reference it; missing tables are skipped."""
     for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -41,11 +41,8 @@ def main() -> None:
     # rebuild it if absent.
     table_dir = os.path.join(REPO, "spark-warehouse", "m33_bench")
     if not os.path.isdir(table_dir):
-        sys.path.insert(0, os.path.join(REPO, "scripts"))
         from hdfs_hive_sql_playground_spark.m33 import m33_schem
         from hdfs_hive_sql_playground_spark.sinks import ctas_text
-
-        from gen_m33_fixture import gen_tree  # noqa: F401  (bench fixture)
 
         fixture = os.path.join(REPO, ".bench_data", "m33_full_x1v2")
         assert os.path.isdir(fixture), "run bench.py once to build the fixture"

@@ -300,7 +300,7 @@ def test_emit_records_tail_priority_ordering():
 
 def test_emit_records_tail_budget():
     """Artifact-durability contract, restated round 14 (VERDICT r13 item
-    1): EVERY adjudication key — the 21 registry bench walls (NEW: inside
+    1): EVERY adjudication key — the registry bench walls (NEW: inside
     the headline record's queries dict, so the driver's PERF/scaling
     per-query surface finally covers parallelizable legs), every banded
     ratio (doc-trend x8/x1, q124 fixed-cells, skew-over-balanced — now
@@ -309,20 +309,13 @@ def test_emit_records_tail_budget():
     JSONL lines that together fit the driver's 2000-char stdout tail.
     Per-leg _norm twins stay in the FULL record (line 1) only; the tail
     cannot hold them AND the registry walls, and the banded evidence is
-    the ratios. Built with the FULL current inventory (all 21 bench legs,
-    every doc-trend query x1/x8, skew legs, m33 legs, q124 legs) so
-    adding a leg that overflows the budget fails HERE, not in the
-    round's clipped artifact."""
-    registry_legs = [
-        "q01_pricing_summary", "q10_join_chain_revenue", "q12_region_revenue",
-        "q20_window_rank", "q61_tumbling_window", "q62_sessionize",
-        "q80_exact_dedup", "q82_ngram_jaccard_pairs", "q85_ann_bruteforce_topk",
-        "q86_ivf_ann_topk", "q91_quality_score", "q95_multimodal_features",
-        "q97_ann_pandas_topk", "q99_curation_pipeline", "q104_heavy_hitters",
-        "q124_semdedup_prune", "q136_segment_dedup_rewrite",
-        "q137_kmeans_refine", "q138_weighted_sample",
-        "q141_target_affinity_select", "q143_crawl_front_pipeline",
-    ]
+    the ratios. Built with the FULL current inventory (every bench=True
+    registry leg, read from the registry; every doc-trend query x1/x8,
+    skew legs, m33 legs, q124 legs) so adding a leg that overflows the
+    budget fails HERE, not in the round's clipped artifact."""
+    from hdfs_hive_sql_playground_spark.queries import all_queries
+
+    registry_legs = [n for n, spec in all_queries().items() if spec.bench]
     timings = {
         "calibration_x1_first": 0.46,
         "calibration_x1_last": 0.47,

@@ -89,7 +89,7 @@ def test_mg_candidates_never_miss_a_heavy_hitter(toks, n_batches):
 
     from hdfs_hive_sql_playground_spark.queries.sketches import (
         MG_CAPACITY,
-        _mg_candidates,
+        _mg_candidates_and_total,
     )
 
     # Split the stream into documents (one token each keeps it simple),
@@ -97,8 +97,9 @@ def test_mg_candidates_never_miss_a_heavy_hitter(toks, n_batches):
     docs = pd.DataFrame({"text": toks})
     bounds = [len(toks) * i // n_batches for i in range(n_batches + 1)]
     batches = [docs.iloc[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
-    (cand,) = list(_mg_candidates(iter(batches)))
-    got = set(cand["tok"])
+    (cand,) = list(_mg_candidates_and_total(iter(batches)))
+    # the partition's token-total marker row (tok NULL) is not a candidate
+    got = set(cand["tok"].dropna())
     counts = collections.Counter(toks)
     for tok, c in counts.items():
         if c * MG_CAPACITY > len(toks):

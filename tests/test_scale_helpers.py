@@ -331,24 +331,24 @@ def test_parquet_row_count_file_and_directory(spark, tmp_path):
 
     d = str(tmp_path / "multi.parquet")
     spark.range(1234).repartition(7).write.mode("overwrite").parquet(d)
-    assert parquet_row_count(d) == 1234
+    assert parquet_row_count(spark, d) == 1234
     # single file: point straight at one part file inside the directory
     import glob
 
     part = glob.glob(d + "/part-*.parquet")[0]
     import pyarrow.parquet as pq
 
-    assert parquet_row_count(part) == pq.read_metadata(part).num_rows
+    assert parquet_row_count(spark, part) == pq.read_metadata(part).num_rows
     # cached per (path, file fingerprint): a repeat call hits the footer
     # cache instead of re-reading metadata...
     from hdfs_hive_sql_playground_spark.tables import _footer_row_count
 
     before = _footer_row_count.cache_info().hits
-    parquet_row_count(d)
+    parquet_row_count(spark, d)
     assert _footer_row_count.cache_info().hits == before + 1
     # ...but an IN-PROCESS rewrite of the same path (regenerated trend
     # fixture, the round-8 ADVICE hazard) changes the fingerprint and the
     # count follows the new data instead of silently flipping q136's
     # broadcast-vs-shuffle pick off a stale entry.
     spark.range(77).repartition(3).write.mode("overwrite").parquet(d)
-    assert parquet_row_count(d) == 77
+    assert parquet_row_count(spark, d) == 77
