@@ -15,50 +15,113 @@ parseable form. Tail-parsers must select on the "metric" field, NOT on
 line position — the LAST line is the headline record.
 
 Timing is per-query wall time of a full execution (noop-write action that
-materializes every row without driver collection). The full-scale m33
-fixture is generated once into .bench_data/ (gitignored) and cached.
+materializes every row without driver collection), always through
+``_min_wall``: untimed warm passes, then the minimum of N timed draws.
+The full-scale m33 fixture is generated once into .bench_data/
+(gitignored) and cached.
+
+``python bench.py --legs <group>`` measures one leg group of LEG_GROUPS
+in this process and prints its walls as one JSON dict — the bench spawns
+itself this way to give a group a fresh JVM. ``--legs registry:a,b``
+times any registry queries under the registry group's protocol.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
+import subprocess
 import sys
 import time
 
+from pyspark.sql import functions as F
+
+from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
+from hdfs_hive_sql_playground_spark.m33 import m33_schem
+from hdfs_hive_sql_playground_spark.queries import all_queries
+from hdfs_hive_sql_playground_spark.sinks import ctas_text, read_text_table
+from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, read_jdbc
+from hdfs_hive_sql_playground_spark.tables import load
+
 REPO = os.path.dirname(os.path.abspath(__file__))
-# SPARK_GRAFT_M33_SCALE=10 benches a 28 M-row variant (scale-trend check);
-# default 1 is the reference's exact 2.8 M-row workload. Scaling multiplies
-# the FILE COUNT at constant ~13 MB/file (the reference's many-files layout
-# and the wholetext header-skip path's requirement) — per-task memory stays
-# flat while parallelism grows, so the trend measures the engine, not a
-# single oversized task.
-M33_SCALE = int(os.environ.get("SPARK_GRAFT_M33_SCALE", "1"))
-M33_FULL_DIR = os.path.join(REPO, ".bench_data", f"m33_full_x{M33_SCALE}v2")
-M33_FULL_ROWS_PER_FILE = 700_000  # x 4 files x M33_SCALE -> 2.8 M rows at x1
-M33_TOTAL_ROWS = 4 * M33_FULL_ROWS_PER_FILE * M33_SCALE
+# The reference's m33 workload: 4 files x 700k rows. Scaled fixtures
+# multiply the FILE COUNT at constant ~13 MB/file (the reference's
+# many-files layout and the wholetext header-skip path's requirement), so
+# per-task memory stays flat while parallelism grows.
+M33_FULL_ROWS_PER_FILE = 700_000
+M33_TOTAL_ROWS = 4 * M33_FULL_ROWS_PER_FILE
+M33_TEXT_SCHEMA = "age_mil bigint, wavelength double, flam double, is_peculiar int"
 
 
-def _ensure_m33_full() -> None:
-    marker = os.path.join(M33_FULL_DIR, ".complete")
-    if os.path.exists(marker):
-        return
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from gen_m33_fixture import gen_tree
+def _ensure_m33_at(scale: int) -> str:
+    trend_dir = os.path.join(REPO, ".bench_data", f"m33_full_x{scale}v2")
+    marker = os.path.join(trend_dir, ".complete")
+    if not os.path.exists(marker):
+        sys.path.insert(0, os.path.join(REPO, "scripts"))
+        from gen_m33_fixture import gen_tree
 
-    gen_tree(M33_FULL_DIR, M33_FULL_ROWS_PER_FILE, n_files=M33_SCALE)
-    with open(marker, "w") as f:
-        f.write("ok\n")
+        gen_tree(trend_dir, M33_FULL_ROWS_PER_FILE, n_files=scale)
+        with open(marker, "w") as f:
+            f.write("ok\n")
+    return trend_dir
 
 
-# --- host-calibration leg -------------------------------------------------
+def _warm_dir(sf_dir: str) -> str:
+    """The codegen warm-up data: $SPARK_GRAFT_WARM_SF_DIR, else the sf0.001
+    set beside the bench data."""
+    return os.environ.get("SPARK_GRAFT_WARM_SF_DIR") or os.path.join(
+        os.path.dirname(sf_dir.rstrip("/")), "sf0.001"
+    )
+
+
+def _quiesce(spark) -> None:
+    """Ask the JVM for a full GC so the next timed section starts from a
+    drained heap instead of paying for the previous section's garbage —
+    measured swings of 2-4x on individual timings otherwise."""
+    try:
+        spark._jvm.System.gc()
+        time.sleep(0.3)
+    except Exception:
+        pass
+
+
+def _min_wall(spark, run, draws: int, warm: int = 0, quiesce: bool = True,
+              after=None) -> float:
+    """The bench's one timing loop: ``warm`` untimed passes of ``run``,
+    then ``draws`` timed passes, each preceded by a full GC unless
+    ``quiesce`` is False. Returns the minimum wall rounded to 0.1 ms — the
+    timeit estimator, since noise on a shared box is additive (same-plan
+    draws have been observed 5-7x apart). After every pass, untimed,
+    ``after`` runs (if given) and tracked caches are released, so no pass
+    reads another's cached blocks; with nothing tracked that is a no-op."""
+    best = float("inf")
+    for i in range(warm + draws):
+        timed = i >= warm
+        if timed and quiesce:
+            _quiesce(spark)
+        t0 = time.perf_counter()
+        run()
+        wall = time.perf_counter() - t0
+        if after is not None:
+            after()
+        release_tracked_caches()
+        if timed:
+            best = min(best, wall)
+    return round(best, 4)
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+# --- host-calibration legs ------------------------------------------------
 # One fixed synthetic workload with a pinned plan (parquet scan -> partial
 # hash agg -> one exchange -> final agg -> noop write), timed FIRST and LAST
 # in the bench run. Its wall measures the HOST (CPU contention, GC phase,
 # page cache), not any query plan: uniform drift in trend walls that tracks
 # calibration_x1 is machine state, drift that doesn't is a plan regression.
-# Motivated by the uniform +15-45% r8->r9 trend drift the judge had to
-# re-measure by hand to adjudicate (VERDICT r9 #2).
 CALIBRATION_ROWS = 2_000_000
 CALIBRATION_DIR = os.path.join(REPO, ".bench_data", "calibration_v1")
 # Quiet-box reference wall for the calibration workload (min-of-3, measured
@@ -71,8 +134,6 @@ def _ensure_calibration_fixture(spark) -> None:
     marker = os.path.join(CALIBRATION_DIR, ".complete")
     if os.path.exists(marker):
         return
-    from pyspark.sql import functions as F
-
     (
         spark.range(CALIBRATION_ROWS)
         .select(
@@ -91,10 +152,9 @@ def _ensure_calibration_fixture(spark) -> None:
 def _calibration_wall(spark) -> float:
     """min-of-3 wall of the pinned calibration workload (1 untimed warm
     pass first so the draw measures the host, not codegen compilation)."""
-    from pyspark.sql import functions as F
 
     def run() -> None:
-        (
+        _noop(
             spark.read.parquet(os.path.join(CALIBRATION_DIR, "cal.parquet"))
             .groupBy("k")
             .agg(
@@ -102,29 +162,17 @@ def _calibration_wall(spark) -> float:
                 F.count(F.lit(1)).alias("n"),
                 F.avg(F.length("s")).alias("avg_len"),
             )
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
         )
 
-    run()  # warm (codegen)
-    wall = float("inf")
-    for _ in range(3):
-        _quiesce(spark)
-        t0 = time.perf_counter()
-        run()
-        wall = min(wall, round(time.perf_counter() - t0, 4))
-    return wall
+    return _min_wall(spark, run, 3, warm=1)
 
 
-# I/O-shaped calibration draw (round-10 verdict #4): the CPU-shaped
-# calibration workload above cannot register host I/O state (dirty-page
-# writeback, page-cache eviction) — the recurring CTAS-x10 note (README
-# 'Measured scaling': 26.9 s with calibration saying 'quiet 0.984', 14.6 s
-# minutes later) is exactly that blind spot. This leg writes a fixed
-# ~100 MB of generated text and reads it fully back, first and last in the
-# run, so I/O-sensitive trend moves can be adjudicated from the artifact:
-# calibration_io moved with them -> host I/O state; flat -> plan.
+# I/O-shaped calibration: the CPU-shaped workload above cannot register
+# host I/O state (dirty-page writeback, page-cache eviction), the blind
+# spot behind the x10 CTAS leg's 26.9 s draw in a run calibrated 'quiet'.
+# This leg writes a fixed ~100 MB of generated text and reads it fully
+# back, first and last in the run: an I/O-sensitive trend move that
+# tracks calibration_io is host state; one that doesn't is the plan.
 CALIBRATION_IO_ROWS = 1_300_000  # x ~74 B/row -> ~96 MB of text per draw
 CALIBRATION_IO_DIR = os.path.join(REPO, ".bench_data", "cal_io_tmp")
 # Quiet-box reference (min-of-3 calls of the min-of-2 leg: 0.62/0.63/0.51,
@@ -134,13 +182,10 @@ CALIBRATION_IO_REF_SEC = 0.51
 
 
 def _calibration_io_wall(spark) -> float:
-    """min-of-2 wall of the fixed ~100 MB text write + full read-back.
-    The data is generated (spark.range + md5), so every draw writes the
-    same bytes; the read-back count forces the full scan. TWO untimed
-    warm passes first: one pass was measured insufficient (first min-of-2
-    still 1.89 s vs 0.65 s steady — JIT tiering on the text writer path
-    outlasts a single execution)."""
-    from pyspark.sql import functions as F
+    """min-of-2 wall of the fixed ~100 MB text write + full read-back,
+    after TWO untimed warm passes (one was measured insufficient: JIT
+    tiering on the text writer path outlasts a single execution). The data
+    is generated, so every draw writes the same bytes."""
 
     def run() -> None:
         (
@@ -160,34 +205,20 @@ def _calibration_io_wall(spark) -> float:
         n = spark.read.text(CALIBRATION_IO_DIR).count()
         assert n == CALIBRATION_IO_ROWS, n
 
-    # try/finally owns the temp dir per-call (round-11 ADVICE): an
-    # exception mid-draw must not strand ~96 MB in .bench_data/cal_io_tmp
-    # across aborted runs. Each call regenerates the data anyway, so
-    # removing it here costs the next call only its (untimed) warm pass.
+    # The temp dir is owned per call: an exception mid-draw must not
+    # strand ~96 MB in .bench_data across aborted runs.
     try:
-        run()  # warm (see docstring: two passes)
-        run()
-        wall = float("inf")
-        for _ in range(2):
-            _quiesce(spark)
-            t0 = time.perf_counter()
-            run()
-            wall = min(wall, round(time.perf_counter() - t0, 4))
+        wall = _min_wall(spark, run, 2, warm=2)
     finally:
-        import shutil
-
         shutil.rmtree(CALIBRATION_IO_DIR, ignore_errors=True)
-    # Flush the ~400 MB of dirty pages this leg just produced before any
-    # later timed section starts — otherwise the FIRST io draw's
-    # writeback can overlap the child-JVM trend legs it is supposed to
-    # adjudicate (the x10 CTAS leg is documented writeback-sensitive).
-    # sync() is untimed here, so it costs the measurement nothing.
-    try:
-        os.sync()
-        time.sleep(0.5)
-    except Exception:  # noqa: BLE001 — settling is best-effort
-        pass
+    # Flush the ~400 MB of dirty pages this leg produced (untimed), so
+    # their writeback cannot overlap the next timed section.
+    os.sync()
+    time.sleep(0.5)
     return wall
+
+
+# --- m33 headlines ----------------------------------------------------------
 
 
 def _drop_derby_memory(spark, name: str) -> None:
@@ -205,487 +236,170 @@ def _drop_derby_memory(spark, name: str) -> None:
 
 
 def _tune_derby_sink(spark) -> None:
-    """Table-level locking for the embedded Derby export target
-    (guide §1.2 step 2: per-task work — here, per-ROW work in the sink).
-
-    Round-13 attribution sweep (fresh JVM per config, 2.8 M-row export,
-    16 writers x 10k batches): baseline 33.0 s; rowLocking=false
-    **15.1 s (2.19x)**; durability=test 31.7 s; pageCacheSize=40000
-    41.8 s (WORSE — a bigger page cache just moves heap pressure);
-    32 KB pages 33.1 s. The bulk-append bottleneck was Derby's lock
-    manager tracking one lock per inserted row — 2.8 M lock records —
-    not the insert or page-store path. With table-level locks the
-    np x bs re-sweep is flat (14.1-15.4 s for np 4..32), so the r4
-    optimum (16 x 10k) stays.
-
-    Bulk-load ingest with coarse locking is exactly what the reference's
-    Sqoop path does on SQL Server (TABLOCK bulk inserts); row-level
-    locking buys nothing for an exclusive bulk append into a fresh
-    table. System property, so it must be set BEFORE the Derby engine
-    boots (first connection) in each bench JVM; per-query correctness
-    paths (q74) keep engine defaults."""
+    """Table-level locking for the embedded Derby export target. Round-13
+    attribution sweep (fresh JVM per config, 2.8 M-row export): baseline
+    33.0 s; rowLocking=false 15.1 s (2.19x); durability=test 31.7 s;
+    pageCacheSize=40000 41.8 s; 32 KB pages 33.1 s. The bulk-append
+    bottleneck was Derby's lock manager tracking one lock per inserted
+    row. Coarse locking is what the reference's Sqoop path does on SQL
+    Server (TABLOCK bulk inserts). A system property, so it must be set
+    before the Derby engine boots (first connection) in each bench JVM;
+    per-query correctness paths (q74) keep engine defaults."""
     try:
         spark._jvm.System.setProperty("derby.storage.rowLocking", "false")
     except Exception:  # bench-only tuning — never fail the run over it
         pass
 
 
-def _quiesce(spark) -> None:
-    """Ask the JVM for a full GC so the next timed section starts from a
-    drained heap instead of paying for the previous section's garbage —
-    measured swings of 2-4x on individual timings otherwise."""
-    try:
-        spark._jvm.System.gc()
-        time.sleep(0.3)
-    except Exception:
-        pass
+def _ctas_wall(spark, src_dir: str, table: str, draws: int) -> float:
+    return _min_wall(
+        spark, lambda: ctas_text(m33_schem(spark, src_dir), table), draws
+    )
+
+
+def _export_wall(spark, df, db: str, rows: int) -> float:
+    """min-of-2 bulk JDBC export of ``df`` (16 writers x 100k batches,
+    verified by a row count on the target). Each draw writes into a FRESH
+    in-memory Derby database, dropped untimed after it: a reused one would
+    measure Derby's page-cache reuse, an undropped one loads the heap.
+
+    16 x 100k: with table-level locking (``_tune_derby_sink``) the next
+    overhead is per-executeBatch bookkeeping, so bigger batches win
+    (round-13 interleaved min-of-3: 100k 10.91 s, 50k 11.75 s, 10k
+    12.73 s); writer count is flat at 14.1-15.4 s for 4..32."""
+    url = f"jdbc:derby:memory:{db};create=true"
+
+    def run() -> None:
+        export_jdbc(df, url, "m33", mode="overwrite", num_partitions=16,
+                    batchsize=100_000)
+        n = read_jdbc(spark, url, "m33").count()
+        assert n == rows, n
+
+    return _min_wall(spark, run, 2, after=lambda: _drop_derby_memory(spark, db))
+
+
+def _fetch100(df) -> None:
+    assert len(df.limit(100).collect()) == 100
 
 
 def _bench_m33(spark, timings: dict[str, float]) -> None:
-    from hdfs_hive_sql_playground_spark.m33 import m33_schem
-    from hdfs_hive_sql_playground_spark.sinks import ctas_text, read_text_table
-    from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, read_jdbc
+    """The four BASELINE.md-comparable headlines, all steady-state: the
+    reference's numbers come from a warmed, long-running Hive service, and
+    a single draw on this box has been observed 2x the steady state."""
+    src = _ensure_m33_at(1)
+    # CTAS (baseline 50.1 s), first, before the heap carries anything
+    # else. One untimed count of the view JIT-compiles the wholetext
+    # decode path (cold-JIT inflates a one-shot CTAS ~50%), then min-of-2.
+    m33_schem(spark, src).count()
+    timings["m33_ctas_2800k"] = _ctas_wall(spark, src, "m33_bench", 2)
 
-    _ensure_m33_full()
-
-    # CTAS 2.8 M rows text -> comma-delimited text (baseline 50.099 s).
-    # First of the m33 headlines, measured before the heap carries anything
-    # else. One untimed full pass of the view (count: scan + split +
-    # project, no write) JIT-compiles the wholetext decode path at depth
-    # first — cold-JIT inflates the one-shot CTAS by ~50% (measured 6.1 s
-    # cold vs ~4 s steady), and the reference number is from a long-running
-    # warmed Hive service.
-    m33_schem(spark, M33_FULL_DIR).count()
-    # min-of-2, like the limit100 legs' min-of-5 and every trend leg: the
-    # steady-state wall is the comparable number (the reference's 50.1 s
-    # came from a warmed long-running Hive service), and a single draw on
-    # this box has been observed 2x the steady state with no plan change.
-    # This leg is also the x10 trend's ratio base — a one-draw spike there
-    # would deflate the slope the same way the q80 layout artifact did.
-    wall = float("inf")
-    for _ in range(2):
-        _quiesce(spark)
-        t0 = time.perf_counter()
-        ctas_text(m33_schem(spark, M33_FULL_DIR), "m33_bench")
-        wall = min(wall, round(time.perf_counter() - t0, 4))
-    timings["m33_ctas_2800k"] = wall
-
-    # Interactive fetch over the raw text view (baseline 1.387 s).
-    # Steady-state measurement: the CTAS above has fully JIT-compiled the
-    # wholetext decode path (a cold first run costs ~4x), and the MINIMUM
-    # of five timed runs is reported — the timeit-recommended estimator
-    # when noise is strictly additive (this box carries sporadic external
-    # load; observed spread 0.92-1.46 s for an unchanged plan). The
-    # reference's 1.387 s is likewise an interactive query against a
-    # long-running, warmed HiveServer2.
+    # Interactive fetches (baselines 1.387 s raw view, 0.339 s warehouse):
+    # one warm pass, then min-of-5 back to back with no GC between — the
+    # interactive regime, where the reference measured a warmed HS2.
     _quiesce(spark)
-    m33_schem(spark, M33_FULL_DIR).limit(100).collect()
-    runs = []
-    for _ in range(5):
-        t0 = time.perf_counter()
-        rows = m33_schem(spark, M33_FULL_DIR).limit(100).collect()
-        assert len(rows) == 100
-        runs.append(time.perf_counter() - t0)
-    timings["m33_limit100_raw_view"] = round(min(runs), 4)
-
-    back = read_text_table(
-        spark, "m33_bench", "age_mil bigint, wavelength double, flam double, is_peculiar int"
+    timings["m33_limit100_raw_view"] = _min_wall(
+        spark, lambda: _fetch100(m33_schem(spark, src)), 5, warm=1, quiesce=False
+    )
+    back = read_text_table(spark, "m33_bench", M33_TEXT_SCHEMA)
+    timings["m33_limit100_warehouse"] = _min_wall(
+        spark, lambda: _fetch100(back), 5, warm=1, quiesce=False
     )
 
-    if M33_SCALE != 1:
-        # Scale-trend mode: only the scan/transform/materialize path — the
-        # JDBC bench targets in-memory Derby, which can't hold 10x rows.
-        timings[f"m33_rows_x{M33_SCALE}"] = float(M33_TOTAL_ROWS)
-        return
-
-    # Warehouse-table fetch (baseline 0.339 s). Same steady-state protocol
-    # as the raw-view fetch above.
-    back.limit(100).collect()
-    runs = []
-    for _ in range(5):
-        t0 = time.perf_counter()
-        assert len(back.limit(100).collect()) == 100
-        runs.append(time.perf_counter() - t0)
-    timings["m33_limit100_warehouse"] = round(min(runs), 4)
-
-    # Bulk JDBC export of the materialized table (baseline 147.81 s for
-    # 2.8 M rows = 18.9 k rows/s; 4-way parallel batched INSERT).
-    # 16 writers x 10k batches measured fastest against embedded Derby in a
-    # round-4 sweep (np 8/16/24/32 x bs 10k/20k/50k: 16x10k = 30.8 s vs
-    # 8x10k = 38.4 s; the Sqoop default was 4 maps — we tune like any real
-    # deployment would). The in-memory Derby target shares the driver heap,
-    # so start it from a drained heap — the export is RDBMS-bound and must
-    # measure the sink.
-    # Round-7 attribution of the r5->r6 drift (31.3 s -> ~37-39 s): in a
-    # fresh quiet JVM the Spark-side scan of the table is 0.49 s (noop
-    # write, min-of-2) while the full export walls 36.6/39.0 s — ~99% of
-    # the leg is the Derby insert+page-store path, and the fresh-JVM
-    # steady state REPRODUCES the r6 number, so the movement is the
-    # embedded sink's wall in this environment, not a Spark writer
-    # regression. Still 0.25x the reference's Sqoop baseline. The writer
-    # config was re-swept under the 16g heap (np 8/16/32 x bs 10k/20k):
-    # 16x10k 35.8 s ~= 32x10k 35.6 s (noise), 8x10k 40.6 s, 16x20k
-    # 37.3 s — the r4 optimum stands.
-    # Round-8 watch: 35.9 s (full bench, quiet box) — flat vs r7's 35.2 s,
-    # no re-drift; the Derby attribution machinery stays parked.
-    #
-    # Round-13 measurement fix, declared in OPTIMIZATION_r13.md: the
-    # export headline moves to MIN-OF-2 (fresh in-memory Derby DB per
-    # draw, dropped between), joining the min-of-2/min-of-5 discipline
-    # every other m33 headline has used since round 4. Through r12 the
-    # single draw was stable because the row-locked Derby sink was the
-    # ~36-40 s bottleneck regardless of box state; with table-level
-    # locking the sink is 2.2x faster and session/heap state shows
-    # through a single draw (same-code r13 draws: 16.75 s early-session
-    # vs 27.7 s at a calibration_x1_last=1.09 session tail — while the
-    # x2 trend leg in its fresh child JVM read 26.1 s, i.e. the x1
-    # single draw was the outlier). Old methodology's numbers: r12
-    # driver 37.06 s; r13 single-draw draws 16.75 / 17.08 / 27.7 s.
-    # Batchsize re-swept UNDER table-level locking (round 13, interleaved
-    # min-of-3, fresh DB per draw): 16x100k 10.91 s vs 16x50k 11.75 s vs
-    # 16x10k 12.73 s — with the per-row lock gone, the next overhead is
-    # per-executeBatch round-trip bookkeeping, so bigger batches win
-    # (ordering consistent in every interleaved round). The r4 10k
-    # optimum was measured against the row-locked sink. Both export legs
-    # (this headline and the x2 trend) move to 16 x 100k together, so
-    # the watched ratio compares like against like.
-    wall = float("inf")
-    for i in range(2):
-        _quiesce(spark)
-        url = f"jdbc:derby:memory:m33bench{i};create=true"
-        t0 = time.perf_counter()
-        export_jdbc(back, url, "m33", mode="overwrite", num_partitions=16, batchsize=100_000)
-        n = read_jdbc(spark, url, "m33").count()
-        assert n == M33_TOTAL_ROWS, n
-        wall = min(wall, round(time.perf_counter() - t0, 4))
-        _drop_derby_memory(spark, f"m33bench{i}")
-    timings["m33_jdbc_export_2800k"] = wall
+    # Bulk JDBC export (baseline 147.8 s = 18.9 k rows/s, 4 Sqoop maps).
+    # ~99% of this leg is the embedded Derby insert+page-store path
+    # (round-7 attribution: Spark-side scan 0.49 s of a 36.6 s export), so
+    # it measures the sink; the in-memory target shares the driver heap,
+    # hence the fresh, dropped DB per draw.
+    timings["m33_jdbc_export_2800k"] = _export_wall(
+        spark, back, "m33bench", M33_TOTAL_ROWS
+    )
 
 
-# Scale-trend evidence in every default run: CTAS the same workload at 10x
-# the rows (28 M, 40 files) and the JDBC export at 2x (5.6 M). Entries are
-# prefixed 'trend_' and EXCLUDED from the wall-clock total — they are slope
-# evidence (does the plan scale ~linearly?), not headline throughput.
-#
-# The export trend is capped at x2 deliberately: a measured sweep (x2 mem
-# 84.8 s / x2 disk 105.9 s / x4 mem 212-295 s) shows the embedded Derby
-# TARGET degrades superlinearly past ~5 M rows (page-store GC, not insert
-# path — on-disk is no faster), while the Spark sink side is linear (the
-# CTAS trend isolates it). x2's ~2.2x ratio carries the honest signal;
-# larger scales measure Derby's heap behavior, and the 100 TB deployment
-# path for bulk results is a parallel-ingest sink anyway
-# (docs/DEPLOYMENT_100TB.md §3).
-CTAS_TREND_SCALE = int(os.environ.get("SPARK_GRAFT_CTAS_TREND_SCALE", "10"))
-EXPORT_TREND_SCALE = int(os.environ.get("SPARK_GRAFT_EXPORT_TREND_SCALE", "2"))
+# --- scale-trend legs ---------------------------------------------------------
+# Slope evidence (does the plan scale ~linearly?), not headline throughput:
+# every key is prefixed 'trend_' and excluded from the wall-clock total.
+# CTAS at 10x the rows (28 M, 40 files); JDBC export at 2x (5.6 M). The
+# export trend is capped at x2: the embedded Derby TARGET degrades
+# superlinearly past ~5 M rows (page-store GC; x4 measured 212-295 s),
+# while the Spark sink side is linear (the CTAS trend isolates it).
+CTAS_TREND_SCALE = 10
+EXPORT_TREND_SCALE = 2
 
-# Quiet-band for the CTAS x10/x1 ratio watch (README 'Measured scaling').
-# The x10 leg reads+writes ~730 MB of text per draw, so host I/O state
-# (dirty-page writeback from earlier bench stages, page-cache eviction)
-# can inflate BOTH min-of-2 draws in a way the small calibration leg does
-# not register (measured round 10: 26.9 s in a full run whose calibration
-# factor said 'quiet 0.984' vs 14.6 s re-measured minutes later). Rather
-# than let one transient produce an out-of-band watch, the leg
-# self-adjudicates: when the ratio lands outside the band it takes up to
-# CTAS_MAX_REDRAWS extra draws (each one re-checks), and emits how many
-# it used — a real plan regression survives the redraws and still fires,
-# now with evidence the transient explanation was tested.
-# Round-13 re-center (2.7,3.8 -> 2.2,3.6): the wholetext scan no longer
-# pays a whole-file substring copy per file (sources/text.py, commit
-# e2d1e95), which cut the per-file fixed cost both legs pay per FILE —
-# the 4-file x1 leg more than the 40-file x10 leg per unit work, so the
-# slope itself legitimately moved. Re-measured clean-box draws with the
-# new scan: ratios 2.43 / 2.86 (x1 base 2.95-3.23 s), vs the r11/r12
-# 2.79-3.04 at x1 3.21-3.33 s. Upper margin keeps the documented
-# dirty-box drift (one writeback-loaded r13 draw read 4.12 before its
-# redraws) adjudicable by the same redraw + calibration machinery.
+# Quiet band for the CTAS x10/x1 ratio watch. The x10 leg reads+writes
+# ~730 MB of text per draw, so host I/O state can inflate both draws in a
+# way the calibration leg does not register. Out-of-band, the leg takes up
+# to CTAS_MAX_REDRAWS extra draws (each re-checks) and reports how many it
+# used: a real plan regression survives the redraws and still fires.
+# Round 13 re-centered the band (2.7-3.8 -> 2.2-3.6) after the wholetext
+# scan stopped copying each file, which cut the 4-file x1 leg's per-file
+# cost more than the 40-file x10 leg's.
 CTAS_RATIO_BAND = (2.2, 3.6)
 CTAS_MAX_REDRAWS = 3
 
 
-def _ensure_m33_at(scale: int) -> str:
-    trend_dir = os.path.join(REPO, ".bench_data", f"m33_full_x{scale}v2")
-    marker = os.path.join(trend_dir, ".complete")
-    if not os.path.exists(marker):
-        sys.path.insert(0, os.path.join(REPO, "scripts"))
-        from gen_m33_fixture import gen_tree
-
-        gen_tree(trend_dir, M33_FULL_ROWS_PER_FILE, n_files=scale)
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return trend_dir
-
-
-def _bench_m33_trend(spark, timings: dict[str, float]) -> None:
-    from hdfs_hive_sql_playground_spark.m33 import m33_schem
-    from hdfs_hive_sql_playground_spark.sinks import ctas_text, read_text_table
-    from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, read_jdbc
-
-    # x1 ratio base measured in THIS JVM with the identical protocol
-    # (untimed full warm pass, then min-of-2), so the CTAS slope compares
-    # warm-to-warm inside ONE environment — when this function runs in the
-    # fresh trend subprocess (the default path, see
-    # _bench_m33_trend_subprocess), the parent session's headline x1 would
-    # be a cross-JVM base and the ratio would mix engine slope with
-    # session state.
+def _bench_m33_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
+    """CTAS x10 and export x2 slopes. Runs in a fresh child JVM: round 6's
+    x10 CTAS tripled (9.3 -> 28.0 s, same plan) when it ran last in a
+    session whose heap history kept 6-10 GB in old gen. The CTAS x1 ratio
+    base is re-measured here with the identical protocol, so the slope
+    compares warm to warm inside one JVM. The export x2 ratio divides by
+    the parent's x1 headline (``_export_ratio``): the leg is target-bound,
+    so the JVM boundary is not the resource being measured."""
     base_dir = _ensure_m33_at(1)
     m33_schem(spark, base_dir).count()
-    base = float("inf")
-    for _ in range(2):
-        _quiesce(spark)
-        t0 = time.perf_counter()
-        ctas_text(m33_schem(spark, base_dir), "m33_bench_trend_base")
-        base = min(base, round(time.perf_counter() - t0, 4))
+    base = _ctas_wall(spark, base_dir, "m33_bench_trend_base", 2)
     timings["trend_m33_ctas_x1"] = base
 
+    # The warm count parks the x10 wholetext strings (~9.5 GB) in old gen;
+    # min-of-2 keeps the first draw's mixed collections out of the wall
+    # (measured 17.8 s first draw vs 7.1-7.4 s later in a fresh JVM).
     ctas_dir = _ensure_m33_at(CTAS_TREND_SCALE)
     m33_schem(spark, ctas_dir).count()
-    # min-of-2 (same discipline as the doc/skew trend legs): a single-shot
-    # measure pays the warm count pass's old-gen debt — the x10 wholetext
-    # count parks ~9.5 GB of file-string garbage in old gen and the first
-    # timed draw absorbs the mixed collections (measured 17.8 s first draw
-    # vs 7.1-7.4 s for every later draw in a fresh JVM;
-    # scripts/diag_ctas_x10.py).
-    def _ctas_x_draw() -> float:
-        _quiesce(spark)
-        t0 = time.perf_counter()
-        ctas_text(m33_schem(spark, ctas_dir), "m33_bench_trend")
-        return round(time.perf_counter() - t0, 4)
-
-    def _ctas_base_draw() -> float:
-        _quiesce(spark)
-        t0 = time.perf_counter()
-        ctas_text(m33_schem(spark, base_dir), "m33_bench_trend_base")
-        return round(time.perf_counter() - t0, 4)
-
-    wall = min(_ctas_x_draw() for _ in range(2))
-    # Self-adjudicating watch: out-of-band ratios get extra draws before
-    # they ship (CTAS_RATIO_BAND comment for the measured motivation).
-    # Min-of-N can only shrink a wall, so a too-HIGH ratio redraws the
-    # x10 numerator and a too-LOW one redraws the x1 denominator.
+    wall = _ctas_wall(spark, ctas_dir, "m33_bench_trend", 2)
+    # Min-of-N only shrinks a wall, so a too-HIGH ratio redraws the x10
+    # numerator and a too-LOW one redraws the x1 denominator.
     redraws = 0
     lo, hi = CTAS_RATIO_BAND
-    while base and not (lo <= wall / base <= hi) and redraws < CTAS_MAX_REDRAWS:
+    while not (lo <= wall / base <= hi) and redraws < CTAS_MAX_REDRAWS:
         if wall / base > hi:
-            wall = min(wall, _ctas_x_draw())
+            wall = min(wall, _ctas_wall(spark, ctas_dir, "m33_bench_trend", 1))
         else:
-            base = min(base, _ctas_base_draw())
+            base = min(base, _ctas_wall(spark, base_dir, "m33_bench_trend_base", 1))
         redraws += 1
     timings["trend_m33_ctas_x1"] = base
     timings[f"trend_m33_ctas_x{CTAS_TREND_SCALE}"] = wall
     timings[f"trend_ctas_x{CTAS_TREND_SCALE}_redraws"] = redraws
-    if base:
-        timings[f"trend_ctas_x{CTAS_TREND_SCALE}_over_x1_ratio"] = round(
-            wall / base, 3
-        )
+    timings[f"trend_ctas_x{CTAS_TREND_SCALE}_over_x1_ratio"] = round(wall / base, 3)
 
-    # Export slope: CTAS the x2 tree into a second warehouse table, then
-    # run the identical 16-writer export against a FRESH in-memory Derby
-    # database (a reused one would measure Derby page-cache reuse, not the
-    # sink). The export is target-bound; see EXPORT_TREND_SCALE above for
-    # why x2 is the largest honest scale against embedded Derby.
     export_dir = _ensure_m33_at(EXPORT_TREND_SCALE)
     ctas_text(m33_schem(spark, export_dir), "m33_bench_export_trend")
-    back = read_text_table(
-        spark,
-        "m33_bench_export_trend",
-        "age_mil bigint, wavelength double, flam double, is_peculiar int",
+    back = read_text_table(spark, "m33_bench_export_trend", M33_TEXT_SCHEMA)
+    # Scan-only control: the Spark-side share of the export wall (~1-3%).
+    # Control moved -> scan/plan regression; control flat -> the Derby
+    # target, whose page-store GC is the known wobble source.
+    timings[f"trend_m33_export_x{EXPORT_TREND_SCALE}_scan_control"] = _min_wall(
+        spark, lambda: _noop(back), 2, warm=1
     )
-    # Scan-only CONTROL wall for the export leg: the Spark-side read of
-    # the x2 source table, noop-written in THIS fresh JVM (warm pass +
-    # min-of-2) — the non-Derby share of the export wall, measured every
-    # run so a 2.1<->2.35 export-ratio wobble is attributable from the
-    # artifact alone: control moved -> scan/plan side regression; control
-    # flat -> the embedded Derby target (its page-store GC is the known
-    # wobble source). Rides in the watch record next to the ratio.
-    # Expected proportion: ~1-3% of the export wall (round-7 attribution:
-    # 0.49 s scan vs 36.6 s export at x1; README 'Measured scaling').
-    back.write.format("noop").mode("overwrite").save()  # warm (codegen)
-    ctrl = float("inf")
-    for _ in range(2):
-        _quiesce(spark)
-        t0 = time.perf_counter()
-        back.write.format("noop").mode("overwrite").save()
-        ctrl = min(ctrl, round(time.perf_counter() - t0, 4))
-    timings[f"trend_m33_export_x{EXPORT_TREND_SCALE}_scan_control"] = ctrl
-    # min-of-2 since round 13, symmetric with the x1 headline's new
-    # min-of-2 (an asymmetric min on one side of a watched ratio would
-    # bias it): fresh in-memory Derby DB per draw, dropped between.
-    wall = float("inf")
-    for i in range(2):
-        _quiesce(spark)
-        url = f"jdbc:derby:memory:m33trend{i};create=true"
-        t0 = time.perf_counter()
-        export_jdbc(back, url, "m33", mode="overwrite", num_partitions=16, batchsize=100_000)
-        n = read_jdbc(spark, url, "m33").count()
-        assert n == 4 * M33_FULL_ROWS_PER_FILE * EXPORT_TREND_SCALE, n
-        wall = min(wall, round(time.perf_counter() - t0, 4))
-        _drop_derby_memory(spark, f"m33trend{i}")
-    timings[f"trend_m33_export_x{EXPORT_TREND_SCALE}"] = wall
+    timings[f"trend_m33_export_x{EXPORT_TREND_SCALE}"] = _export_wall(
+        spark, back, "m33trend", M33_TOTAL_ROWS * EXPORT_TREND_SCALE
+    )
+
+
+def _export_ratio(timings: dict[str, float]) -> None:
+    """trend_export_x2_over_x1_ratio: the child's x2 export over the
+    parent's x1 headline, once both exist."""
+    trend = timings.get(f"trend_m33_export_x{EXPORT_TREND_SCALE}")
     base = timings.get("m33_jdbc_export_2800k")
-    if base:
+    if trend and base:
         timings[f"trend_export_x{EXPORT_TREND_SCALE}_over_x1_ratio"] = round(
-            wall / base, 3
+            trend / base, 3
         )
 
 
-def _bench_m33_trend_subprocess(timings: dict[str, float]) -> bool:
-    """Run the m33 trend legs in a FRESH subprocess JVM.
-
-    Returns True if the caller must run the in-session legs INSTEAD —
-    child failed, or SPARK_GRAFT_SKIP_SUBPROCESS_LEGS=1 capped the run
-    at one JVM (round 13: this child is the LARGEST of the three, 1800 s
-    timeout, so the one-JVM cap is meaningless unless it covers it).
-    Deferred to the caller for the same reason as the q124 child: the
-    in-session legs load the heap the m33 headlines are about to be
-    timed in, so main() runs them after the headline section
-    (_child_or_defer carries the shared contract).
-
-    Round 6's trend_m33_ctas_x10 tripled (9.3 s -> 28.0 s) with zero plan
-    change: the leg ran LAST in a session whose history (the full benched
-    registry + doc/skew trend fixtures) left the 16 GB heap loaded, and
-    the x10 wholetext warm pass adds ~9.5 GB of file-string garbage on
-    top, so BOTH min-of-2 draws paid mixed GC collections
-    (scripts/diag_ctas_x10.py: fresh JVM 7.1-7.4 s steady-state vs ~3-4x
-    that after replicated session history). Scale-slope legs must measure
-    the ENGINE, not the session's heap history — so they get their own
-    JVM. The export base (x1 headline, target-bound Derby) is passed down
-    for the x2 ratio; the CTAS base is re-measured inside the subprocess
-    (warm-to-warm, one environment)."""
-    return _child_or_defer("m33 trend", ["--m33-trend-only"], timings, 1800)
-
-
-def _child_or_defer(
-    what: str, argv: list[str], timings: dict[str, float], timeout: float
-) -> bool:
-    """Shared one-JVM-cap / dead-child contract for the trend children
-    (m33 and q124): SPARK_GRAFT_SKIP_SUBPROCESS_LEGS=1 suppresses the
-    spawn entirely, and a dead child is reported on stderr — in BOTH
-    cases the caller (main()) runs the in-session legs AFTER the m33
-    headline section, so the watch never silently disappears and the
-    headlines always time in a quiesced heap. Returns True iff the
-    caller must run the deferred in-session fallback."""
-    if os.environ.get("SPARK_GRAFT_SKIP_SUBPROCESS_LEGS") == "1":
-        return True
-    out = _run_bench_child(argv, timings, timeout=timeout)
-    if out is None:
-        print(
-            f"{what} child failed; deferring in-session measurement "
-            "until after the m33 headline section",
-            file=sys.stderr,
-        )
-        return True
-    timings.update(out)
-    return False
-
-
-def _run_bench_child(
-    argv: list[str], timings: dict[str, float], timeout: float
-) -> dict[str, float] | None:
-    """Run bench.py's child mode in a fresh subprocess JVM and return its
-    JSON dict, or None on failure (nonzero exit, no JSON line, or timeout —
-    a hung child must not block the whole bench forever, so every child run
-    carries a hard timeout and the caller falls back in-session).
-
-    Transient-footprint note: while a child runs, the parent's JVM (heap
-    sized by SPARK_GRAFT_DRIVER_MEM, default 16g here) stays alive idle
-    alongside the child's own 16g one — ~32 GB peak across the two
-    processes. Fine on this 128 GiB box; on smaller hosts set
-    SPARK_GRAFT_DRIVER_MEM lower or SPARK_GRAFT_SKIP_TREND=1, or the
-    paging this causes will distort the very legs the isolation is meant
-    to stabilize."""
-    import subprocess
-
-    # Quiesce the parent JVM before the child starts: the parent sits idle
-    # during the child run, but a loaded 16g parent heap still background-
-    # GCs and competes for memory bandwidth — measured on the x10 CTAS
-    # child leg: 14.5 s when spawned right after the doc/skew trend
-    # sections vs 6.6 s for the same child on a quiet box.
-    try:
-        from hdfs_hive_sql_playground_spark.session import get_spark
-
-        _quiesce(get_spark(app_name="bench"))
-        time.sleep(1.0)
-    except Exception:  # noqa: BLE001 — settling is best-effort
-        pass
-    env = dict(os.environ)
-    export_base = timings.get("m33_jdbc_export_2800k")
-    if export_base:
-        env["SPARK_GRAFT_EXPORT_TREND_BASE"] = str(export_base)
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), *argv],
-            capture_output=True,
-            text=True,
-            env=env,
-            timeout=timeout,
-        )
-    except subprocess.TimeoutExpired:
-        print(
-            f"bench child {argv} exceeded {timeout}s and was killed",
-            file=sys.stderr,
-        )
-        return None
-    line = next(
-        (ln for ln in reversed(proc.stdout.splitlines()) if ln.startswith("{")),
-        None,
-    )
-    if proc.returncode != 0 or line is None:
-        print(
-            f"bench child {argv} failed (rc={proc.returncode})\n"
-            f"{proc.stderr[-2000:]}",
-            file=sys.stderr,
-        )
-        return None
-    return json.loads(line)
-
-
-# Registry legs whose in-session wall repeatedly exceeds their attributed
-# fresh-JVM per-stage profile by >25% (the promotion rule, stated in
-# docs/DEPLOYMENT_100TB.md §9): measured in a fresh subprocess JVM, the
-# same protocol the m33 scale-slope legs got when the x10 CTAS tripled
-# from session old-gen occupancy. q99: driver wall crept 1.30 -> 1.51 ->
-# 1.60 s over rounds 5-7 while its per-stage fresh-JVM attribution summed
-# to 1.17 s — the gap was session heap history, not the plan, so the
-# headline now measures the engine in a clean JVM.
-SUBPROCESS_REGISTRY_LEGS = tuple(
-    s
-    for s in os.environ.get(
-        "SPARK_GRAFT_SUBPROCESS_LEGS", "q99_curation_pipeline"
-    ).split(",")
-    if s
-)
-
-
-def _bench_registry_legs_subprocess(
-    sf_dir: str, timings: dict[str, float]
-) -> set[str]:
-    """Measure SUBPROCESS_REGISTRY_LEGS in a fresh child JVM; returns the
-    set of leg names the child actually reported (the caller measures any
-    remainder in-session so a child failure never drops a headline)."""
-    if not SUBPROCESS_REGISTRY_LEGS:
-        return set()
-    out = _run_bench_child(
-        ["--registry-legs-only", ",".join(SUBPROCESS_REGISTRY_LEGS)],
-        timings,
-        timeout=900,
-    )
-    if out is None:
-        print(
-            "registry-legs subprocess failed; falling back to in-session "
-            "measurement",
-            file=sys.stderr,
-        )
-        return set()
-    timings.update(out)
-    return set(out)
-
-
-# Corpus scale trend: the testdata documents/embeddings tables grow only at
-# sf0.1 (5k rows), so LLM-operator timings alone are small-data. To show the
-# slope, replicate documents AND embeddings 8x (ids remapped unique,
-# exact-dup group sizes 8x, IVF cells 8x fuller while the query set stays
-# fixed) into a cached fixture and re-time the corpus ops. trend_* naming
-# keeps these out of the wall-clock total, same as the m33 trend.
+# Corpus scale trend: documents AND embeddings replicated 8x (ids remapped
+# unique, exact-dup groups 8x, IVF cells 8x fuller) into a 32-file fixture,
+# each query's x8 wall over its wall on an x1 fixture with the identical
+# layout (a one-file x1 base made small-x1 ratios layout artifacts).
 DOC_TREND_SCALE = 8
 # Chunk budget for the compact trend-norm JSONL records: small enough
 # that the driver's 2000-char stdout tail always holds every chunk PLUS
@@ -697,41 +411,20 @@ DOC_TREND_QUERIES = (
     "q91_quality_score",
     "q104_heavy_hitters",
     "q86_ivf_ann_topk",
-    # segment explode -> hash agg -> per-doc removal list: every stage is
-    # linear in segments, so the x8 slope should track the linear group
+    # segment explode -> hash agg -> per-doc removal list: linear stages
     "q136_segment_dedup_rewrite",
-    # centroid update shuffles only (cell, dim) partial sums and the
-    # re-assignment is a zero-shuffle projection: linear by construction
+    # (cell, dim) partial-sum shuffle + zero-shuffle re-assignment
     "q137_kmeans_refine",
-    # race keys are a per-row bounded array fold; the bucketed top-k rank
-    # touches <= shards x k narrow rows per (lang, bucket): linear
+    # per-row race keys + bucketed top-k over <= shards x k narrow rows
     "q138_weighted_sample",
-    # bucket lookup is a broadcast (<=4096 rows at any corpus size), the
-    # token stream never shuffles for it, and both the bucket agg and the
-    # per-doc rollup are linear in tokens: the x8 slope should be ~linear
+    # broadcast bucket lookup, no token shuffle, linear aggs
     "q141_target_affinity_select",
-    # composed front-half: one map-side signal projection + two keep-first
-    # aggs + two short-key joins, every stage linear in docs — the x8
-    # slope measures that composition stays linear, not just the parts
+    # composed front half: every stage linear in docs
     "q143_crawl_front_pipeline",
 )
-# q124 is measured separately in a FRESH child JVM (_bench_q124_trend via
-# --q124-trend-only): its r11 fixed-cells walls moved +57% with zero plan
-# change while the cells-scaled twin improved — the least artifact-
-# attributable watch left, and the ~100 MB io probe admittedly misses the
-# mode. Same promotion rule as q99 and the m33 scale legs
-# (docs/DEPLOYMENT_100TB.md §9): a leg whose in-session wall drifts from
-# session heap history gets its own JVM so the artifact measures the
-# engine. The leg keeps N_CELLS fixed while the x8 fixture packs cells 8x
-# fuller (the sum-cell^2 law); its cells-scaled twin re-runs at 8x cells
-# (production regime, constant occupancy).
 
 
 def _ensure_doc_trend(spark, sf_dir: str, scale: int = DOC_TREND_SCALE) -> str:
-    from pyspark.sql import functions as F
-
-    from hdfs_hive_sql_playground_spark.tables import load
-
     tag = os.path.basename(sf_dir.rstrip("/"))
     trend_dir = os.path.join(REPO, ".bench_data", f"docs_x{scale}_{tag}_v3")
     marker = os.path.join(trend_dir, ".complete")
@@ -741,17 +434,14 @@ def _ensure_doc_trend(spark, sf_dir: str, scale: int = DOC_TREND_SCALE) -> str:
             n = src.count()
             big = (
                 src.select(
-                    F.explode(
-                        F.sequence(F.lit(0), F.lit(scale - 1))
-                    ).alias("_r"),
+                    F.explode(F.sequence(F.lit(0), F.lit(scale - 1))).alias("_r"),
                     "*",
                 )
                 .withColumn(id_col, F.col(id_col) + F.col("_r") * n)
                 .drop("_r")
             )
-            # 32 files, not 1: a single ~1 MB parquet file gives every
-            # trend query a ONE-TASK scan stage, understating x8
-            # parallelism (and it's nothing like a real corpus layout)
+            # 32 files: a single ~1 MB file gives every trend query a
+            # one-task scan stage, understating x8 parallelism
             big.repartition(32).write.mode("overwrite").parquet(
                 os.path.join(trend_dir, f"{table}.parquet")
             )
@@ -760,144 +450,66 @@ def _ensure_doc_trend(spark, sf_dir: str, scale: int = DOC_TREND_SCALE) -> str:
     return trend_dir
 
 
-def _bench_doc_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
-    from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
-    from hdfs_hive_sql_playground_spark.queries import all_queries
+def _record_trend(timings: dict[str, float], name: str, base: float,
+                  wall: float) -> None:
+    timings[f"trend_{name}_x1"] = base
+    timings[f"trend_{name}_x{DOC_TREND_SCALE}"] = wall
+    timings[f"trend_{name}_x{DOC_TREND_SCALE}_over_x1_ratio"] = round(wall / base, 3)
 
+
+def _bench_doc_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
     trend_dir = _ensure_doc_trend(spark, sf_dir)
-    # Ratio base: an x1 fixture with the IDENTICAL 32-file layout, not the
-    # headline sf0.1 leg — the headline reads the single-file testdata
-    # parquet, so a one-task scan (plus fixed session overhead dominating
-    # a sub-second measure) made small-x1 ratios layout artifacts (the
-    # recurring q80 footnote: x8 absolute 0.9 s but "ratio 3-5x" against
-    # an 0.2 s one-file x1). Same generator, scale=1, min-of-2.
     x1_dir = _ensure_doc_trend(spark, sf_dir, scale=1)
     specs = all_queries()
-
-    def _timed(name: str, data_dir: str, draws: int = 2) -> float:
-        # min-of-2 (see the skew-trend note): one sporadic box-load spike
-        # on a single-shot leg fakes the x8/x1 slope; trends are excluded
-        # from the wall total, so the retry is free.
-        wall = float("inf")
-        for _ in range(draws):
-            _quiesce(spark)
-            t0 = time.perf_counter()
-            specs[name].fn(spark, data_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            wall = min(wall, round(time.perf_counter() - t0, 4))
-            release_tracked_caches()
-        return wall
-
     for name in DOC_TREND_QUERIES:
-        # x1 bases get a third draw: they are sub-2 s walls dominated by
-        # fixed per-stage overhead, and every reported ratio divides by
-        # them — an r7-vs-r8 x1 swing (2.14 -> 1.40 s on q124, same plan)
-        # moved that leg's ratio 3.73 -> 5.30 while its x8 wall IMPROVED.
-        # One extra draw on the denominator costs ~1-2 s per query and
-        # halves the observed base spread.
-        base = _timed(name, x1_dir, draws=3)
-        wall = _timed(name, trend_dir)
-        timings[f"trend_{name}_x1"] = base
-        timings[f"trend_{name}_x{DOC_TREND_SCALE}"] = wall
-        if base:
-            timings[f"trend_{name}_x{DOC_TREND_SCALE}_over_x1_ratio"] = round(
-                wall / base, 3
-            )
+        fn = specs[name].fn
+        # x1 bases get a third draw: sub-2 s walls dominated by fixed
+        # per-stage overhead, and every ratio divides by them.
+        base = _min_wall(spark, lambda: _noop(fn(spark, x1_dir)), 3)
+        wall = _min_wall(spark, lambda: _noop(fn(spark, trend_dir)), 2)
+        _record_trend(timings, name, base, wall)
 
 
-def _bench_q124_trend_subprocess(timings: dict[str, float]) -> bool:
-    """Run the q124 legs in a fresh child JVM (--q124-trend-only).
+def _bench_q124_trend(spark, sf_dir: str, timings: dict[str, float],
+                      name: str) -> None:
+    """The three q124 legs, warm to warm in one fresh child JVM (promoted
+    round 12: the r11 fixed-cells walls moved +57% with zero plan change
+    while the cells-scaled twin improved — session heap history).
 
-    Returns True if the caller must run the in-session fallback INSTEAD —
-    child failed, or SPARK_GRAFT_SKIP_SUBPROCESS_LEGS=1 suppressed the
-    second JVM (round-12 ADVICE: a host set that var to avoid the
-    documented ~32 GB two-JVM peak, and the q124 child ignored it). The
-    fallback is DEFERRED to the caller rather than run here (round-12
-    ADVICE): running the legs in-session before _bench_m33 would load the
-    session heap that the BASELINE-comparable m33 headlines are about to
-    be timed in — the exact contamination the child-JVM promotion exists
-    to prevent — so main() runs it where _bench_doc_trend runs, after the
-    headline section. The watch never silently disappears either way."""
-    return _child_or_defer("q124 trend", ["--q124-trend-only"], timings, 900)
-
-
-def _bench_q124_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
-    """The three q124 legs — x1 base, fixed-cells x8, cells-scaled x8 —
-    warm-to-warm in ONE environment (designed to run inside the
-    --q124-trend-only fresh child JVM; also the in-session fallback if
-    the child fails, so the watch never silently disappears).
-
-    Promoted to the fresh-JVM protocol round 12: the r11 fixed-cells
-    walls moved +57% (6.22 -> 12.22 s normalized) with zero plan change
-    while the cells-scaled twin IMPROVED — classic session-heap-history
-    contamination (the same signature that promoted the x10 CTAS leg in
-    round 6 and q99 in round 8, docs/DEPLOYMENT_100TB.md §9). In a fresh
-    JVM the walls measure the engine; residual drift is host state,
-    adjudicable from calibration_io_factor in the same artifact.
-
-    Fixed-cells leg: N_CELLS constant, x8 corpus packs each cell 8x
-    fuller, within-cell pair work ~64x — documents the sum-cell^2 law.
-    Cells-scaled leg: N_CELLS x8 on the same corpus (constant occupancy,
-    the production regime — deployments retrain ~sqrt(N) centroids as
-    the corpus grows), pair work linear in rows; its ratio should sit
-    near the linear operators' (watch band ~1.8-2.5)."""
-    from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
-    from hdfs_hive_sql_playground_spark.queries import all_queries
+    Fixed-cells leg: N_CELLS constant, the x8 corpus packs each cell 8x
+    fuller, within-cell pair work ~64x (the sum-cell^2 law). Cells-scaled
+    leg: N_CELLS x8 on the same corpus (constant occupancy, the production
+    regime), pair work linear in rows — its ratio over the same x1 base
+    should sit near the linear operators'."""
     from hdfs_hive_sql_playground_spark.queries import similarity as sim_mod
 
     trend_dir = _ensure_doc_trend(spark, sf_dir)
     x1_dir = _ensure_doc_trend(spark, sf_dir, scale=1)
-    fn = all_queries()["q124_semdedup_prune"].fn
+    fn = all_queries()[name].fn
 
-    def _timed(data_dir: str, draws: int) -> float:
-        wall = float("inf")
-        for _ in range(draws):
-            _quiesce(spark)
-            t0 = time.perf_counter()
-            fn(spark, data_dir).write.format("noop").mode("overwrite").save()
-            wall = min(wall, round(time.perf_counter() - t0, 4))
-            release_tracked_caches()
-        return wall
+    def x8() -> None:
+        _noop(fn(spark, trend_dir))
 
-    # one untimed warm pass (codegen + Arrow worker pool): in the fresh
-    # child there is no prior session to have paid it
-    fn(spark, x1_dir).write.format("noop").mode("overwrite").save()
-    release_tracked_caches()
-    base = _timed(x1_dir, draws=3)  # ratio denominator: 3 draws (see doc trend)
-    wall = _timed(trend_dir, draws=2)
-    timings["trend_q124_semdedup_prune_x1"] = base
-    timings[f"trend_q124_semdedup_prune_x{DOC_TREND_SCALE}"] = wall
-    if base:
-        timings[f"trend_q124_semdedup_prune_x{DOC_TREND_SCALE}_over_x1_ratio"] = (
-            round(wall / base, 3)
-        )
-
+    # one untimed warm pass: a fresh child has no session to have paid
+    # codegen and the Arrow worker pool
+    base = _min_wall(spark, lambda: _noop(fn(spark, x1_dir)), 3, warm=1)
+    _record_trend(timings, name, base, _min_wall(spark, x8, 2))
     saved_cells = sim_mod.N_CELLS
     sim_mod.N_CELLS = saved_cells * DOC_TREND_SCALE
     try:
-        wall = _timed(trend_dir, draws=2)
+        wall = _min_wall(spark, x8, 2)
     finally:
         sim_mod.N_CELLS = saved_cells
-        release_tracked_caches()
     timings[f"trend_q124_cells_scaled_x{DOC_TREND_SCALE}"] = wall
-    # base: the x1-fixture measure at the DEFAULT N_CELLS — identical cell
-    # occupancy to this leg's x8 corpus at 8x cells, i.e. the production
-    # regime both legs model
-    if base:
-        timings[f"trend_q124_cells_scaled_x{DOC_TREND_SCALE}_over_x1_ratio"] = round(
-            wall / base, 3
-        )
+    timings[f"trend_q124_cells_scaled_x{DOC_TREND_SCALE}_over_x1_ratio"] = round(
+        wall / base, 3
+    )
 
 
 # Skew-stress trend: the bucketed two-pass prefix-sum rewrite of the
-# stratum-window family (q94/q112/q115) claims the plan is bounded however
-# skewed the lang/source distribution gets. Measure it: rewrite the x8
-# replicated corpus so ~70% of rows collapse into ONE lang and ONE source
-# (the 100 TB nightmare case the round-4 verdict called out), and report
-# skewed-vs-balanced wall ratios at identical row counts. Near-flat (~1x)
-# ratios are the empirical proof; a bare PARTITION BY lang window would
-# show the single-stratum sort here.
+# stratum-window family claims a bounded plan however skewed lang/source
+# get. The x8 corpus is rewritten so ~70% of rows collapse into ONE lang
+# and ONE source; skewed-over-balanced ratios near 1x are the proof.
 SKEW_TREND_QUERIES = (
     "q94_stratified_quota",
     "q112_sequence_packing",
@@ -906,10 +518,6 @@ SKEW_TREND_QUERIES = (
 
 
 def _ensure_doc_skew_trend(spark, sf_dir: str) -> str:
-    from pyspark.sql import functions as F
-
-    from hdfs_hive_sql_playground_spark.tables import load
-
     tag = os.path.basename(sf_dir.rstrip("/"))
     trend_dir = os.path.join(
         REPO, ".bench_data", f"docs_skew_x{DOC_TREND_SCALE}_{tag}_v2"
@@ -920,9 +528,7 @@ def _ensure_doc_skew_trend(spark, sf_dir: str) -> str:
         n = src.count()
         big = (
             src.select(
-                F.explode(F.sequence(F.lit(0), F.lit(DOC_TREND_SCALE - 1))).alias(
-                    "_r"
-                ),
+                F.explode(F.sequence(F.lit(0), F.lit(DOC_TREND_SCALE - 1))).alias("_r"),
                 "*",
             )
             .withColumn("doc_id", F.col("doc_id") + F.col("_r") * n)
@@ -941,136 +547,182 @@ def _ensure_doc_skew_trend(spark, sf_dir: str) -> str:
 
 
 def _bench_doc_skew_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
-    from hdfs_hive_sql_playground_spark.queries import all_queries
     from hdfs_hive_sql_playground_spark.queries import text as text_mod
 
     balanced_dir = _ensure_doc_trend(spark, sf_dir)
     skew_dir = _ensure_doc_skew_trend(spark, sf_dir)
     specs = all_queries()
-    # The production bucket width (1M rows) is sized for trillion-row
-    # corpora; at this fixture's 40k rows every stratum fits in ONE bucket
-    # and the composite key would degenerate to the bare stratum — the very
-    # plan the skew test exists to rule out. Shrink the width for BOTH legs
-    # (identical plans, fair ratio) so the hot stratum spans many buckets,
-    # exactly as it would at real scale.
+    # The production bucket width (1M rows) would put every stratum of
+    # this 40k-row fixture in ONE bucket, degenerating the composite key
+    # to the bare stratum — the very plan the test exists to rule out.
+    # Shrink it for BOTH legs (identical plans, fair ratio).
     saved_width = text_mod.CUMSUM_BUCKET_WIDTH
     text_mod.CUMSUM_BUCKET_WIDTH = 2048
     try:
-        # Warm codegen at the tiny SF so the balanced leg (which runs
-        # first) doesn't pay the Janino compile the skew leg then inherits
-        # for free — that asymmetry would bias the ratio downward.
-        warm_sf = os.environ.get(
-            "SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001"
-        )
-        if os.path.isdir(warm_sf):
+        # Warm codegen at the tiny SF so the balanced leg (first) does not
+        # pay a compile the skew leg then inherits for free.
+        warm_dir = _warm_dir(sf_dir)
+        if os.path.isdir(warm_dir):
             for name in SKEW_TREND_QUERIES:
-                specs[name].fn(spark, warm_sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                _noop(specs[name].fn(spark, warm_dir))
         for name in SKEW_TREND_QUERIES:
-            walls = {}
-            for label, d in (("balanced", balanced_dir), ("skew", skew_dir)):
-                # min-of-2: the skew/balanced ratio is the regression
-                # signal for the bucketed-window family, and a single
-                # sporadic box-load spike on ONE leg has been observed to
-                # fake a 5x ratio. Trend timings are excluded from the
-                # wall total, so the second pass costs nothing it reports.
-                best = float("inf")
-                for _ in range(2):
-                    _quiesce(spark)
-                    t0 = time.perf_counter()
-                    specs[name].fn(spark, d).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
-                walls[label] = round(best, 4)
-            timings[f"trend_{name}_x{DOC_TREND_SCALE}_skew"] = walls["skew"]
+            fn = specs[name].fn
+            balanced = _min_wall(spark, lambda: _noop(fn(spark, balanced_dir)), 2)
+            skew = _min_wall(spark, lambda: _noop(fn(spark, skew_dir)), 2)
+            timings[f"trend_{name}_x{DOC_TREND_SCALE}_skew"] = skew
             timings[f"trend_{name}_skew_over_balanced_ratio"] = round(
-                walls["skew"] / walls["balanced"], 3
+                skew / balanced, 3
             )
     finally:
         text_mod.CUMSUM_BUCKET_WIDTH = saved_width
 
 
+def _bench_registry_legs(spark, sf_dir: str, timings: dict[str, float],
+                         *names: str) -> None:
+    """Registry legs under the fresh-JVM protocol: one sf0.001 pass
+    (codegen), two untimed passes at the target SF, then min-of-3 quiesced
+    draws. The deeper warm-up is the point: a fresh JVM pays JIT tiering on
+    every generated-code path (q99 at sf0.1: draws decline 1.95 -> ~1.25 s
+    over ~5 executions with zero plan change)."""
+    specs = all_queries()
+    warm_dir = _warm_dir(sf_dir)
+    for name in names:
+        fn = specs[name].fn
+        if os.path.isdir(warm_dir):
+            _noop(fn(spark, warm_dir))
+            release_tracked_caches()
+        timings[name] = _min_wall(spark, lambda: _noop(fn(spark, sf_dir)), 3, warm=2)
+
+
+# --- child JVMs -----------------------------------------------------------------
+# Leg groups measured in a fresh child JVM: group -> (runner, child timeout
+# in seconds, the registry queries the runner is given). A leg is promoted
+# here when its in-session wall drifts from session heap history rather
+# than from its plan (docs/DEPLOYMENT_100TB.md §9): the x10 CTAS in round
+# 6, q99 in round 8 (its in-session wall crept 1.30 -> 1.60 s while its
+# fresh-JVM stage profile summed to 1.17 s), q124's trends in round 12.
+LEG_GROUPS = {
+    "registry": (_bench_registry_legs, 900, ("q99_curation_pipeline",)),
+    "m33_trend": (_bench_m33_trend, 1800, ()),
+    "q124_trend": (_bench_q124_trend, 900, ("q124_semdedup_prune",)),
+}
+
+
+def _measure_group(spark, sf_dir: str, legs: str, timings: dict[str, float]) -> None:
+    """Run leg group ``legs`` (``<group>`` or ``registry:<q1>,<q2>``) here."""
+    group, _, names = legs.partition(":")
+    runner, _, default = LEG_GROUPS[group]
+    runner(spark, sf_dir, timings, *(names.split(",") if names else default))
+
+
+def _run_bench_child(spark, legs: str, timeout: float) -> dict[str, float] | None:
+    """Measure leg group ``legs`` in a fresh child JVM and return the
+    dict on the child's last JSON line. None means the caller measures the
+    group in-session after the m33 headlines: nothing is spawned under
+    SPARK_GRAFT_SKIP_SUBPROCESS_LEGS=1 (one JVM at a time, for small
+    hosts), and a dead child (timeout, nonzero exit, no JSON line) is
+    reported on stderr.
+
+    The parent idles meanwhile, but its heap still background-GCs and
+    competes for memory bandwidth (the x10 CTAS child measured 14.5 s
+    after the doc/skew sections vs 6.6 s quiet), so it is drained first.
+    Two driver JVMs coexist while a child runs: size
+    SPARK_GRAFT_DRIVER_MEM for both."""
+    if os.environ.get("SPARK_GRAFT_SKIP_SUBPROCESS_LEGS") == "1":
+        return None
+    _quiesce(spark)
+    time.sleep(1.0)
+    argv = [sys.executable, os.path.abspath(__file__), "--legs", legs]
+    try:
+        proc = subprocess.run(argv, capture_output=True, text=True, timeout=timeout)
+    except subprocess.TimeoutExpired:
+        print(f"bench child --legs {legs} exceeded {timeout}s and was killed; "
+              "deferring it until after the m33 headlines", file=sys.stderr)
+        return None
+    line = next(
+        (ln for ln in reversed(proc.stdout.splitlines()) if ln.startswith("{")),
+        None,
+    )
+    if proc.returncode != 0 or line is None:
+        print(f"bench child --legs {legs} failed (rc={proc.returncode}); "
+              f"deferring it until after the m33 headlines\n{proc.stderr[-2000:]}",
+              file=sys.stderr)
+        return None
+    return json.loads(line)
+
+
+def _measure(spark, sf_dir: str, specs: dict, timings: dict[str, float],
+             run_m33: bool, run_trend: bool) -> None:
+    """Every timed section between the two calibration brackets, in order."""
+    # Child groups FIRST, while this parent idles with a near-empty heap
+    # (warm-up + fixtures only): a loaded parent measurably slows a child.
+    groups = ["registry"]
+    if run_trend and run_m33:
+        groups.append("m33_trend")
+    if run_trend:
+        groups.append("q124_trend")
+    deferred = []
+    for group in groups:
+        out = _run_bench_child(spark, group, LEG_GROUPS[group][1])
+        if out is None:
+            deferred.append(group)
+        else:
+            timings.update(out)
+
+    # The BASELINE.md-comparable headlines next, in a quiesced JVM.
+    if run_m33:
+        _bench_m33(spark, timings)
+
+    # Warm each benched query once at the tiny SF: a plan's first execution
+    # pays Janino/JIT compilation of its generated code (q99: 6.2 s cold vs
+    # 1.2-2.0 s warm at sf0.1), and generated code is identical across
+    # scale factors, so a sf0.001 pass fills the codegen cache for pennies.
+    warm_dir = _warm_dir(sf_dir)
+    if os.path.isdir(warm_dir):
+        for spec in specs.values():
+            _noop(spec.fn(spark, warm_dir))
+        release_tracked_caches()
+    _quiesce(spark)
+    in_child = set(LEG_GROUPS["registry"][2])
+    for name, spec in sorted(specs.items()):
+        if name not in in_child:
+            timings[name] = _min_wall(
+                spark, lambda: _noop(spec.fn(spark, sf_dir)), 2, quiesce=False
+            )
+
+    # In-session sections last: deferred child groups (keeping the
+    # headlines-first discipline on the one-JVM and failure paths), then
+    # the in-session trends, which may leave the heap loaded.
+    for group in deferred:
+        _measure_group(spark, sf_dir, group, timings)
+    if run_trend:
+        _bench_doc_trend(spark, sf_dir, timings)
+        _bench_doc_skew_trend(spark, sf_dir, timings)
+    _export_ratio(timings)
+
+
 def main() -> None:
+    parser = argparse.ArgumentParser(description="Run the benchmark; print JSONL.")
+    parser.add_argument(
+        "--legs", metavar="GROUP",
+        help=f"measure one leg group ({', '.join(LEG_GROUPS)}; registry:<q1>,<q2> "
+        "for chosen queries) and print its walls as one JSON dict",
+    )
+    args = parser.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from hdfs_hive_sql_playground_spark.queries import all_queries
+    # The bench session hosts the embedded in-memory Derby target on the
+    # driver heap alongside Spark; 16g keeps the export measuring the sink,
+    # not the collector (39-41 s quiet vs ~52 s loaded at 8g).
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     from hdfs_hive_sql_playground_spark.session import get_spark
 
-    # The bench session hosts the embedded in-memory Derby target on the
-    # driver heap alongside Spark itself; the default 8g leaves the JDBC
-    # export leg GC-bound once earlier sections have loaded the old gen
-    # (measured: 39-41 s in a quiet JVM vs ~52 s in a loaded one). 16g
-    # keeps the export measuring the sink, not the collector.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
-
-    # Child mode of _bench_m33_trend_subprocess: a fresh JVM that runs
-    # ONLY the m33 trend legs and prints them as one JSON dict.
-    if "--m33-trend-only" in sys.argv:
-        spark = get_spark(app_name="bench-m33-trend")
+    if args.legs:
+        spark = get_spark(app_name=f"bench-{args.legs.partition(':')[0]}")
         _tune_derby_sink(spark)  # before the engine's first connection
         t: dict[str, float] = {}
-        export_base = os.environ.get("SPARK_GRAFT_EXPORT_TREND_BASE")
-        if export_base:
-            t["m33_jdbc_export_2800k"] = float(export_base)
-        _bench_m33_trend(spark, t)
-        t.pop("m33_jdbc_export_2800k", None)  # parent's headline, not ours
-        print(json.dumps(t))
-        spark.stop()
-        return
-
-    # Child mode of _bench_q124_trend_subprocess: a fresh JVM for the
-    # three q124 legs (round-12 promotion, see _bench_q124_trend).
-    if "--q124-trend-only" in sys.argv:
-        spark = get_spark(app_name="bench-q124-trend")
-        t = {}
-        _bench_q124_trend(spark, sf_dir, t)
-        print(json.dumps(t))
-        spark.stop()
-        return
-
-    # Child mode of _bench_registry_legs_subprocess: a fresh JVM that warms
-    # (codegen) then times the named registry legs with the identical
-    # min-of-2 noop-write protocol the parent uses, and prints one JSON dict.
-    if "--registry-legs-only" in sys.argv:
-        names = sys.argv[sys.argv.index("--registry-legs-only") + 1].split(",")
-        spark = get_spark(app_name="bench-registry-legs")
-        from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
-
-        specs_all = all_queries()
-        warm_sf = os.environ.get(
-            "SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001"
-        )
-        t = {}
-        for name in names:
-            # Deeper warm-up than the in-session loop: these legs are here
-            # BECAUSE their wall is sensitive to environment, and a fresh
-            # JVM pays JIT tiering on every generated-code path — measured
-            # on q99 at sf0.1: draws decline 1.95 -> ~1.25 s over ~5
-            # executions with zero plan change. Two untimed full passes at
-            # the target SF put the timed draws on the compiled plateau.
-            if os.path.isdir(warm_sf):
-                specs_all[name].fn(spark, warm_sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                release_tracked_caches()
-            for _ in range(2):
-                specs_all[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                release_tracked_caches()
-            wall = float("inf")
-            for _ in range(3):
-                _quiesce(spark)
-                t0 = time.perf_counter()
-                specs_all[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                wall = min(wall, round(time.perf_counter() - t0, 4))
-                release_tracked_caches()
-            t[name] = wall
+        _measure_group(spark, sf_dir, args.legs, t)
         print(json.dumps(t))
         spark.stop()
         return
@@ -1086,130 +738,28 @@ def main() -> None:
     next(iter(specs.values())).fn(spark, sf_dir).count()
     spark.range(32).mapInPandas(lambda it: it, schema="id long").count()
 
-    # Generate every fixture BEFORE any timed section: fixture generation
-    # (local file writes + one Spark replication job) must not share the
-    # JVM-heap window with headline timings.  Round 3 learned this the hard
-    # way — running doc-trend fixture generation before the m33 section
-    # regressed m33_limit100_raw_view 0.83 s -> 2.06 s with no plan change.
+    # Every fixture BEFORE any timed section: round 3's fixture generation
+    # between timed sections regressed m33_limit100_raw_view 0.83 -> 2.06 s
+    # with no plan change. The children read them too.
     if run_m33:
-        _ensure_m33_full()
-        if run_trend and M33_SCALE == 1:
+        _ensure_m33_at(1)
+        if run_trend:
             _ensure_m33_at(CTAS_TREND_SCALE)
             _ensure_m33_at(EXPORT_TREND_SCALE)
     if run_trend:
         _ensure_doc_trend(spark, sf_dir)
-        # the x1-layout ratio base too: the q124 child runs FIRST and must
-        # not pay fixture generation inside its measurement JVM
         _ensure_doc_trend(spark, sf_dir, scale=1)
         _ensure_doc_skew_trend(spark, sf_dir)
     _ensure_calibration_fixture(spark)
 
-    timings: dict[str, float] = {}
-
-    # Host-calibration leg, FIRST timed section (its twin runs LAST): the
-    # pair brackets the whole run so trend-wall drift can be adjudicated
-    # from the artifact alone (machine state moves calibration_x1 with it;
-    # a plan regression doesn't).
-    cal_first = _calibration_wall(spark)
-    timings["calibration_x1_first"] = cal_first
-    timings["calibration_io_x1_first"] = _calibration_io_wall(spark)
-
-    # Both child-JVM sections run FIRST, while this parent sits idle with a
-    # near-empty heap (warm-up + fixture generation only): spawning the m33
-    # trend child after the doc/skew sections was measured 2x slower on its
-    # x10 CTAS leg (14.5 s vs 6.6 s quiet) even though the parent idles —
-    # a loaded parent heap background-GCs and competes for memory
-    # bandwidth. The export x2 ratio is computed post-hoc below, once the
-    # parent has measured its own export headline.
-    measured_in_child: set[str] = set()
-    if os.environ.get("SPARK_GRAFT_SKIP_SUBPROCESS_LEGS") != "1":
-        measured_in_child = _bench_registry_legs_subprocess(sf_dir, timings)
-    m33_trend_in_session = False
-    if run_trend and run_m33 and M33_SCALE == 1:
-        m33_trend_in_session = _bench_m33_trend_subprocess(timings)
-    q124_in_session = False
-    if run_trend:
-        q124_in_session = _bench_q124_trend_subprocess(timings)
-
-    # BASELINE.md-comparable m33 headlines first, in a quiesced JVM — these
-    # are the numbers judged directly against the reference.
-    if run_m33:
-        _bench_m33(spark, timings)
-
-    # Warm each benched query once at the tiny SF before timing: a plan's
-    # first execution pays Janino/JIT compilation of its generated code
-    # (measured on q99: 6.2 s cold vs 1.2-2.0 s warm at sf0.1 — compiler,
-    # not engine), and the generated code is identical across scale
-    # factors, so a sf0.001 pass fills the codegen cache for pennies.
-    # This also makes the x8 trend ratios honest: previously the x8 leg
-    # inherited the x1 leg's compile for free, understating the slope.
-    warm_sf = os.environ.get("SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001")
-    if os.path.isdir(warm_sf):
-        from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
-
-        for spec in specs.values():
-            spec.fn(spark, warm_sf).write.format("noop").mode("overwrite").save()
-        release_tracked_caches()
-
-    # Drain warm-up + m33 garbage so the first timed queries don't absorb
-    # the export's GC debt.
-    _quiesce(spark)
-    from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
-
-    # min-of-2 per query leg (the trend/skew legs' discipline): back-to-back
-    # same-plan executions on this box have been observed 5-7x apart with
-    # zero plan change (one-off load spikes, GC phase, code-cache sweeps) —
-    # e.g. q136 at 11.6 s in one full-bench run vs 2.3 s for its own x8 leg
-    # in the SAME session. The minimum is the steady-state wall; a single
-    # draw is a coin flip on outlier noise.
-    for name, spec in sorted(specs.items()):
-        if name in measured_in_child:
-            continue  # headline already measured in the fresh child JVM
-        wall = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            wall = min(wall, round(time.perf_counter() - t0, 4))
-            # untimed: drop any multi-consumer caches (q99/q103/q124) so
-            # later runs aren't squeezed by another query's resident blocks
-            release_tracked_caches()
-        timings[name] = wall
-
-    # In-session scale-trend sections last: they are slope evidence,
-    # excluded from the wall-clock total, and may leave the heap loaded
-    # (which is why the child-JVM sections already ran, first).
-    if run_trend:
-        # deferred child-JVM fallbacks (child suppressed by
-        # SPARK_GRAFT_SKIP_SUBPROCESS_LEGS=1, or failed): run with the
-        # other in-session trend sections, AFTER the m33 headlines,
-        # keeping the 'headlines first in a quiesced JVM' discipline
-        # intact on the one-JVM and failure paths too
-        if m33_trend_in_session and run_m33 and M33_SCALE == 1:
-            _bench_m33_trend(spark, timings)
-        if q124_in_session:
-            _bench_q124_trend(spark, sf_dir, timings)
-        _bench_doc_trend(spark, sf_dir, timings)
-        _bench_doc_skew_trend(spark, sf_dir, timings)
-    # Export x2 ratio, post-hoc: the trend child ran before the parent's
-    # export headline existed (by design — cleanest box first); the ratio
-    # is cross-JVM but the leg is target-bound (embedded Derby), so the
-    # JVM boundary is not the resource being measured.
-    exp_trend = timings.get(f"trend_m33_export_x{EXPORT_TREND_SCALE}")
-    exp_base = timings.get("m33_jdbc_export_2800k")
-    if exp_trend and exp_base and (
-        f"trend_export_x{EXPORT_TREND_SCALE}_over_x1_ratio" not in timings
-    ):
-        timings[f"trend_export_x{EXPORT_TREND_SCALE}_over_x1_ratio"] = round(
-            exp_trend / exp_base, 3
-        )
-
-    # Host-calibration leg, LAST timed section: calibration_x1 is the
-    # min of the first/last draws (the quietest the host got), and
-    # calibration_factor scales it against the pinned quiet-box reference.
+    # Host calibration brackets the whole run (first and last timed
+    # sections), so trend drift can be adjudicated from the artifact alone.
+    timings: dict[str, float] = {
+        "calibration_x1_first": _calibration_wall(spark),
+        "calibration_io_x1_first": _calibration_io_wall(spark),
+    }
+    _measure(spark, sf_dir, specs, timings, run_m33, run_trend)
     timings["calibration_x1_last"] = _calibration_wall(spark)
-    # cal_io_tmp cleanup lives INSIDE _calibration_io_wall (try/finally,
-    # per-call), so aborted runs can't strand it either.
     timings["calibration_io_x1_last"] = _calibration_io_wall(spark)
 
     for line in _emit_records(timings, sf):

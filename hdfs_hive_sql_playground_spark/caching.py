@@ -36,12 +36,19 @@ def track_persist(
 def release_tracked_caches() -> int:
     """Unpersist every tracked DataFrame (non-blocking); returns how many
     were released. Safe to call at any time: releasing a cache a plan
-    still references only degrades that plan to recompute."""
+    still references only degrades that plan to recompute. A DataFrame
+    whose SparkContext has been stopped holds no cache any more and is
+    dropped uncounted; any other failure to unpersist raises."""
     n = 0
     while _TRACKED:
-        try:
-            _TRACKED.pop().unpersist(blocking=False)
-            n += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
+        df = _TRACKED.pop()
+        if _context_stopped(df):
+            continue
+        df.unpersist(blocking=False)
+        n += 1
     return n
+
+
+def _context_stopped(df: DataFrame) -> bool:
+    sc = df.sparkSession.sparkContext
+    return sc._jsc is None or sc._jsc.sc().isStopped()

@@ -1409,18 +1409,31 @@ def q127_xpath_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</size><brand>"), F.col("p_brand"), F.lit("</brand></part>"),
     )
     # One parse per row: part/*/text() yields [key, size, brand] texts in
-    # document order (the synthesized document always carries all three
-    # leaves, each non-empty). xkey is exactly xpath_int's value here —
-    # XPath number() of an integer-literal text — and xbrand exactly
+    # document order. xkey is exactly xpath_int's value here — XPath
+    # number() of an integer-literal text — and xbrand exactly
     # xpath_string's; both equalities are oracle-hash-checked. The leaves
-    # array is a NAMED column so the three consumers share the single
-    # evaluation (same no-CSE discipline as the gram builders).
+    # array is a NAMED column so the consumers share the single evaluation
+    # (same no-CSE discipline as the gram builders). An empty leaf has no
+    # text node, so an empty p_brand would shift xbrand to NULL where
+    # xpath_string returns '': the positional read refuses any row without
+    # exactly three leaves instead.
     leaves = F.xpath(xml, F.lit("part/*/text()"))
+    n_leaves = F.size(F.col("__leaves"))
+    brand = F.when(n_leaves == 3, F.element_at(F.col("__leaves"), 3)).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("q127_xpath_funcs: expected 3 non-empty XML leaves, got "),
+                n_leaves.cast("string"),
+                F.lit(" for p_partkey "),
+                F.col("p_partkey").cast("string"),
+            )
+        )
+    )
     return p.select("p_partkey", leaves.alias("__leaves")).select(
         "p_partkey",
         F.element_at(F.col("__leaves"), 1).cast("int").alias("xkey"),
-        F.element_at(F.col("__leaves"), 3).alias("xbrand"),
-        F.size(F.col("__leaves")).alias("n_leaves"),
+        brand.alias("xbrand"),
+        n_leaves.alias("n_leaves"),
     )
 
 

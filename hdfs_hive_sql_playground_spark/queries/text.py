@@ -622,17 +622,16 @@ CURATION_QUOTA = 15
     "broadcast; the quota stage's two consumers share the upstream work "
     "through runtime exchange reuse (a persist was A/B-measured slower — "
     "see the in-function comment). Round-9 per-stage attribution at "
-    "sf0.1 (scripts/diag_q99_stages.py — cumulative noop-write walls, "
-    "min-of-5, quiet fresh JVM, final stage asserted row-identical to "
-    "this function): quality gate 0.13 s; +content-hash dedup window "
+    "sf0.1 (cumulative noop-write walls of each stage prefix, min-of-5, "
+    "quiet fresh JVM, final stage asserted row-identical to this "
+    "function): quality gate 0.13 s; +content-hash dedup window "
     "0.21 s; the independent LID branch (token explode + broadcast "
     "lexicon join + per-doc argmax) 0.67 s; +canon-best join 0.69 s; "
     "full pipeline with quota rank 0.87 s. The token-explode LID branch "
     "is the cost center (as it should be — it reads every token once). "
-    "The bench headline runs in a FRESH subprocess JVM "
-    "(bench.SUBPROCESS_REGISTRY_LEGS). Headline-vs-profile "
-    "reconciliation, MEASURED (diag_q99_stages.py --trajectory, same "
-    "plan, one fresh JVM, 12 sequential draws): the wall is a function "
+    "The bench headline runs in a FRESH child JVM (the registry group "
+    "of bench.LEG_GROUPS). Headline-vs-profile reconciliation, MEASURED "
+    "(same plan, one fresh JVM, 12 sequential draws): the wall is a function "
     "of JIT tiering depth alone — draws 3-5, the depth the bench "
     "child's min-of-3-after-2-full-warms samples, min 1.45 s; draws "
     "8-12 plateau 1.21 s; the stage profile's final row (depth ~21-25 "

@@ -430,3 +430,36 @@ def test_q127_single_parse_matches_scalar_xpath_calls(spark, sf_dir):
     assert new.schema == old.schema
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
+
+
+def test_q127_refuses_a_missing_xml_leaf(spark, tmp_path):
+    """An empty p_brand leaves its <brand> element without a text node, so
+    the node-set holds two leaves and a positional read would silently
+    shift xbrand to NULL (xpath_string gives ''). q127 must fail loudly
+    instead, naming the row; a non-empty brand still reads back exactly."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hdfs_hive_sql_playground_spark.queries import all_queries
+
+    fn = all_queries()["q127_xpath_funcs"].fn
+    for sub, brand in (("ok", "Brand#13"), ("empty", "")):
+        d = tmp_path / sub
+        d.mkdir()
+        pq.write_table(
+            pa.table(
+                {
+                    "p_partkey": pa.array([7], pa.int64()),
+                    "p_name": ["n"],
+                    "p_brand": [brand],
+                    "p_type": ["t"],
+                    "p_size": pa.array([3], pa.int32()),
+                    "p_retailprice": [1.5],
+                }
+            ),
+            str(d / "part.parquet"),
+        )
+    row = fn(spark, str(tmp_path / "ok")).first()
+    assert (row.xkey, row.xbrand, row.n_leaves) == (7, "Brand#13", 3)
+    with pytest.raises(Exception, match="expected 3 non-empty XML leaves, got 2 for p_partkey 7"):
+        fn(spark, str(tmp_path / "empty")).collect()

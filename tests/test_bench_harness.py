@@ -1,7 +1,9 @@
 """Unit tests for bench.py's measurement harness plumbing (no Spark, no
-timing): the child-JVM runner must fall back gracefully on every failure
-mode (timeout, nonzero exit, no JSON line) — a hung or broken child must
-never block the bench or silently drop a headline."""
+timing): the one timing loop keeps each leg's warm/draw/quiesce protocol,
+and the one child-JVM runner falls back gracefully on every failure mode
+(timeout, nonzero exit, no JSON line) — a hung or broken child must never
+block the bench or silently drop a headline, and its leg group is then
+measured in-session AFTER the m33 headlines, never before."""
 
 from __future__ import annotations
 
@@ -10,11 +12,16 @@ import subprocess
 import sys
 import types
 
+import pytest
+
 import bench
 
 
-def _fake_run(stdout="", returncode=0, raises=None):
+def _fake_run(stdout="", returncode=0, raises=None, seen=None):
     def run(argv, **kw):
+        if seen is not None:
+            seen["argv"] = argv
+            seen["timeout"] = kw.get("timeout")
         if raises is not None:
             raise raises
         return types.SimpleNamespace(
@@ -24,72 +31,126 @@ def _fake_run(stdout="", returncode=0, raises=None):
     return run
 
 
-def test_run_bench_child_parses_last_json_line(monkeypatch):
+@pytest.fixture
+def no_settle(monkeypatch):
+    """The runner settles the parent JVM for a second before spawning."""
+    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
+
+
+def test_run_bench_child_parses_last_json_line(monkeypatch, no_settle):
     payload = {"leg_a": 1.5, "leg_b": 2.5}
+    seen = {}
     monkeypatch.setattr(
         subprocess,
         "run",
-        _fake_run(stdout="noise\n[Stage 1]\n" + json.dumps(payload) + "\n"),
+        _fake_run(
+            stdout="noise\n[Stage 1]\n" + json.dumps(payload) + "\n", seen=seen
+        ),
     )
-    out = bench._run_bench_child(["--x"], {}, timeout=5)
+    out = bench._run_bench_child(None, "registry:q01_pricing_summary", timeout=7)
     assert out == payload
+    assert seen["argv"][0] == sys.executable
+    assert seen["argv"][-2:] == ["--legs", "registry:q01_pricing_summary"]
+    assert seen["timeout"] == 7
 
 
-def test_run_bench_child_none_on_timeout(monkeypatch, capsys):
+def test_run_bench_child_none_on_timeout(monkeypatch, capsys, no_settle):
     monkeypatch.setattr(
         subprocess,
         "run",
         _fake_run(raises=subprocess.TimeoutExpired(cmd="x", timeout=5)),
     )
-    assert bench._run_bench_child(["--x"], {}, timeout=5) is None
-    assert "exceeded" in capsys.readouterr().err
-
-
-def test_run_bench_child_none_on_bad_exit_or_no_json(monkeypatch, capsys):
-    monkeypatch.setattr(subprocess, "run", _fake_run(stdout="{}", returncode=3))
-    assert bench._run_bench_child(["--x"], {}, timeout=5) is None
-    monkeypatch.setattr(subprocess, "run", _fake_run(stdout="no json here"))
-    assert bench._run_bench_child(["--x"], {}, timeout=5) is None
+    assert bench._run_bench_child(None, "m33_trend", timeout=5) is None
     err = capsys.readouterr().err
-    assert "failed" in err
+    assert "exceeded" in err and "deferring" in err
 
 
-def test_run_bench_child_passes_export_base_env(monkeypatch):
-    seen = {}
+def test_run_bench_child_none_on_bad_exit_or_no_json(monkeypatch, capsys, no_settle):
+    monkeypatch.setattr(subprocess, "run", _fake_run(stdout="{}", returncode=3))
+    assert bench._run_bench_child(None, "q124_trend", timeout=5) is None
+    monkeypatch.setattr(subprocess, "run", _fake_run(stdout="no json here"))
+    assert bench._run_bench_child(None, "q124_trend", timeout=5) is None
+    err = capsys.readouterr().err
+    assert "failed" in err and "deferring" in err
 
-    def run(argv, **kw):
-        seen["env"] = kw.get("env", {})
-        seen["timeout"] = kw.get("timeout")
-        return types.SimpleNamespace(stdout="{}", stderr="", returncode=0)
 
-    monkeypatch.setattr(subprocess, "run", run)
-    bench._run_bench_child(["--x"], {"m33_jdbc_export_2800k": 35.9}, timeout=7)
-    assert seen["env"]["SPARK_GRAFT_EXPORT_TREND_BASE"] == "35.9"
-    assert seen["timeout"] == 7
+def _measure(monkeypatch, children, specs=None):
+    """Run bench._measure with every Spark section replaced by a recorder.
+    ``children`` maps a leg group to the dict its child JVM returns (a
+    missing group: the child died); ``children=None`` keeps the real
+    runner. Returns (event order, timings)."""
+    events: list[str] = []
+
+    def recorder(group):
+        def run(spark, sf_dir, timings, *names):
+            events.append(f"in-session {group}")
+
+        return run
+
+    for group, (_, timeout, names) in list(bench.LEG_GROUPS.items()):
+        monkeypatch.setitem(
+            bench.LEG_GROUPS, group, (recorder(group), timeout, names)
+        )
+
+    def child(spark, legs, timeout):
+        events.append(f"child {legs}")
+        out = children.get(legs)
+        return None if out is None else dict(out)
+
+    def headlines(spark, timings):
+        events.append("headlines")
+        timings["m33_jdbc_export_2800k"] = 10.0
+
+    if children is not None:
+        monkeypatch.setattr(bench, "_run_bench_child", child)
+    monkeypatch.setattr(bench, "_bench_m33", headlines)
+    monkeypatch.setattr(bench, "_noop", lambda df: None)
+    monkeypatch.setattr(
+        bench, "_bench_doc_trend", lambda s, d, t: events.append("doc trend")
+    )
+    monkeypatch.setattr(
+        bench, "_bench_doc_skew_trend", lambda s, d, t: events.append("skew trend")
+    )
+    timings: dict[str, float] = {}
+    bench._measure(None, "/sf", specs or {}, timings, run_m33=True, run_trend=True)
+    return events, timings
+
+
+def _never(spark, sf_dir):
+    # the sf0.001 codegen warm pass covers every bench query; the timed
+    # loop at the bench SF must skip the child group's legs
+    if sf_dir == "/sf":
+        raise AssertionError("a child-group leg must not run in the in-session loop")
 
 
 def test_registry_legs_subprocess_reports_measured_set(monkeypatch):
-    monkeypatch.setattr(
-        bench, "_run_bench_child", lambda argv, t, timeout: {"q99_curation_pipeline": 1.2}
+    specs = {
+        "q99_curation_pipeline": types.SimpleNamespace(fn=_never),
+        "q01_pricing_summary": types.SimpleNamespace(fn=lambda spark, sf: None),
+    }
+    events, timings = _measure(
+        monkeypatch,
+        {"registry": {"q99_curation_pipeline": 1.2}, "m33_trend": {}, "q124_trend": {}},
+        specs,
     )
-    timings = {}
-    got = bench._bench_registry_legs_subprocess("/sf", timings)
-    assert got == {"q99_curation_pipeline"}
-    assert timings == {"q99_curation_pipeline": 1.2}
+    assert timings["q99_curation_pipeline"] == 1.2
+    assert "q01_pricing_summary" in timings  # the in-session loop's leg
+    assert not any(e.startswith("in-session") for e in events)
 
 
-def test_registry_legs_subprocess_empty_set_on_child_failure(monkeypatch, capsys):
-    monkeypatch.setattr(bench, "_run_bench_child", lambda argv, t, timeout: None)
-    timings = {}
-    got = bench._bench_registry_legs_subprocess("/sf", timings)
-    # empty set -> the caller measures every leg in-session; no dropped headline
-    assert got == set()
-    assert timings == {}
-    assert "falling back" in capsys.readouterr().err
+def test_registry_legs_subprocess_empty_set_on_child_failure(monkeypatch):
+    # a dead registry child: its legs are measured in-session by the group
+    # runner after the headlines — never dropped, never in the 2-draw loop
+    specs = {"q99_curation_pipeline": types.SimpleNamespace(fn=_never)}
+    events, timings = _measure(
+        monkeypatch, {"m33_trend": {}, "q124_trend": {}}, specs
+    )
+    assert "q99_curation_pipeline" not in timings
+    assert events.index("headlines") < events.index("in-session registry")
 
 
 def test_subprocess_registry_legs_default():
-    assert "q99_curation_pipeline" in bench.SUBPROCESS_REGISTRY_LEGS
+    assert "q99_curation_pipeline" in bench.LEG_GROUPS["registry"][2]
 
 
 def test_q124_trend_subprocess_merges_child_dict(monkeypatch):
@@ -100,78 +161,121 @@ def test_q124_trend_subprocess_merges_child_dict(monkeypatch):
         "trend_q124_cells_scaled_x8": 3.0,
         "trend_q124_cells_scaled_x8_over_x1_ratio": 2.0,
     }
-    monkeypatch.setattr(bench, "_run_bench_child", lambda argv, t, timeout: dict(child))
-    timings = {}
-    assert bench._bench_q124_trend_subprocess(timings) is False
-    assert timings == child
-
-
-def test_q124_trend_subprocess_defers_fallback_on_dead_child(monkeypatch, capsys):
-    """A dead child must not silently drop the q124 watch — but the
-    in-session re-measure is DEFERRED to main()'s post-headline trend
-    slot (round-12 ADVICE: running it here, before _bench_m33, would
-    load the heap the BASELINE-comparable headlines are timed in). The
-    function only signals; it never runs the legs itself."""
-    monkeypatch.setattr(bench, "_run_bench_child", lambda argv, t, timeout: None)
-    monkeypatch.setattr(
-        bench,
-        "_bench_q124_trend",
-        lambda spark, sf_dir, t: (_ for _ in ()).throw(
-            AssertionError("fallback must be deferred to the caller")
-        ),
+    events, timings = _measure(
+        monkeypatch, {"registry": {}, "m33_trend": {}, "q124_trend": child}
     )
-    timings = {}
-    assert bench._bench_q124_trend_subprocess(timings) is True
-    assert timings == {}
-    assert "deferring" in capsys.readouterr().err
+    assert {k: timings[k] for k in child} == child
+    assert "in-session q124_trend" not in events
+
+
+def test_q124_trend_subprocess_defers_fallback_on_dead_child(monkeypatch):
+    """A dead child must not silently drop the q124 watch — but the
+    in-session re-measure is DEFERRED until after _bench_m33 (running it
+    before would load the heap the BASELINE-comparable headlines are
+    timed in)."""
+    events, _ = _measure(monkeypatch, {"registry": {}, "m33_trend": {}})
+    assert events.index("child q124_trend") < events.index("headlines")
+    assert events.index("headlines") < events.index("in-session q124_trend")
+    assert events.count("in-session q124_trend") == 1
 
 
 def test_q124_trend_subprocess_honors_skip_subprocess_legs(monkeypatch):
-    """SPARK_GRAFT_SKIP_SUBPROCESS_LEGS=1 exists to cap the run at ONE
-    JVM (the documented ~32 GB two-JVM peak); the q124 child must honor
-    it (round-12 ADVICE) by signaling the deferred in-session path
-    without spawning anything."""
+    """SPARK_GRAFT_SKIP_SUBPROCESS_LEGS=1 caps the run at ONE JVM: no
+    child is spawned for any group, and every group is measured in-session
+    after the headlines."""
     monkeypatch.setenv("SPARK_GRAFT_SKIP_SUBPROCESS_LEGS", "1")
     monkeypatch.setattr(
-        bench,
-        "_run_bench_child",
-        lambda argv, t, timeout: (_ for _ in ()).throw(
+        subprocess,
+        "run",
+        lambda *a, **k: (_ for _ in ()).throw(
             AssertionError("no child may be spawned under SKIP_SUBPROCESS_LEGS")
         ),
     )
-    timings = {}
-    assert bench._bench_q124_trend_subprocess(timings) is True
-    assert timings == {}
+    for group in bench.LEG_GROUPS:
+        assert bench._run_bench_child(None, group, timeout=5) is None
+    events, _ = _measure(monkeypatch, None)
+    assert events == [
+        "headlines",
+        "in-session registry",
+        "in-session m33_trend",
+        "in-session q124_trend",
+        "doc trend",
+        "skew trend",
+    ]
 
 
-def test_m33_trend_subprocess_defers_like_q124(monkeypatch, capsys):
-    """The m33 trend child follows the same round-13 contract as q124:
-    SKIP_SUBPROCESS_LEGS=1 suppresses the spawn entirely (it is the
-    LARGEST child, so the one-JVM cap must cover it), and a dead child
-    signals the deferred in-session path instead of running the legs
-    pre-headline."""
-    monkeypatch.setenv("SPARK_GRAFT_SKIP_SUBPROCESS_LEGS", "1")
-    monkeypatch.setattr(
-        bench,
-        "_run_bench_child",
-        lambda argv, t, timeout: (_ for _ in ()).throw(
-            AssertionError("no child may be spawned under SKIP_SUBPROCESS_LEGS")
-        ),
-    )
-    assert bench._bench_m33_trend_subprocess({}) is True
-
-    monkeypatch.delenv("SPARK_GRAFT_SKIP_SUBPROCESS_LEGS")
-    monkeypatch.setattr(bench, "_run_bench_child", lambda argv, t, timeout: None)
-    assert bench._bench_m33_trend_subprocess({}) is True
-    assert "deferring" in capsys.readouterr().err
+def test_m33_trend_subprocess_defers_like_q124(monkeypatch):
+    events, _ = _measure(monkeypatch, {"registry": {}, "q124_trend": {}})
+    assert events.index("headlines") < events.index("in-session m33_trend")
+    # deferred groups run before the in-session trend sections, in order
+    assert events[-3:] == ["in-session m33_trend", "doc trend", "skew trend"]
 
     child = {"trend_m33_ctas_x1": 3.2}
-    monkeypatch.setattr(
-        bench, "_run_bench_child", lambda argv, t, timeout: dict(child)
+    events, timings = _measure(
+        monkeypatch, {"registry": {}, "m33_trend": child, "q124_trend": {}}
     )
-    timings = {}
-    assert bench._bench_m33_trend_subprocess(timings) is False
-    assert timings == child
+    assert timings["trend_m33_ctas_x1"] == 3.2
+    assert "in-session m33_trend" not in events
+
+
+def test_export_ratio_is_trend_x2_over_headline_x1(monkeypatch):
+    """The export x2 ratio is derived once, after the headlines: the x2
+    trend export (child JVM) over the x1 headline export (parent)."""
+    _, timings = _measure(
+        monkeypatch,
+        {"registry": {}, "m33_trend": {"trend_m33_export_x2": 22.0}, "q124_trend": {}},
+    )
+    assert timings["trend_export_x2_over_x1_ratio"] == round(22.0 / 10.0, 3)
+    _, timings = _measure(monkeypatch, {"registry": {}, "q124_trend": {}})
+    assert "trend_export_x2_over_x1_ratio" not in timings
+
+
+def test_measure_group_passes_registry_names(monkeypatch):
+    seen = []
+    monkeypatch.setitem(
+        bench.LEG_GROUPS,
+        "registry",
+        (lambda s, d, t, *names: seen.append(names), 900, ("q99_curation_pipeline",)),
+    )
+    bench._measure_group(None, "/sf", "registry", {})
+    bench._measure_group(None, "/sf", "registry:q01_pricing_summary,q10_x", {})
+    assert seen == [("q99_curation_pipeline",), ("q01_pricing_summary", "q10_x")]
+
+
+def test_min_wall_protocol(monkeypatch):
+    """Warm passes are untimed and never quiesced; every draw is quiesced
+    unless disabled; the untimed hook and the cache release follow every
+    pass; the result is the rounded minimum of the draws only."""
+    events = []
+    walls = iter([100.0, 5.0, 3.00004, 4.0])
+    clock = [0.0]
+
+    def run():
+        events.append("run")
+        clock[0] += next(walls)
+
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
+    monkeypatch.setattr(bench, "_quiesce", lambda spark: events.append("gc"))
+    monkeypatch.setattr(
+        bench, "release_tracked_caches", lambda: events.append("release") or 0
+    )
+    wall = bench._min_wall(None, run, 3, warm=1, after=lambda: events.append("after"))
+    assert wall == 3.0
+    assert events == ["run", "after", "release"] + ["gc", "run", "after", "release"] * 3
+    events.clear()
+    walls = iter([1.0, 2.0])
+    assert bench._min_wall(None, run, 2, quiesce=False) == 1.0
+    assert events == ["run", "release"] * 2
+
+
+def test_bench_queries_are_registered():
+    """Every query the bench names resolves in the registry — a renamed
+    query fails here instead of as a KeyError deep inside a bench run."""
+    from hdfs_hive_sql_playground_spark.queries import all_queries
+
+    named = {n for _, _, names in bench.LEG_GROUPS.values() for n in names}
+    named |= set(bench.DOC_TREND_QUERIES) | set(bench.SKEW_TREND_QUERIES)
+    assert named - set(all_queries()) == set()
 
 
 def test_emit_records_two_lines_headlines_last_and_watches():
