@@ -39,10 +39,15 @@ import time
 from pyspark.sql import functions as F
 
 from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
-from hdfs_hive_sql_playground_spark.m33 import m33_schem
+from hdfs_hive_sql_playground_spark.m33 import M33_SCHEMA, m33_schem
 from hdfs_hive_sql_playground_spark.queries import all_queries
 from hdfs_hive_sql_playground_spark.sinks import ctas_text, read_text_table
-from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, read_jdbc
+from hdfs_hive_sql_playground_spark.sources.jdbc import (
+    export_jdbc,
+    jdbc_connection,
+    read_jdbc,
+    sql_state,
+)
 from hdfs_hive_sql_playground_spark.tables import load
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -52,7 +57,6 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 # per-task memory stays flat while parallelism grows.
 M33_FULL_ROWS_PER_FILE = 700_000
 M33_TOTAL_ROWS = 4 * M33_FULL_ROWS_PER_FILE
-M33_TEXT_SCHEMA = "age_mil bigint, wavelength double, flam double, is_peculiar int"
 
 
 def _ensure_m33_at(scale: int) -> str:
@@ -225,14 +229,14 @@ def _drop_derby_memory(spark, name: str) -> None:
     """Drop an in-memory Derby database so its pages leave the driver heap
     before the next timed section — an undropped 2.8 M-row x1 export DB
     measurably inflates the (x2-capped) export trend (GC pressure, not
-    sink cost). Derby signals a successful drop by THROWING 08006, hence
-    the blanket except."""
+    sink cost). Derby signals a successful drop by THROWING SQLState
+    08006; any other error (a database that does not exist) is raised."""
     try:
-        spark._jvm.java.sql.DriverManager.getConnection(
-            f"jdbc:derby:memory:{name};drop=true"
-        )
-    except Exception:
-        pass
+        with jdbc_connection(spark, f"jdbc:derby:memory:{name};drop=true"):
+            pass
+    except Exception as exc:
+        if sql_state(exc) != "08006":
+            raise
 
 
 def _tune_derby_sink(spark) -> None:
@@ -300,7 +304,7 @@ def _bench_m33(spark, timings: dict[str, float]) -> None:
     timings["m33_limit100_raw_view"] = _min_wall(
         spark, lambda: _fetch100(m33_schem(spark, src)), 5, warm=1, quiesce=False
     )
-    back = read_text_table(spark, "m33_bench", M33_TEXT_SCHEMA)
+    back = read_text_table(spark, "m33_bench", M33_SCHEMA)
     timings["m33_limit100_warehouse"] = _min_wall(
         spark, lambda: _fetch100(back), 5, warm=1, quiesce=False
     )
@@ -373,7 +377,7 @@ def _bench_m33_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
 
     export_dir = _ensure_m33_at(EXPORT_TREND_SCALE)
     ctas_text(m33_schem(spark, export_dir), "m33_bench_export_trend")
-    back = read_text_table(spark, "m33_bench_export_trend", M33_TEXT_SCHEMA)
+    back = read_text_table(spark, "m33_bench_export_trend", M33_SCHEMA)
     # Scan-only control: the Spark-side share of the export wall (~1-3%).
     # Control moved -> scan/plan regression; control flat -> the Derby
     # target, whose page-store GC is the known wobble source.
@@ -651,18 +655,12 @@ def _run_bench_child(spark, legs: str, timeout: float) -> dict[str, float] | Non
     return json.loads(line)
 
 
-def _measure(spark, sf_dir: str, specs: dict, timings: dict[str, float],
-             run_m33: bool, run_trend: bool) -> None:
+def _measure(spark, sf_dir: str, specs: dict, timings: dict[str, float]) -> None:
     """Every timed section between the two calibration brackets, in order."""
     # Child groups FIRST, while this parent idles with a near-empty heap
     # (warm-up + fixtures only): a loaded parent measurably slows a child.
-    groups = ["registry"]
-    if run_trend and run_m33:
-        groups.append("m33_trend")
-    if run_trend:
-        groups.append("q124_trend")
     deferred = []
-    for group in groups:
+    for group in ("registry", "m33_trend", "q124_trend"):
         out = _run_bench_child(spark, group, LEG_GROUPS[group][1])
         if out is None:
             deferred.append(group)
@@ -670,8 +668,7 @@ def _measure(spark, sf_dir: str, specs: dict, timings: dict[str, float],
             timings.update(out)
 
     # The BASELINE.md-comparable headlines next, in a quiesced JVM.
-    if run_m33:
-        _bench_m33(spark, timings)
+    _bench_m33(spark, timings)
 
     # Warm each benched query once at the tiny SF: a plan's first execution
     # pays Janino/JIT compilation of its generated code (q99: 6.2 s cold vs
@@ -695,9 +692,8 @@ def _measure(spark, sf_dir: str, specs: dict, timings: dict[str, float],
     # the in-session trends, which may leave the heap loaded.
     for group in deferred:
         _measure_group(spark, sf_dir, group, timings)
-    if run_trend:
-        _bench_doc_trend(spark, sf_dir, timings)
-        _bench_doc_skew_trend(spark, sf_dir, timings)
+    _bench_doc_trend(spark, sf_dir, timings)
+    _bench_doc_skew_trend(spark, sf_dir, timings)
     _export_ratio(timings)
 
 
@@ -730,8 +726,6 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     _tune_derby_sink(spark)  # before the engine's first connection
     specs = {n: s for n, s in all_queries().items() if s.bench}
-    run_m33 = os.environ.get("SPARK_GRAFT_SKIP_M33_BENCH") != "1"
-    run_trend = os.environ.get("SPARK_GRAFT_SKIP_TREND") != "1"
 
     # Warm the JVM + file listing + Python worker pool once so per-query
     # numbers measure the query, not session or Arrow-worker startup.
@@ -741,15 +735,12 @@ def main() -> None:
     # Every fixture BEFORE any timed section: round 3's fixture generation
     # between timed sections regressed m33_limit100_raw_view 0.83 -> 2.06 s
     # with no plan change. The children read them too.
-    if run_m33:
-        _ensure_m33_at(1)
-        if run_trend:
-            _ensure_m33_at(CTAS_TREND_SCALE)
-            _ensure_m33_at(EXPORT_TREND_SCALE)
-    if run_trend:
-        _ensure_doc_trend(spark, sf_dir)
-        _ensure_doc_trend(spark, sf_dir, scale=1)
-        _ensure_doc_skew_trend(spark, sf_dir)
+    _ensure_m33_at(1)
+    _ensure_m33_at(CTAS_TREND_SCALE)
+    _ensure_m33_at(EXPORT_TREND_SCALE)
+    _ensure_doc_trend(spark, sf_dir)
+    _ensure_doc_trend(spark, sf_dir, scale=1)
+    _ensure_doc_skew_trend(spark, sf_dir)
     _ensure_calibration_fixture(spark)
 
     # Host calibration brackets the whole run (first and last timed
@@ -758,7 +749,7 @@ def main() -> None:
         "calibration_x1_first": _calibration_wall(spark),
         "calibration_io_x1_first": _calibration_io_wall(spark),
     }
-    _measure(spark, sf_dir, specs, timings, run_m33, run_trend)
+    _measure(spark, sf_dir, specs, timings)
     timings["calibration_x1_last"] = _calibration_wall(spark)
     timings["calibration_io_x1_last"] = _calibration_io_wall(spark)
 

@@ -76,6 +76,15 @@ def main() -> int:
     print(f"catalog partitions: {parts}")
     assert parts == ["peculiarity=cp", "peculiarity=nocp"], parts
 
+    # The persisted HQL view and the DataFrame view agree on column types
+    # (field() is INT on both paths, as in Hive).
+    from hdfs_hive_sql_playground_spark.m33 import m33_schem
+
+    view_types = [(f.name, f.dataType) for f in eng.exec_sql("SELECT * FROM m33_schem").schema]
+    want_types = [(f.name, f.dataType) for f in m33_schem(eng.spark, m33_dir).schema]
+    assert view_types == want_types, (view_types, want_types)
+    print("view schema matches m33.m33_schem")
+
     # DML/maintenance surface (Tier B DDL/DML row): INSERT INTO, ANALYZE,
     # MSCK REPAIR, DESCRIBE — all through the same exec_sql pass-through.
     eng.exec_sql("INSERT INTO m33 VALUES (99, 1.5, 2.5, 0)")

@@ -4,9 +4,14 @@ The reference forwards raw HiveQL to Hive 3.1.2 and raw T-SQL to MSSQL
 (``playground.py:745-750``, ``:695-708``); Spark SQL covers almost all of
 that surface natively. The two gaps its example workload actually uses:
 
-- ``field(x, v1, v2, ...)`` (``create_m33_schem_view.hql:12``) — rewritten
-  here to ``coalesce(array_position(array(v1, ...), x), 0)``, which stays
-  JVM-side inside whole-stage codegen (no Python UDF in the path).
+- ``field(x, v1, v2, ...)`` (``create_m33_schem_view.hql:12``) — the
+  1-based index of ``x`` in the value list, 0 if absent or if ``x`` is
+  NULL, as an INT (Hive's return type). Rewritten here to
+  ``CAST(coalesce(array_position(array(v1, ...), x), 0) AS INT)``, which
+  stays JVM-side inside whole-stage codegen (no Python UDF in the path).
+  The coalesce matters because ``array_position(arr, NULL)`` is NULL while
+  ``field(NULL, ...)`` is 0; the cast because ``array_position`` returns
+  BIGINT. :func:`field` builds the same expression as a Column.
 - ``SELECT TOP n ...`` (``examples/runall.py:73``) — rewritten to a
   trailing ``LIMIT n``.
 
@@ -21,6 +26,9 @@ whole statement, so string literals containing ``field(`` survive.
 from __future__ import annotations
 
 import re
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 _FIELD_RE = re.compile(r"\bfield\s*\(", re.IGNORECASE)
 _TOP_RE = re.compile(r"^(\s*select)\s+top\s+(\d+)\s+", re.IGNORECASE)
@@ -69,10 +77,18 @@ def _split_top_level_args(argstr: str) -> list[str]:
     return args
 
 
+def field(x: Column | str, *values) -> Column:
+    """Hive ``field()`` as a Column: 1-based index of ``x`` in ``values``,
+    else 0, as INT — the expression :func:`rewrite_field` emits."""
+    col = F.col(x) if isinstance(x, str) else x
+    arr = F.array(*[v if isinstance(v, Column) else F.lit(v) for v in values])
+    return F.coalesce(F.array_position(arr, col), F.lit(0)).cast("int")
+
+
 def rewrite_field(sql: str) -> str:
     """Replace every top-level ``field(x, v...)`` call with the JVM-side
-    coalesce/array_position form (processed innermost-first so nested
-    field() calls also rewrite)."""
+    form of :func:`field` (processed innermost-first so nested field()
+    calls also rewrite)."""
     while True:
         spans = _scan_literal_spans(sql)
         m = None
@@ -102,7 +118,7 @@ def rewrite_field(sql: str) -> str:
         if len(args) < 2:
             return sql
         x, values = args[0], args[1:]
-        repl = f"coalesce(array_position(array({', '.join(values)}), {x}), 0)"
+        repl = f"CAST(coalesce(array_position(array({', '.join(values)}), {x}), 0) AS INT)"
         sql = sql[: m.start()] + repl + sql[j + 1 :]
 
 

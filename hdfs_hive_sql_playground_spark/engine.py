@@ -299,12 +299,11 @@ class Engine:
     def m33_ctas(self, table: str = "m33") -> str:
         """CTAS the typed view to comma-delimited text (runall step 6, A17)
         and register the read-back table."""
+        from hdfs_hive_sql_playground_spark.m33 import M33_SCHEMA
+
         path = ctas_text(self.spark.table("m33_schem"), table, self.warehouse_dir)
         read_text_table(
-            self.spark,
-            table,
-            "age_mil bigint, wavelength double, flam double, is_peculiar int",
-            self.warehouse_dir,
+            self.spark, table, M33_SCHEMA, self.warehouse_dir
         ).createOrReplaceTempView(table)
         return path
 

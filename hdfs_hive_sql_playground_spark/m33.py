@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_hive_sql_playground_spark.functions import field
+from hdfs_hive_sql_playground_spark.dialect import field
 from hdfs_hive_sql_playground_spark.sources.text import external_text_table
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -29,6 +29,9 @@ DEFAULT_M33_DIR = os.path.join(REPO_ROOT, "data", "m33_mini")
 PARTITION_COL = "peculiarity"
 SKIP_HEADER_LINES = 3  # TBLPROPERTIES("skip.header.line.count"="3")
 AGE_PATTERN = r"(hmix\.a)(\d*)"
+# The typed view's columns as a DDL schema string: how the CTAS'd text
+# table is read back schema-on-read (create_insert_m33_tbl.hql).
+M33_SCHEMA = "age_mil bigint, wavelength double, flam double, is_peculiar int"
 
 
 def m33_raw(

@@ -19,10 +19,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def scan_lines(df: DataFrame) -> list[str]:
     return [ln.strip() for ln in executed_plan(df).splitlines() if "PushedFilters" in ln]
 

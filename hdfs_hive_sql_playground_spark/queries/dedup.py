@@ -1127,12 +1127,12 @@ SEG_WORDS = 8  # fixed-width word segments (the chunked exact-substring unit)
 # corpus of long documents can blow the broadcast budget while under the
 # 1M-row default. The row cap removes the corpus-proportional HashedRelation
 # failure mode (one row per DISTINCT doc, not per segment); for
-# segment-heavy corpora lower SPARK_GRAFT_REWRITE_BCAST_CAP toward
+# segment-heavy corpora lower dedup.REWRITE_BCAST_CAP toward
 # driver_mem / (avg_segments_removed_per_doc * 4 bytes), or rely on the
 # fallback: past the cap the rewrite is a doc_id shuffle-hash equi-join
 # whose one text exchange is the same corpus-bytes cost Lee et al.'s
 # rewrite pays.
-REWRITE_BCAST_CAP = int(os.environ.get("SPARK_GRAFT_REWRITE_BCAST_CAP", "1000000"))
+REWRITE_BCAST_CAP = 1_000_000
 
 
 @register(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from hdfs_hive_sql_playground_spark.queries import register
 from hdfs_hive_sql_playground_spark.sinks import DEFAULT_WAREHOUSE, write_range_layout
+from hdfs_hive_sql_playground_spark.sources.text import data_files
 from hdfs_hive_sql_playground_spark.tables import load
 
 N_BUCKETS = 8  # q78's bucket count
@@ -41,22 +42,6 @@ _AGG_ORACLE = """
 
 def _subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 1000)
-
-
-def _source_fingerprint(src_path: str) -> str:
-    """size:mtime_ns fingerprint of a parquet file (or every file under a
-    parquet directory), so derived-layout caches invalidate when the source
-    is regenerated in place under the same path."""
-    parts = []
-    if os.path.isdir(src_path):
-        for root, _dirs, files in os.walk(src_path):
-            for name in sorted(files):
-                st = os.stat(os.path.join(root, name))
-                parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(src_path)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    return ";".join(parts)
 
 
 def _agg(df: DataFrame) -> DataFrame:
@@ -189,7 +174,8 @@ def q110_range_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The rewritten layout is a pure function of the source events table,
     # so key the path by sf_dir and guard with a completeness marker that
-    # records a CONTENT FINGERPRINT (size+mtime of every source file):
+    # records a CONTENT FINGERPRINT (the data_files listing: path, size and
+    # mtime of every source file, as the schema cache keys on):
     # repeated invocations (the registry-wide plan sweep calls every query
     # several times) reuse the layout, but a regenerated /root/testdata —
     # which keeps the same sf_dir name across rounds — invalidates the
@@ -197,7 +183,10 @@ def q110_range_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrent sessions on the same repo don't race mid-write: the
     # layout is built in a per-process staging dir and atomically renamed.
     tag = os.path.basename(sf_dir.rstrip("/"))
-    fingerprint = _source_fingerprint(os.path.join(sf_dir, "events.parquet"))
+    fingerprint = ";".join(
+        ":".join(map(str, f))
+        for f in data_files(spark, os.path.join(sf_dir, "events.parquet"))
+    )
     path = os.path.join(DEFAULT_WAREHOUSE, f"events_range_layout_{tag}")
     marker = os.path.join(path, "_LAYOUT_COMPLETE")
     current = None

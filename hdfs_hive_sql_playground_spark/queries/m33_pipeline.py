@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_hive_sql_playground_spark.m33 import DEFAULT_M33_DIR, m33_schem
+from hdfs_hive_sql_playground_spark.m33 import DEFAULT_M33_DIR, M33_SCHEMA, m33_schem
 from hdfs_hive_sql_playground_spark.queries import register
 
 # DuckDB rendition of the typed view (single source for all three oracles).
@@ -40,50 +40,6 @@ def q70_m33_schem_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m33_schem(spark)
 
 
-@register(
-    "q71_m33_schem_agg",
-    oracle=f"""
-    SELECT
-      age_mil,
-      is_peculiar,
-      COUNT(*) AS n,
-      MIN(wavelength) AS min_wl,
-      MAX(wavelength) AS max_wl,
-      CAST(SUM(CAST(CAST(flam AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_flam_c
-    FROM ({_ORACLE_VIEW})
-    GROUP BY age_mil, is_peculiar
-    """,
-    doc="Aggregate over the m33 view (the FIXTURES.md §1.5 invariants as a query): "
-    "per (age, peculiarity) group counts and wavelength bounds.",
-)
-def q71_m33_schem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = m33_schem(spark)
-    return v.groupBy("age_mil", "is_peculiar").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("wavelength").alias("min_wl"),
-        F.max("wavelength").alias("max_wl"),
-        F.sum((F.col("flam").cast("decimal(18,2)") * 100).cast("long")).alias("sum_flam_c"),
-    )
-
-
-@register(
-    "q72_m33_limit_fetch",
-    oracle=f"""
-    SELECT * FROM ({_ORACLE_VIEW})
-    ORDER BY wavelength, age_mil, is_peculiar
-    LIMIT 100
-    """,
-    doc="The runall.py verification read: SELECT * FROM m33_schem LIMIT 100 (A15-A16), "
-    "made deterministic with a unique sort key (wavelength, age_mil, is_peculiar).",
-)
-def q72_m33_limit_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        m33_schem(spark)
-        .orderBy("wavelength", "age_mil", "is_peculiar")
-        .limit(100)
-    )
-
-
 _AGG_ORACLE = f"""
     SELECT
       age_mil,
@@ -107,6 +63,34 @@ def _schem_agg(df: DataFrame) -> DataFrame:
 
 
 @register(
+    "q71_m33_schem_agg",
+    oracle=_AGG_ORACLE,
+    doc="Aggregate over the m33 view (the FIXTURES.md §1.5 invariants as a query): "
+    "per (age, peculiarity) group counts and wavelength bounds.",
+)
+def q71_m33_schem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _schem_agg(m33_schem(spark))
+
+
+@register(
+    "q72_m33_limit_fetch",
+    oracle=f"""
+    SELECT * FROM ({_ORACLE_VIEW})
+    ORDER BY wavelength, age_mil, is_peculiar
+    LIMIT 100
+    """,
+    doc="The runall.py verification read: SELECT * FROM m33_schem LIMIT 100 (A15-A16), "
+    "made deterministic with a unique sort key (wavelength, age_mil, is_peculiar).",
+)
+def q72_m33_limit_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        m33_schem(spark)
+        .orderBy("wavelength", "age_mil", "is_peculiar")
+        .limit(100)
+    )
+
+
+@register(
     "q73_m33_ctas_roundtrip",
     oracle=_AGG_ORACLE,
     doc="CTAS materialization sink (A17): write the typed view to comma-delimited "
@@ -117,9 +101,7 @@ def q73_m33_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_hive_sql_playground_spark.sinks import ctas_text, read_text_table
 
     ctas_text(m33_schem(spark), "m33_ctas_check")
-    back = read_text_table(
-        spark, "m33_ctas_check", "age_mil bigint, wavelength double, flam double, is_peculiar int"
-    )
+    back = read_text_table(spark, "m33_ctas_check", M33_SCHEMA)
     return _schem_agg(back)
 
 

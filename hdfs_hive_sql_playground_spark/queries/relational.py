@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hdfs_hive_sql_playground_spark.dialect import field
 from hdfs_hive_sql_playground_spark.queries import register
 from hdfs_hive_sql_playground_spark.tables import load
 
@@ -771,12 +772,7 @@ def q44_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q45_field_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
-    # coalesce(..., 0): array_position(arr, NULL) is NULL but Hive
-    # field(NULL, ...) is 0 — keep the exact field() contract.
-    fld = F.coalesce(
-        F.array_position(F.array(F.lit("F"), F.lit("O"), F.lit("P")), F.col("o_orderstatus")),
-        F.lit(0),
-    ).cast("int")
+    fld = field("o_orderstatus", "F", "O", "P")
     return o.select(
         "o_orderkey",
         fld.alias("status_field"),

@@ -39,8 +39,6 @@ k-means centroids computed offline; the query shape is identical).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -49,15 +47,15 @@ from hdfs_hive_sql_playground_spark.caching import track_persist
 from hdfs_hive_sql_playground_spark.queries import register
 from hdfs_hive_sql_playground_spark.tables import load
 
-# Coarse-quantizer cell count. Env-tunable because cell count is THE
-# scale knob for every cell-bucketed stage (q84 near-dup, q86 IVF probe,
-# q124 SemDeDup): within-cell pair work is sum(cell^2) ~ n^2 / N_CELLS,
-# so production keeps cell OCCUPANCY constant by growing the (offline
-# k-means) codebook linearly with the corpus. The oracle SQL fragments
-# below bake the same value at import, so the cross-engine check holds at
-# any setting. The bench's cells-scaled trend leg monkeypatches this at
-# runtime (no oracle involved there).
-N_CELLS = int(os.environ.get("SPARK_GRAFT_IVF_N_CELLS", "8"))
+# Coarse-quantizer cell count: THE scale knob for every cell-bucketed
+# stage (q84 near-dup, q86 IVF probe, q124 SemDeDup): within-cell pair
+# work is sum(cell^2) ~ n^2 / N_CELLS, so production keeps cell OCCUPANCY
+# constant by growing the (offline k-means) codebook linearly with the
+# corpus. The oracle SQL fragments below bake the same value at import, so
+# the cross-engine check holds for whatever value this constant has. The
+# bench's cells-scaled trend leg patches similarity.N_CELLS at runtime (no
+# oracle involved there).
+N_CELLS = 8
 N_QUERIES = 5
 TOP_K = 5
 PROBE_CELLS = 2
@@ -67,7 +65,7 @@ NEARDUP_COS = 0.4  # tuned to the synthetic corpus; ~0.95+ in production
 # ceil(n_cell / cap) hash-shards before the dominance self-join, so one
 # hot cell can never serialize into a single straggler task. Exact: see
 # q124's docstring for the replicate-one-side construction.
-SEMDEDUP_CELL_CAP = int(os.environ.get("SPARK_GRAFT_SEMDEDUP_CELL_CAP", "4096"))
+SEMDEDUP_CELL_CAP = 4096
 
 
 # -- Spark-side vector algebra (pure column expressions) --------------------
@@ -734,7 +732,7 @@ SEMDEDUP_COS = NEARDUP_COS  # same synthetic-corpus operating point
     "DuckDB (module header), so keep/remove decisions are engine-"
     "independent. At 100 TB: centroids come from an offline k-means whose "
     "codebook grows linearly with the corpus (constant cell occupancy -> "
-    "linear total pair work, N_CELLS env-tunable; the bench's cells-"
+    "linear total pair work, similarity.N_CELLS; the bench's cells-"
     "scaled x8 trend measures exactly this regime). The physical strategy "
     "is picked by one O(#cells) driver-side statistic: cells all within "
     "SEMDEDUP_CELL_CAP -> plain cell-keyed self-join (broadcast-hash "

@@ -10,8 +10,6 @@ shape that streams at 100 TB (no shuffle wider than the output).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -117,14 +115,14 @@ def _lid_best(words: Column) -> Column:
 # doc_id-range bucket width for running sums.  Rows carried into these
 # windows are narrow (key + stratum + one int64), so 1 Mi rows per bucket
 # is ~30-40 MB per partition at 100 TB; the totals table is corpus_rows /
-# width entries per stratum.  Env-tunable so the skew bench and the
-# multi-bucket tests can exercise many buckets at small SF.
-CUMSUM_BUCKET_WIDTH = int(os.environ.get("SPARK_GRAFT_CUMSUM_BUCKET_WIDTH", 1 << 20))
+# width entries per stratum.  The skew bench and the multi-bucket tests
+# patch text.CUMSUM_BUCKET_WIDTH to exercise many buckets at small SF.
+CUMSUM_BUCKET_WIDTH = 1 << 20
 
 # Hex-prefix length for hash-order (md5) bucketing: 4 chars = 65 536
 # buckets, so even a 40%-of-corpus language splits into partitions of
 # stratum_rows / 65 536 narrow rows.
-MD5_BUCKET_PREFIX = int(os.environ.get("SPARK_GRAFT_MD5_BUCKET_PREFIX", 4))
+MD5_BUCKET_PREFIX = 4
 
 
 def _bucketed_running_sum(
@@ -1524,10 +1522,8 @@ def q132_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the [0, 2^48) key range into 4096 order-preserving buckets, so even a
 # stratum holding half the corpus ranks in partitions of stratum_rows /
 # 4096 narrow rows (same contract as MD5_BUCKET_PREFIX above).
-WSAMPLE_K = int(os.environ.get("SPARK_GRAFT_WSAMPLE_K", 20))
-WSAMPLE_KEY_BUCKET_WIDTH = int(
-    os.environ.get("SPARK_GRAFT_WSAMPLE_KEY_BUCKET_WIDTH", 1 << 36)
-)
+WSAMPLE_K = 20
+WSAMPLE_KEY_BUCKET_WIDTH = 1 << 36
 _WSAMPLE_HASH_SQL = _shingle_hash48_sql(
     "CAST(doc_id AS VARCHAR) || ':' || CAST(r AS VARCHAR)"
 )

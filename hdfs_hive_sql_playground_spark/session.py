@@ -54,8 +54,9 @@ def get_spark(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
-        # Local runs don't need the UI; harmless if overridden.
-        "spark.ui.enabled": os.environ.get("SPARK_GRAFT_UI", "false"),
+        # Local runs don't need the UI; conf={"spark.ui.enabled": "true"}
+        # turns it back on.
+        "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         # JIT code cache: a long-lived session compiling the registry's
         # 137 distinct codegen'd plans fills the JVM's default 240m
@@ -66,14 +67,11 @@ def get_spark(
         # the LAST bench leg with no plan change. 480m keeps the whole
         # registry's generated code resident. Same knob every production
         # Spark deployment with many distinct queries tunes (SPARK-29512
-        # family). Env-tunable like the sibling knobs; a caller-supplied
-        # spark.driver.extraJavaOptions REPLACES this default wholesale
-        # (the conf loop overrides key-for-key), so append the flag when
-        # passing your own JVM options.
-        "spark.driver.extraJavaOptions": (
-            "-XX:ReservedCodeCacheSize="
-            + os.environ.get("SPARK_GRAFT_CODE_CACHE", "480m")
-        ),
+        # family). A caller-supplied spark.driver.extraJavaOptions
+        # REPLACES this default wholesale (the conf loop overrides
+        # key-for-key), so append the flag when passing your own JVM
+        # options.
+        "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=480m",
         # Parquet scans: vectorized reader + pushdown are defaults, pinned
         # here so a misconfigured environment can't silently disable them.
         "spark.sql.parquet.filterPushdown": "true",

@@ -21,6 +21,8 @@ same JVM) — the URL shape and options are identical for SQL Server
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 
 DERBY_DRIVER = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
@@ -77,6 +79,27 @@ def read_jdbc(
     return reader.load()
 
 
+@contextmanager
+def jdbc_connection(spark: SparkSession, url: str, user: str | None = None):
+    """A JDBC connection opened through the driver JVM's DriverManager,
+    closed when the ``with`` block exits. ``user`` (empty password) is
+    for targets that take credentials, such as the Thrift server."""
+    manager = spark._jvm.java.sql.DriverManager
+    conn = manager.getConnection(url) if user is None else manager.getConnection(url, user, "")
+    try:
+        yield conn
+    finally:
+        conn.close()
+
+
+def sql_state(exc: Exception) -> str | None:
+    """The SQLState of a JDBC error raised through py4j, else None."""
+    java_exc = getattr(exc, "java_exception", None)
+    if java_exc is not None and hasattr(java_exc, "getSQLState"):
+        return java_exc.getSQLState()
+    return None
+
+
 def jdbc_table_exists(spark: SparkSession, url: str, table: str) -> bool:
     """True iff ``table`` exists on the JDBC target, probed with a
     zero-row ``SELECT 1 FROM <table> WHERE 1=0``.  Only a
@@ -87,25 +110,17 @@ def jdbc_table_exists(spark: SparkSession, url: str, table: str) -> bool:
     "table missing" and letting a streaming-sink replay skip its
     deduplicating DELETE."""
     _MISSING_SQLSTATES = ("42X05", "42S02", "42P01", "42S01", "S0002")
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(url)
-    try:
+    with jdbc_connection(spark, url) as conn:
         stmt = conn.createStatement()
         try:
             stmt.executeQuery(f"SELECT 1 FROM {table} WHERE 1=0").close()
             return True
         except Exception as exc:
-            state = None
-            java_exc = getattr(exc, "java_exception", None)
-            if java_exc is not None and hasattr(java_exc, "getSQLState"):
-                state = java_exc.getSQLState()
-            if state in _MISSING_SQLSTATES:
+            if sql_state(exc) in _MISSING_SQLSTATES:
                 return False
             raise
         finally:
             stmt.close()
-    finally:
-        conn.close()
 
 
 def jdbc_ddl(spark: SparkSession, url: str, *statements: str) -> None:
@@ -113,28 +128,21 @@ def jdbc_ddl(spark: SparkSession, url: str, *statements: str) -> None:
     Spark-side analog of ``sqlcmd -q "CREATE TABLE ..."``
     (``playground.py:703-708``, A18). Uses the JVM's DriverManager; no
     Python JDBC dependency."""
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(url)
-    try:
+    with jdbc_connection(spark, url) as conn:
         stmt = conn.createStatement()
         for sql in statements:
             stmt.execute(sql)
         stmt.close()
-    finally:
-        conn.close()
 
 
 def jdbc_count(spark: SparkSession, url: str, table: str) -> int:
     """``SELECT COUNT(*)`` on the export target through the driver's
     DriverManager (as :func:`jdbc_ddl`): the target counts its own rows,
     so none travel back through Spark."""
-    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
-    try:
+    with jdbc_connection(spark, url) as conn:
         stmt = conn.createStatement()
         rs = stmt.executeQuery(f"SELECT COUNT(*) FROM {table}")
         rs.next()
         n = rs.getLong(1)
         stmt.close()
         return n
-    finally:
-        conn.close()

@@ -27,8 +27,6 @@ Design for scale:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,12 +44,7 @@ MAX_WHOLETEXT_FILE_BYTES = 256 * 1024 * 1024
 # between catalog operations (the same assumption behind Hive's metastore
 # partition statistics), so re-walking on EVERY query — five times in a
 # row for an interactive LIMIT-fetch loop — is pure listing overhead on
-# top of the listing the scan itself repeats. Set
-# SPARK_GRAFT_WHOLETEXT_GUARD_CACHE=0 for mutable-directory workflows
-# (each query then re-validates, the pre-round-6 behavior).
-_GUARD_CACHE_ENABLED = (
-    os.environ.get("SPARK_GRAFT_WHOLETEXT_GUARD_CACHE", "1") != "0"
-)
+# top of the listing the scan itself repeats.
 _guard_ok: set[tuple[str, int]] = set()
 
 
@@ -82,7 +75,7 @@ def data_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ..
 def _check_wholetext_sizes(spark: SparkSession, path: str, limit: int) -> None:
     """Driver-side size guard for the wholetext path, over
     :func:`data_files` so every scheme Spark reads is guarded."""
-    if _GUARD_CACHE_ENABLED and (path, limit) in _guard_ok:
+    if (path, limit) in _guard_ok:
         return
     for f, size, _mtime in data_files(spark, path):
         if size > limit:
@@ -92,8 +85,7 @@ def _check_wholetext_sizes(spark: SparkSession, path: str, limit: int) -> None:
                 "Split the file upstream or read it without "
                 "skip_header_lines."
             )
-    if _GUARD_CACHE_ENABLED:
-        _guard_ok.add((path, limit))
+    _guard_ok.add((path, limit))
 
 
 def read_text_files(
@@ -177,18 +169,6 @@ def read_text_files(
     return whole.select(
         FILE_COL, *per_file_cols.keys(), F.explode(body).alias(ROW_COL)
     )
-
-
-def discover_partitions(base_dir: str) -> dict[str, str]:
-    """MSCK REPAIR analog for the native path: every immediate
-    subdirectory of ``base_dir`` becomes a partition (value = dir name).
-    Driver-side directory listing only — same metadata cost as Hive's
-    partition discovery."""
-    return {
-        d: os.path.join(base_dir, d)
-        for d in sorted(os.listdir(base_dir))
-        if os.path.isdir(os.path.join(base_dir, d))
-    }
 
 
 def external_text_table(

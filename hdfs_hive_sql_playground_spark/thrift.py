@@ -33,10 +33,13 @@ from __future__ import annotations
 
 import socket
 import time
+from contextlib import ExitStack
 from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import SparkSession
+
+from hdfs_hive_sql_playground_spark.sources.jdbc import jdbc_connection
 
 SINGLE_SESSION_CONF = {"spark.sql.hive.thriftServer.singleSession": "true"}
 
@@ -125,7 +128,8 @@ class WireClient:
     statements"; this can."""
 
     def __init__(self, spark: SparkSession, url: str, user: str = "anon"):
-        self._conn = spark._jvm.java.sql.DriverManager.getConnection(url, user, "")
+        self._stack = ExitStack()
+        self._conn = self._stack.enter_context(jdbc_connection(spark, url, user))
 
     def sql(self, sql: str) -> list[tuple]:
         """Execute one statement on this wire session; fetch all rows."""
@@ -152,7 +156,7 @@ class WireClient:
             st.close()
 
     def close(self) -> None:
-        self._conn.close()
+        self._stack.close()
 
     def __enter__(self) -> "WireClient":
         return self
@@ -174,14 +178,10 @@ def wire_sql(
 def wire_tables(spark: SparkSession, url: str, user: str = "anon") -> list[str]:
     """List table/view names over the wire via JDBC DatabaseMetaData —
     what beeline's ``!tables`` issues."""
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(url, user, "")
-    try:
+    with jdbc_connection(spark, url, user) as conn:
         rs = conn.getMetaData().getTables(None, None, "%", None)
         names = []
         while rs.next():
             names.append(rs.getString(3))
         rs.close()
         return sorted(names)
-    finally:
-        conn.close()

@@ -112,7 +112,7 @@ def _measure(monkeypatch, children, specs=None):
         bench, "_bench_doc_skew_trend", lambda s, d, t: events.append("skew trend")
     )
     timings: dict[str, float] = {}
-    bench._measure(None, "/sf", specs or {}, timings, run_m33=True, run_trend=True)
+    bench._measure(None, "/sf", specs or {}, timings)
     return events, timings
 
 
@@ -525,3 +525,15 @@ def test_derby_table_lock_export_roundtrips_exactly(spark):
     ).first()
     assert tuple(got) == tuple(want)
     bench._drop_derby_memory(spark, "tablelock_rt")
+
+
+def test_drop_derby_memory_accepts_only_the_drop_signal(spark):
+    """Dropping an existing in-memory database returns quietly (Derby's
+    08006 is the success signal); dropping one that was never created is
+    a real error and raises."""
+    from hdfs_hive_sql_playground_spark.sources.jdbc import jdbc_ddl
+
+    jdbc_ddl(spark, "jdbc:derby:memory:drop_probe;create=true", "CREATE TABLE t (k INT)")
+    bench._drop_derby_memory(spark, "drop_probe")
+    with pytest.raises(Exception, match="drop_probe"):
+        bench._drop_derby_memory(spark, "drop_probe")

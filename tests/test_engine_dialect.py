@@ -11,20 +11,32 @@ from hdfs_hive_sql_playground_spark.engine import Engine
 def test_field_rewrite_basic():
     assert (
         dialect.rewrite_field("SELECT field(peculiarity,'nocp','cp') - 1 FROM t")
-        == "SELECT coalesce(array_position(array('nocp', 'cp'), peculiarity), 0) - 1 FROM t"
+        == "SELECT CAST(coalesce(array_position(array('nocp', 'cp'), peculiarity), 0) AS INT)"
+        " - 1 FROM t"
     )
 
 
 def test_field_rewrite_ignores_literals_and_nests():
     sql = "SELECT 'field(a,b)' AS s, field(x, field(y, 'a', 'b'), 2) FROM t"
     out = dialect.rewrite_field(sql)
-    assert out.startswith("SELECT 'field(a,b)' AS s, coalesce(array_position(")
-    assert "coalesce(array_position(array('a', 'b'), y), 0)" in out
+    assert out.startswith("SELECT 'field(a,b)' AS s, CAST(coalesce(array_position(")
+    assert "CAST(coalesce(array_position(array('a', 'b'), y), 0) AS INT)" in out
 
 
 def test_top_rewrite():
     assert dialect.rewrite("SELECT TOP 100 * FROM m33;") == "SELECT * FROM m33 LIMIT 100"
     assert dialect.rewrite("SELECT t FROM x") == "SELECT t FROM x"
+
+
+def test_engine_exec_sql_field_returns_int(spark):
+    """Hive's FIELD returns INT; array_position alone would make it BIGINT."""
+    from pyspark.sql.types import IntegerType
+
+    eng = Engine()
+    eng._spark = spark
+    df = eng.exec_sql("SELECT field('b', 'a', 'b') AS f, field(NULL, 'a') AS z")
+    assert [f.dataType for f in df.schema] == [IntegerType(), IntegerType()]
+    assert tuple(df.first()) == (2, 0)
 
 
 def test_engine_exec_sql_field_matches_hive_semantics(spark, sf_dir):

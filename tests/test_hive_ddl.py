@@ -25,6 +25,7 @@ def test_reference_hql_pipeline_end_to_end(tmp_path):
     )
     assert "HIVE_PIPELINE_OK" in proc.stdout, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "catalog partitions: ['peculiarity=cp', 'peculiarity=nocp']" in proc.stdout
+    assert "view schema matches m33.m33_schem" in proc.stdout
     assert proc.returncode == 0
 
 
