@@ -84,11 +84,8 @@ def _quiesce(spark) -> None:
     """Ask the JVM for a full GC so the next timed section starts from a
     drained heap instead of paying for the previous section's garbage —
     measured swings of 2-4x on individual timings otherwise."""
-    try:
-        spark._jvm.System.gc()
-        time.sleep(0.3)
-    except Exception:
-        pass
+    spark._jvm.System.gc()
+    time.sleep(0.3)
 
 
 def _min_wall(spark, run, draws: int, warm: int = 0, quiesce: bool = True,
@@ -249,10 +246,7 @@ def _tune_derby_sink(spark) -> None:
     Server (TABLOCK bulk inserts). A system property, so it must be set
     before the Derby engine boots (first connection) in each bench JVM;
     per-query correctness paths (q74) keep engine defaults."""
-    try:
-        spark._jvm.System.setProperty("derby.storage.rowLocking", "false")
-    except Exception:  # bench-only tuning — never fail the run over it
-        pass
+    spark._jvm.System.setProperty("derby.storage.rowLocking", "false")
 
 
 def _ctas_wall(spark, src_dir: str, table: str, draws: int) -> float:

@@ -2,8 +2,8 @@
 session: persisted external table + partitions + header skip + persisted
 view + Hive-format CTAS (SURVEY §2 A2-A5, A17, A27).
 
-Spawns its own SparkSession with enableHiveSupport (embedded Derby
-metastore in a scratch dir), so run it as a standalone process:
+Starts its own Engine with the Hive catalog (embedded Derby metastore in
+a scratch dir), so run it as a standalone process:
 
     python examples/run_hive_pipeline.py [m33_dir] [scratch_dir]
 
@@ -35,28 +35,15 @@ def main() -> int:
             "spark.hadoop.javax.jdo.option.ConnectionURL": (
                 f"jdbc:derby:;databaseName={scratch}/metastore_db;create=true"
             ),
+            # what Builder.enableHiveSupport() sets
             "spark.sql.catalogImplementation": "hive",
         },
-    )
-    eng.conf["spark.sql.warehouse.dir"] = os.path.join(scratch, "warehouse")
-    # enableHiveSupport path in get_spark:
-    from hdfs_hive_sql_playground_spark.session import get_spark
-
-    eng._spark = get_spark(
-        app_name=eng.app_name,
-        warehouse_dir=eng.warehouse_dir,
-        hive=True,
-        conf=eng.conf,
-    )
+    ).start()
 
     hql_path = os.path.join(REPO, "examples", "hive", "m33_pipeline.hql")
     with open(hql_path) as f:
-        lines = [
-            ln
-            for ln in f.read().replace("${M33_DIR}", m33_dir).splitlines()
-            if not ln.lstrip().startswith("--")
-        ]
-    for stmt in [s.strip() for s in "\n".join(lines).split(";") if s.strip()]:
+        hql = f.read().replace("${M33_DIR}", m33_dir)
+    for stmt in eng.split_statements(hql):
         eng.exec_sql(stmt)
 
     # Verification (the runall.py checks, value-level):

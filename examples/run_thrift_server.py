@@ -7,9 +7,10 @@ Usage::
 
     python examples/run_thrift_server.py [sf_dir]
 
-Runs a self-check (wire results must equal in-process results) and prints
-THRIFT_OK markers; with ``SPARK_GRAFT_THRIFT_HOLD=1`` it then stays up so
-an external beeline can connect to the printed URL.
+Runs a self-check (wire results must equal in-process results), prints
+THRIFT_OK markers and stops the server. For a server that stays up for an
+external beeline, run ``python -m hdfs_hive_sql_playground_spark.cli
+serve-thrift``.
 """
 
 from __future__ import annotations
@@ -111,12 +112,6 @@ def main() -> int:
             assert got == list(range(10000)), (len(big), got[:5], got[-5:])
             print("THRIFT_OK multi-batch-fetch-exact")
 
-        if os.environ.get("SPARK_GRAFT_THRIFT_HOLD") == "1":
-            print("holding (Ctrl-C to exit)...")
-            import time
-
-            while True:
-                time.sleep(60)
         server.stop()
         return 0
     finally:

@@ -177,39 +177,35 @@ def _sql_shell(eng, n: int = 20, url: str | None = None) -> None:
         _run_shell_stmt(run, stmt)
 
 
-def _validate(eng, names: list[str], sf_dir: str) -> list[str]:
-    """Run the DuckDB oracle compare for the named registry queries on the
-    engine's session (the print-health-report spirit extended to
-    semantics: does this deployment still reproduce the reference answers
-    bit-for-bit?). Prints one PASS/FAIL/ROWSONLY/UNKNOWN line per query,
-    returns the failing names. Oracle-less queries get the same rows-only
-    check the driver records for them."""
-    from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
-    from hdfs_hive_sql_playground_spark.oracle import compare
+def validate(spark, names: list[str], sf_dir: str) -> list[str]:
+    """Check the named registry queries against their DuckDB oracles on
+    ``spark`` (the print-health-report spirit extended to semantics: does
+    this deployment still reproduce the reference answers bit-for-bit?).
+    Prints one PASS/FAIL/ROWSONLY/UNKNOWN/ERROR line per query, returns the
+    failing names."""
+    from hdfs_hive_sql_playground_spark.oracle import check
     from hdfs_hive_sql_playground_spark.queries import all_queries
 
     specs = all_queries()
     fails: list[str] = []
     for name in names:
-        spec = specs.get(name)
-        release_tracked_caches()
-        if spec is None:
+        if name not in specs:
             print(f"UNKNOWN {name}")
             fails.append(name)
             continue
         try:
-            if spec.oracle is None:
-                rows = spec.fn(eng.spark, sf_dir).count()
-                print(f"ROWSONLY {name} rows={rows}", flush=True)
-                continue
-            r = compare(name, spec.fn(eng.spark, sf_dir), spec.oracle, sf_dir)
-            print(("PASS" if r.ok else "FAIL"), name, flush=True)
-            if not r.ok:
-                fails.append(name)
-                print(r.report())
+            r = check(spark, specs[name], sf_dir)
         except Exception as e:  # noqa: BLE001 — report and continue
             print("ERROR", name, str(e)[:300], flush=True)
             fails.append(name)
+            continue
+        if r.rows_only:
+            print(f"ROWSONLY {name} rows={r.spark_rows}", flush=True)
+            continue
+        print(("PASS" if r.ok else "FAIL"), name, flush=True)
+        if not r.ok:
+            fails.append(name)
+            print(r.report())
     print(f"VALIDATE_DONE checked={len(names)} fails={len(fails)}")
     return fails
 
@@ -332,7 +328,7 @@ def main(argv: list[str] | None = None) -> int:
             from hdfs_hive_sql_playground_spark.queries import all_queries
 
             names = args.queries or list(all_queries())[: args.n]
-            if _validate(eng, names, args.testdata):
+            if validate(eng.spark, names, args.testdata):
                 return 1
         elif args.verb == "serve-thrift":
             if args.testdata:

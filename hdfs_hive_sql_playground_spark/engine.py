@@ -43,6 +43,11 @@ class Engine:
     # temp views, like a stock multi-client HiveServer2 deployment.
     thrift_single_session: bool = True
     _spark: SparkSession | None = None
+    # Header-skipping external text tables the DDL shim overlays (see
+    # _intercept_ddl), by table name.
+    _text_shims: dict[str, dict[str, Any]] = dc_field(
+        default_factory=dict, init=False, repr=False
+    )
 
     # -- lifecycle (A27-A29) -------------------------------------------------
 
@@ -161,9 +166,6 @@ class Engine:
         df.createOrReplaceTempView(name)
 
     def _intercept_ddl(self, sql: str) -> DataFrame | None:
-        if not hasattr(self, "_text_shims"):
-            self._text_shims: dict[str, dict[str, Any]] = {}
-
         # Anchor every DDL pattern to the start of the trimmed statement:
         # a non-DDL statement that merely CONTAINS a matching fragment
         # (inside a string literal or comment) must not be intercepted.
@@ -187,7 +189,7 @@ class Engine:
             return self.spark.sql("SELECT 1 AS ok").limit(0)
 
         m = self._ADD_PART_RE.match(sql)
-        if m and m.group(1) in getattr(self, "_text_shims", {}):
+        if m and m.group(1) in self._text_shims:
             name, col, value, path = m.group(1), m.group(2), m.group(3), m.group(4)
             if self._catalog_is_hive():
                 # Qualified name bypasses the shim temp view so the
@@ -211,7 +213,7 @@ class Engine:
                 not dialect._in_literal(mm.start(), spans)
                 for mm in re.finditer(rf"\b{t}\b", sql, re.IGNORECASE)
             )
-            for t in getattr(self, "_text_shims", {})
+            for t in self._text_shims
         ):
             sql = self._CREATE_VIEW_RE.sub(
                 lambda mm: f"CREATE {mm.group(1) or ''}TEMPORARY VIEW {mm.group(2)}", sql, count=1

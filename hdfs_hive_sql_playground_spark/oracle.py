@@ -6,6 +6,10 @@ names, and an order-insensitive canonical rendering of every value. Exact
 string equality of canonical values is a strict predictor of the driver's
 value-hash match — floats must be bit-identical, which is why query outputs
 use DECIMAL for sums and explicit rounding elsewhere.
+
+:func:`check` is the one registry check (CLI ``validate``, the window
+preflight and the pytest gate all call it); :func:`compare` stays for
+ad-hoc SQL.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from dataclasses import dataclass, field
 import duckdb
 import pandas as pd
 
+from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
 from hdfs_hive_sql_playground_spark.tables import TABLES
 
 
@@ -78,8 +83,13 @@ class CompareResult:
     name: str
     ok: bool
     spark_rows: int
-    oracle_rows: int
+    # None: a rows-only check, the query has no oracle.
+    oracle_rows: int | None
     mismatches: list[str] = field(default_factory=list)
+
+    @property
+    def rows_only(self) -> bool:
+        return self.oracle_rows is None
 
     def report(self) -> str:
         status = "OK" if self.ok else "FAIL"
@@ -117,3 +127,17 @@ def compare(name: str, spark_df, oracle_sql: str, sf_dir: str) -> CompareResult:
         oracle_rows=len(o_rows),
         mismatches=mismatches,
     )
+
+
+def check(spark, spec, sf_dir: str) -> CompareResult:
+    """Run registry query ``spec`` and check it against its DuckDB oracle;
+    a query without one gets the driver's rows-only check (it must run;
+    the result is ``rows_only``). The caches the query tracked are released
+    whether it passes, fails or raises."""
+    try:
+        df = spec.fn(spark, sf_dir)
+        if spec.oracle is None:
+            return CompareResult(spec.name, ok=True, spark_rows=df.count(), oracle_rows=None)
+        return compare(spec.name, df, spec.oracle, sf_dir)
+    finally:
+        release_tracked_caches()

@@ -1,7 +1,6 @@
 """User-defined function surface (SURVEY §2 Tier B 'UDF/UDAF'), the fast
 way: Arrow-vectorized ``pandas_udf`` for scalar functions and grouped
-aggregates. Row-at-a-time Python UDFs are deliberately absent from every
-hot path (the only one in the repo is the opt-in ``field`` fallback).
+aggregates. Row-at-a-time Python UDFs are deliberately absent.
 
 UDFs are constructed lazily inside each query (pandas_udf type resolution
 needs an active SparkSession, and the registry imports at module scope).

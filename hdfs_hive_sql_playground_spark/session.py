@@ -26,16 +26,17 @@ def get_spark(
     app_name: str = "hdfs-hive-sql-playground-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    hive: bool = False,
     warehouse_dir: str | None = None,
     conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or fetch) a SparkSession with engine defaults.
+    """Create (or fetch) a SparkSession with engine defaults; ``conf``
+    overrides any default key by key.
 
-    ``hive=True`` enables a Hive metastore-backed catalog (embedded Derby),
-    mirroring the reference's HiveServer2 + Derby setup
-    (``playground.py:230-240``) — needed for Hive-format external text
-    tables with ``skip.header.line.count`` (``create_m33_raw_ext_tbl.hql:6``).
+    ``conf={"spark.sql.catalogImplementation": "hive"}`` (what
+    ``Builder.enableHiveSupport()`` sets) gives a Hive metastore-backed
+    catalog (embedded Derby), mirroring the reference's HiveServer2 + Derby
+    setup (``playground.py:230-240``); ``examples/run_hive_pipeline.py``
+    runs the reference's HQL that way.
     """
     cpus = default_cpus()
     builder = SparkSession.builder.appName(app_name)
@@ -91,8 +92,6 @@ def get_spark(
 
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
-    if hive:
-        builder = builder.enableHiveSupport()
     for key, value in (conf or {}).items():
         builder = builder.config(key, value)
 

@@ -25,9 +25,6 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-DERBY_DRIVER = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
-
-
 def export_jdbc(
     df: DataFrame,
     url: str,

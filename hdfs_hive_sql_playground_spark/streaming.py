@@ -407,17 +407,15 @@ def make_jdbc_batch_sink(
     table: str,
     num_partitions: int = 4,
     batchsize: int = 1000,
-    exactly_once: bool = True,
 ):
     """Build the foreachBatch sink used by :func:`export_stream_jdbc`.
 
-    With ``exactly_once=True`` each batch is stamped with its checkpointed
-    ``batch_id`` in a ``batch_stamp BIGINT`` column and the sink DELETEs its
-    own batch's rows before appending, so a microbatch replayed after a
-    failure converges to exactly-once target state (delivery itself is
-    at-least-once — foreachBatch's contract). The target table must carry
-    the ``batch_stamp`` column. With ``exactly_once=False`` the batch is
-    appended as-is: at-least-once, unmodified target schema."""
+    Each batch is stamped with its checkpointed ``batch_id`` in a
+    ``batch_stamp BIGINT`` column and the sink DELETEs its own batch's rows
+    before appending, so a microbatch replayed after a failure converges to
+    exactly-once target state (delivery itself is at-least-once —
+    foreachBatch's contract). The target table must carry the
+    ``batch_stamp`` column."""
     from hdfs_hive_sql_playground_spark.sources.jdbc import (
         export_jdbc,
         jdbc_ddl,
@@ -425,20 +423,19 @@ def make_jdbc_batch_sink(
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if exactly_once:
-            batch_df = batch_df.withColumn("batch_stamp", F.lit(batch_id).cast("bigint"))
-            # Only a not-yet-created target may skip the replay DELETE (the
-            # append below creates the table, batch_stamp included).  Any
-            # OTHER DELETE failure — connection drop, lock timeout,
-            # permissions — must propagate and fail the microbatch, else a
-            # replayed batch whose DELETE silently failed would append
-            # duplicates: the exact failure this sink exists to prevent.
-            if jdbc_table_exists(batch_df.sparkSession, url, table):
-                jdbc_ddl(
-                    batch_df.sparkSession,
-                    url,
-                    f"DELETE FROM {table} WHERE batch_stamp = {int(batch_id)}",
-                )
+        batch_df = batch_df.withColumn("batch_stamp", F.lit(batch_id).cast("bigint"))
+        # Only a not-yet-created target may skip the replay DELETE (the
+        # append below creates the table, batch_stamp included).  Any
+        # OTHER DELETE failure — connection drop, lock timeout,
+        # permissions — must propagate and fail the microbatch, else a
+        # replayed batch whose DELETE silently failed would append
+        # duplicates: the exact failure this sink exists to prevent.
+        if jdbc_table_exists(batch_df.sparkSession, url, table):
+            jdbc_ddl(
+                batch_df.sparkSession,
+                url,
+                f"DELETE FROM {table} WHERE batch_stamp = {int(batch_id)}",
+            )
         export_jdbc(
             batch_df, url, table, num_partitions=num_partitions, batchsize=batchsize
         )
@@ -453,19 +450,17 @@ def export_stream_jdbc(
     checkpoint_dir: str,
     num_partitions: int = 4,
     batchsize: int = 1000,
-    exactly_once: bool = True,
 ):
     """Continuous JDBC export: the streaming version of the Sqoop bulk
     export (A19) — each microbatch lands via the same parallel batched
     ``df.write.jdbc`` path (:func:`..sources.jdbc.export_jdbc`). The
-    default sink is idempotent per checkpointed batch id (delete-then-
+    sink is idempotent per checkpointed batch id (delete-then-
     append keyed by a ``batch_stamp`` column — see
     :func:`make_jdbc_batch_sink`), so retried microbatches do not
     duplicate rows. Returns the started StreamingQuery (caller
     awaits/stops)."""
     sink = make_jdbc_batch_sink(
-        url, table, num_partitions=num_partitions, batchsize=batchsize,
-        exactly_once=exactly_once,
+        url, table, num_partitions=num_partitions, batchsize=batchsize
     )
     return (
         stream_df.writeStream.foreachBatch(sink)

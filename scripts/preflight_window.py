@@ -1,13 +1,14 @@
 """Pre-flight the driver's correctness window exactly as the driver runs
-it: a PLAIN SparkSession (none of session.py's defaults), each of the
-first 50 registry queries executed and hash-compared against its DuckDB
-oracle at sf0.01.
+it: a PLAIN SparkSession (none of session.py's defaults), the entry smoke
+query, then each window query checked against its DuckDB oracle.
 
 Run before each round's end to know CORRECTNESS_r{N} in advance::
 
-    python scripts/preflight_window.py [sf_dir] [n_queries]
+    python scripts/preflight_window.py [sf_dir] [query ...]
 
-Exit code 0 iff every oracle-eligible window query matches.
+With no query names it checks the first 50 registry entries (the driver
+window). Prints the ``cli validate`` lines; exit code 0 iff every named
+query passes.
 """
 
 from __future__ import annotations
@@ -21,9 +22,12 @@ sys.path.insert(0, REPO)
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 50
 
     from pyspark.sql import SparkSession
+
+    import __spark_entry__
+    from hdfs_hive_sql_playground_spark.cli import validate
+    from hdfs_hive_sql_playground_spark.queries import all_queries
 
     spark = (
         SparkSession.builder.appName("window-preflight")
@@ -31,31 +35,11 @@ def main() -> int:
         .config("spark.sql.shuffle.partitions", "16")
         .getOrCreate()
     )
-    from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
-    from hdfs_hive_sql_playground_spark.oracle import compare
-    from hdfs_hive_sql_playground_spark.queries import all_queries
-
-    specs = all_queries()
-    fails: list[tuple[str, str]] = []
-    for name in list(specs)[:n]:
-        spec = specs[name]
-        release_tracked_caches()
-        try:
-            if spec.oracle is None:
-                rows = spec.fn(spark, sf_dir).count()
-                print(f"ROWSONLY {name} rows={rows}", flush=True)
-                continue
-            r = compare(name, spec.fn(spark, sf_dir), spec.oracle, sf_dir)
-            print(("PASS" if r.ok else "FAIL"), name, flush=True)
-            if not r.ok:
-                fails.append((name, r.report()))
-        except Exception as e:  # noqa: BLE001 - report and continue
-            print("ERROR", name, str(e)[:300], flush=True)
-            fails.append((name, str(e)[:300]))
-    print(f"PREFLIGHT_DONE window={n} fails={len(fails)}")
-    for name, report in fails:
-        print(name, report)
-    spark.stop()
+    try:
+        print(f"ENTRY rows={__spark_entry__.entry(spark).count()}", flush=True)
+        fails = validate(spark, sys.argv[2:] or list(all_queries())[:50], sf_dir)
+    finally:
+        spark.stop()
     return 1 if fails else 0
 
 

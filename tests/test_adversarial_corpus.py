@@ -19,7 +19,7 @@ import os
 
 import pytest
 
-from hdfs_hive_sql_playground_spark.oracle import compare
+from hdfs_hive_sql_playground_spark.oracle import check
 from hdfs_hive_sql_playground_spark.queries import all_queries
 
 SPECS = all_queries()
@@ -162,10 +162,8 @@ def adversarial_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", ADVERSARIAL_QUERIES)
 def test_adversarial_corpus_cross_engine(spark, adversarial_dir, name):
-    spec = SPECS[name]
-    assert spec.oracle is not None
-    r = compare(name, spec.fn(spark, adversarial_dir), spec.oracle, adversarial_dir)
-    assert r.ok, r.report()
+    r = check(spark, SPECS[name], adversarial_dir)
+    assert r.ok and not r.rows_only, r.report()
 
 
 def test_fixture_tokenizers_agree(spark, sf_dir):
@@ -342,12 +340,8 @@ def adversarial_events_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", EVENT_QUERIES)
 def test_adversarial_events_cross_engine(spark, adversarial_events_dir, name):
-    spec = SPECS[name]
-    assert spec.oracle is not None
-    r = compare(
-        name, spec.fn(spark, adversarial_events_dir), spec.oracle, adversarial_events_dir
-    )
-    assert r.ok, r.report()
+    r = check(spark, SPECS[name], adversarial_events_dir)
+    assert r.ok and not r.rows_only, r.report()
 
 
 # Warehouse/MERGE conventions (round 9): the upsert and SCD2 operators
@@ -422,15 +416,8 @@ def adversarial_warehouse_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", WAREHOUSE_QUERIES)
 def test_adversarial_warehouse_cross_engine(spark, adversarial_warehouse_dir, name):
-    spec = SPECS[name]
-    assert spec.oracle is not None
-    r = compare(
-        name,
-        spec.fn(spark, adversarial_warehouse_dir),
-        spec.oracle,
-        adversarial_warehouse_dir,
-    )
-    assert r.ok, r.report()
+    r = check(spark, SPECS[name], adversarial_warehouse_dir)
+    assert r.ok and not r.rows_only, r.report()
 
 
 # Multimodal payload conventions (round 9): the binary-asset plumbing
@@ -487,15 +474,8 @@ def adversarial_assets_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", MULTIMODAL_QUERIES)
 def test_adversarial_multimodal_cross_engine(spark, adversarial_assets_dir, name):
-    spec = SPECS[name]
-    assert spec.oracle is not None
-    r = compare(
-        name,
-        spec.fn(spark, adversarial_assets_dir),
-        spec.oracle,
-        adversarial_assets_dir,
-    )
-    assert r.ok, r.report()
+    r = check(spark, SPECS[name], adversarial_assets_dir)
+    assert r.ok and not r.rows_only, r.report()
 
 
 # The r8 strict-xfail zero-norm divergence is FIXED (round 9): every
@@ -551,15 +531,8 @@ def adversarial_embeddings_dir(spark, tmp_path_factory):
 def test_adversarial_embeddings_cross_engine(
     spark, adversarial_embeddings_dir, name
 ):
-    spec = SPECS[name]
-    assert spec.oracle is not None
-    r = compare(
-        name,
-        spec.fn(spark, adversarial_embeddings_dir),
-        spec.oracle,
-        adversarial_embeddings_dir,
-    )
-    assert r.ok, r.report()
+    r = check(spark, SPECS[name], adversarial_embeddings_dir)
+    assert r.ok and not r.rows_only, r.report()
 
 
 def test_text_recipe_agrees_on_random_unicode_sweep(spark):

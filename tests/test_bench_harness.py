@@ -33,7 +33,9 @@ def _fake_run(stdout="", returncode=0, raises=None, seen=None):
 
 @pytest.fixture
 def no_settle(monkeypatch):
-    """The runner settles the parent JVM for a second before spawning."""
+    """The runner drains and settles the parent JVM before spawning; these
+    tests have no JVM."""
+    monkeypatch.setattr(bench, "_quiesce", lambda spark: None)
     monkeypatch.setattr(bench.time, "sleep", lambda s: None)
 
 
@@ -103,6 +105,7 @@ def _measure(monkeypatch, children, specs=None):
 
     if children is not None:
         monkeypatch.setattr(bench, "_run_bench_child", child)
+    monkeypatch.setattr(bench, "_quiesce", lambda spark: None)
     monkeypatch.setattr(bench, "_bench_m33", headlines)
     monkeypatch.setattr(bench, "_noop", lambda df: None)
     monkeypatch.setattr(

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hdfs_hive_sql_playground_spark.oracle import compare
+from hdfs_hive_sql_playground_spark.oracle import check
 from hdfs_hive_sql_playground_spark.queries import all_queries
 from hdfs_hive_sql_playground_spark.queries import text as text_mod
 
@@ -22,31 +22,27 @@ SPECS = all_queries()
 @pytest.mark.parametrize("width", [37, 64, 500])
 def test_q112_multibucket_exact(spark, sf_dir, width, monkeypatch):
     monkeypatch.setattr(text_mod, "CUMSUM_BUCKET_WIDTH", width)
-    spec = SPECS["q112_sequence_packing"]
-    result = compare("q112_mb", spec.fn(spark, sf_dir), spec.oracle, sf_dir)
+    result = check(spark, SPECS["q112_sequence_packing"], sf_dir)
     assert result.ok, result.report()
 
 
 @pytest.mark.parametrize("width", [37, 128])
 def test_q115_multibucket_exact(spark, sf_dir, width, monkeypatch):
     monkeypatch.setattr(text_mod, "CUMSUM_BUCKET_WIDTH", width)
-    spec = SPECS["q115_domain_mix_sample"]
-    result = compare("q115_mb", spec.fn(spark, sf_dir), spec.oracle, sf_dir)
+    result = check(spark, SPECS["q115_domain_mix_sample"], sf_dir)
     assert result.ok, result.report()
 
 
 @pytest.mark.parametrize("prefix", [1, 2])
 def test_q94_multibucket_exact(spark, sf_dir, prefix, monkeypatch):
     monkeypatch.setattr(text_mod, "MD5_BUCKET_PREFIX", prefix)
-    spec = SPECS["q94_stratified_quota"]
-    result = compare("q94_mb", spec.fn(spark, sf_dir), spec.oracle, sf_dir)
+    result = check(spark, SPECS["q94_stratified_quota"], sf_dir)
     assert result.ok, result.report()
 
 
 def test_q99_multibucket_exact(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(text_mod, "MD5_BUCKET_PREFIX", 1)
-    spec = SPECS["q99_curation_pipeline"]
-    result = compare("q99_mb", spec.fn(spark, sf_dir), spec.oracle, sf_dir)
+    result = check(spark, SPECS["q99_curation_pipeline"], sf_dir)
     assert result.ok, result.report()
 
 
@@ -83,8 +79,7 @@ def test_q120_multibucket_exact(spark, sf_dir, width, monkeypatch):
     cross-score broadcast offsets; shrinking the width must leave the
     global cum_tok bit-identical to the oracle's single ORDER BY window."""
     monkeypatch.setattr(text_mod, "CUMSUM_BUCKET_WIDTH", width)
-    spec = SPECS["q120_budget_select"]
-    result = compare("q120_mb", spec.fn(spark, sf_dir), spec.oracle, sf_dir)
+    result = check(spark, SPECS["q120_budget_select"], sf_dir)
     assert result.ok, result.report()
 
 
@@ -96,8 +91,7 @@ def test_q138_multibucket_exact(spark, sf_dir, width, monkeypatch):
     hash-uniform), and the two-pass rank must stay bit-identical to the
     single-window oracle at every width."""
     monkeypatch.setattr(text_mod, "WSAMPLE_KEY_BUCKET_WIDTH", width)
-    spec = SPECS["q138_weighted_sample"]
-    result = compare("q138_mb", spec.fn(spark, sf_dir), spec.oracle, sf_dir)
+    result = check(spark, SPECS["q138_weighted_sample"], sf_dir)
     assert result.ok, result.report()
 
 

@@ -226,12 +226,9 @@ def test_cli_validate_helper_reports_pass_rowsonly_unknown(spark, sf_dir, capsys
     rows-only-by-design query prints ROWSONLY, an unknown name prints
     UNKNOWN and is the only failure returned."""
     from hdfs_hive_sql_playground_spark import cli
-    from hdfs_hive_sql_playground_spark.engine import Engine
-    from hdfs_hive_sql_playground_spark.session import get_spark
 
-    eng = Engine(_spark=get_spark())  # shared test session; no start()/stop()
-    fails = cli._validate(
-        eng,
+    fails = cli.validate(
+        spark,
         ["q80_exact_dedup", "q06_approx_distinct", "no_such_query"],
         sf_dir,
     )

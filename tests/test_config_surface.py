@@ -67,6 +67,18 @@ def test_bench_reads_only_its_documented_knobs():
     }
 
 
+def test_examples_read_no_settings():
+    """Examples run the package as a user would: any knob they need is a
+    CLI verb or an argument, not an environment variable of their own."""
+    examples = os.path.join(REPO, "examples")
+    found = {
+        name: _env_names(os.path.join(examples, name))
+        for name in os.listdir(examples)
+        if name.endswith(".py")
+    }
+    assert not any(found.values()), found
+
+
 def test_scanner_sees_every_read_form(tmp_path):
     src = tmp_path / "probe.py"
     src.write_text(

@@ -2,7 +2,7 @@
 skip + persisted view + Hive CTAS) must run through the engine verbatim
 (modulo the three documented deviations in examples/hive/m33_pipeline.hql).
 
-Runs in a subprocess: enableHiveSupport can't be added to the already-
+Runs in a subprocess: the Hive catalog can't be added to the already-
 running test session, and the Derby metastore wants its own JVM."""
 
 from __future__ import annotations
@@ -26,23 +26,6 @@ def test_reference_hql_pipeline_end_to_end(tmp_path):
     assert "HIVE_PIPELINE_OK" in proc.stdout, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "catalog partitions: ['peculiarity=cp', 'peculiarity=nocp']" in proc.stdout
     assert "view schema matches m33.m33_schem" in proc.stdout
+    assert "hive format roundtrips passed: sequencefile, rcfile, avro" in proc.stdout
     assert proc.returncode == 0
 
-
-def test_hive_format_roundtrips_in_pipeline():
-    """Covered by the pipeline run above; this asserts the marker separately
-    so a format regression is named, not folded into the generic OK."""
-    # (The pipeline test already ran the subprocess; rerunning for isolation.)
-    import tempfile
-
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "examples", "run_hive_pipeline.py"),
-         os.path.join(REPO, "data", "m33_mini"), tempfile.mkdtemp(prefix="hhsp_fmt_")],
-        capture_output=True,
-        text=True,
-        timeout=420,
-        cwd=REPO,
-    )
-    assert "hive format roundtrips passed: sequencefile, rcfile, avro" in proc.stdout, (
-        proc.stdout[-2000:] + proc.stderr[-2000:]
-    )

@@ -5,32 +5,17 @@ from __future__ import annotations
 
 import pytest
 
-from hdfs_hive_sql_playground_spark.oracle import compare
-from hdfs_hive_sql_playground_spark.queries import all_queries
+from hdfs_hive_sql_playground_spark import caching
+from hdfs_hive_sql_playground_spark.oracle import check, compare
+from hdfs_hive_sql_playground_spark.queries import QuerySpec, all_queries
 
 SPECS = all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_matches_oracle(spark, sf_dir, name):
-    from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
-
-    spec = SPECS[name]
-    try:
-        df = spec.fn(spark, sf_dir)
-        assert df is not None
-        if spec.oracle is None:
-            # Rows-only check (non-SQL-expressible operator): must run and
-            # produce a stable schema.
-            n = df.count()
-            assert n >= 0
-            return
-        result = compare(name, df, spec.oracle, sf_dir)
-        assert result.ok, result.report()
-    finally:
-        # multi-consumer queries persist intermediates; don't let 134
-        # parametrized runs accumulate them in one session
-        release_tracked_caches()
+    result = check(spark, SPECS[name], sf_dir)
+    assert result.ok, result.report()
 
 
 def test_driver_window_composition():
@@ -59,3 +44,34 @@ def test_compare_rejects_wrong_results(spark, sf_dir):
         "SELECT CAST(1 AS BIGINT) AS x UNION ALL SELECT CAST(1 AS BIGINT)",
         sf_dir,
     ).ok
+
+
+def _spec(fn, oracle):
+    return QuerySpec(name="meta_check", fn=fn, oracle=oracle, doc="")
+
+
+def test_check_rows_only_spec_is_marked_and_releases(spark, sf_dir):
+    def fn(spark, sf_dir):
+        return caching.track_persist(spark.range(3))
+
+    result = check(spark, _spec(fn, None), sf_dir)
+    assert result.ok and result.rows_only, result.report()
+    assert result.spark_rows == 3
+    assert caching._TRACKED == []
+
+
+def test_check_rejects_wrong_oracle(spark, sf_dir):
+    def fn(spark, sf_dir):
+        return spark.sql("SELECT CAST(1 AS BIGINT) AS x")
+
+    result = check(spark, _spec(fn, "SELECT CAST(2 AS BIGINT) AS x"), sf_dir)
+    assert not result.ok and not result.rows_only
+
+
+def test_check_releases_caches_when_the_query_raises(spark, sf_dir):
+    def fn(spark, sf_dir):
+        return caching.track_persist(spark.range(3).selectExpr("raise_error('boom') AS x"))
+
+    with pytest.raises(Exception, match="boom"):
+        check(spark, _spec(fn, "SELECT 1 AS x"), sf_dir)
+    assert caching._TRACKED == []
