@@ -25,11 +25,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from hdfs_hive_sql_playground_spark.engine import Engine  # noqa: E402
-from hdfs_hive_sql_playground_spark.thrift import WireClient  # noqa: E402
+from hdfs_hive_sql_playground_spark.thrift import MULTI_SESSION_CONF, WireClient  # noqa: E402
 
 
 def main() -> int:
-    engine = Engine(app_name="thrift-multi", thrift_single_session=False).start()
+    engine = Engine(app_name="thrift-multi", conf=MULTI_SESSION_CONF).start()
     try:
         server = engine.serve_thrift()
         print(f"thrift server listening (multi-session): {server.url}")

@@ -24,11 +24,9 @@ from pyspark.storagelevel import StorageLevel
 _TRACKED: list[DataFrame] = []
 
 
-def track_persist(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
-    """Persist ``df`` and register it for later release."""
-    df.persist(level)
+def track_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) and register it for later release."""
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED.append(df)
     return df
 

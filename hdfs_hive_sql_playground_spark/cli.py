@@ -28,6 +28,7 @@ import argparse
 import json
 import sys
 
+from hdfs_hive_sql_playground_spark import dialect
 from hdfs_hive_sql_playground_spark.engine import Engine
 
 
@@ -45,10 +46,11 @@ def _show_wire(cols: list, rows: list, n: int) -> None:
 
 
 def _sql_shell(eng, n: int = 20, url: str | None = None) -> None:
-    """The sql-cli loop: buffer stdin until a literal-aware top-level ';'
-    completes a statement, execute it, keep going. A statement that fails
-    prints its error class/message and the shell survives (beeline
-    semantics). On EOF any non-empty remainder runs as a final statement.
+    """The sql-cli loop: buffer stdin until a top-level ';' (as
+    :func:`..dialect.split` lexes it) completes a statement, execute it,
+    keep going. A statement that fails prints its error class/message and
+    the shell survives (beeline semantics). On EOF any non-empty remainder
+    runs as a final statement.
 
     With ``url`` the shell is a true beeline analog: ONE persistent
     HiveServer2 wire session (temp views / SET state survive across
@@ -65,15 +67,15 @@ def _sql_shell(eng, n: int = 20, url: str | None = None) -> None:
 
         # Retargeting must close the previous wire session first, or each
         # !connect leaks a server-side HiveServer2 session (plus its temp
-        # views / SET state) for the life of the server. Best-effort: a
-        # half-dead old session must not block the new connection
-        # (survive-on-error, the shell's standing contract).
+        # views / SET state) for the life of the server. A half-dead old
+        # session must not block the new connection: its close() failure
+        # is reported and the connect goes on.
         old = state["client"]
         if old is not None:
             try:
                 old.close()
-            except Exception:  # noqa: BLE001 — old session may already be dead
-                pass
+            except Exception as e:  # noqa: BLE001 — old session may already be dead
+                print(f"WARN {type(e).__name__}: closing {state['url']}: {e}")
         state["client"] = WireClient(eng.spark, to_url)
         state["url"] = to_url
 
@@ -82,8 +84,6 @@ def _sql_shell(eng, n: int = 20, url: str | None = None) -> None:
 
     def run(stmt: str) -> None:
         if state["client"] is not None:
-            from hdfs_hive_sql_playground_spark import dialect
-
             _show_wire(*state["client"].sql_with_names(dialect.rewrite(stmt)), n)
         else:
             _show(eng.exec_sql(stmt), n)
@@ -137,44 +137,22 @@ def _sql_shell(eng, n: int = 20, url: str | None = None) -> None:
     buf = ""
     while True:
         if tty:
-            sys.stdout.write("hhsp> " if not buf.strip() else "....> ")
+            sys.stdout.write("....> " if buf else "hhsp> ")
             sys.stdout.flush()
         line = sys.stdin.readline()
         if not line:  # EOF
             break
-        if not buf.strip() and line.strip().startswith("!"):
+        if not buf and line.strip().startswith("!"):
             if bang(line.strip()):
                 return
             continue
-        # Mirror split_statements: full-line -- comments never enter the
-        # buffer. Scanning literal spans over raw comment text would let an
-        # unbalanced quote in a comment ("-- don't") mark everything after
-        # it as in-literal, so no statement would complete until EOF.
-        if line.lstrip().startswith("--"):
-            continue
-        buf += line
-        if ";" not in line:
-            continue
-        # Everything up to the last TOP-LEVEL ';' is complete; the raw
-        # remainder (not a re-split statement — that would drop newlines
-        # inside a multi-line string literal) stays buffered.
-        from hdfs_hive_sql_playground_spark import dialect
-
-        spans = dialect._scan_literal_spans(buf)
-        last = max(
-            (i for i, ch in enumerate(buf) if ch == ";" and not dialect._in_literal(i, spans)),
-            default=-1,
-        )
-        if last < 0:  # every ';' on this line sits inside a literal
-            continue
-        complete, buf = buf[: last + 1], buf[last + 1 :]
-        for stmt in eng.split_statements(complete):
+        # Every statement the line completes runs; the open tail (code only,
+        # with any multi-line literal intact) stays buffered.
+        stmts, buf = dialect.split(buf + line)
+        for stmt in stmts:
             _run_shell_stmt(run, stmt)
-    # EOF remainder: split like any other input — the tail may hold several
-    # statements (e.g. the final line lacked a trailing ';' after ones that
-    # had them mid-line), and running it raw would execute them as one.
-    for stmt in eng.split_statements(buf):
-        _run_shell_stmt(run, stmt)
+    if buf:  # EOF: the open tail runs as the final statement
+        _run_shell_stmt(run, buf.strip())
 
 
 def validate(spark, names: list[str], sf_dir: str) -> list[str]:

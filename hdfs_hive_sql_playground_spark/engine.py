@@ -28,6 +28,8 @@ from hdfs_hive_sql_playground_spark.tables import register_all
 
 log = logging.getLogger(__name__)
 
+_LOG_CONF_KEYS = 20  # effective-config entries Engine.logs reports
+
 
 @dataclass
 class Engine:
@@ -36,12 +38,12 @@ class Engine:
     app_name: str = "hdfs-hive-sql-playground-spark"
     master: str | None = None
     warehouse_dir: str = DEFAULT_WAREHOUSE
+    # Session confs over the engine's defaults. The Thrift topology is one
+    # of them: by default every wire client shares THIS engine session (the
+    # reference's one-engine hs-node layout); conf=MULTI_SESSION_CONF gives
+    # each wire connection its own isolated session with private temp
+    # views, like a stock multi-client HiveServer2 deployment.
     conf: dict[str, str] = dc_field(default_factory=dict)
-    # Thrift topology (static, build-time): True = every wire client shares
-    # THIS engine session (the reference's one-engine hs-node layout);
-    # False = each wire connection is its own isolated session with private
-    # temp views, like a stock multi-client HiveServer2 deployment.
-    thrift_single_session: bool = True
     _spark: SparkSession | None = None
     # Header-skipping external text tables the DDL shim overlays (see
     # _intercept_ddl), by table name.
@@ -52,20 +54,16 @@ class Engine:
     # -- lifecycle (A27-A29) -------------------------------------------------
 
     def start(self) -> "Engine":
-        from hdfs_hive_sql_playground_spark.thrift import (
-            MULTI_SESSION_CONF,
-            SINGLE_SESSION_CONF,
-        )
+        from hdfs_hive_sql_playground_spark.thrift import SINGLE_SESSION_CONF
 
         # singleSession is static (build-time): harmless when no Thrift
         # server is started, decides wire-client session topology when one
-        # is (serve_thrift).
-        topo = SINGLE_SESSION_CONF if self.thrift_single_session else MULTI_SESSION_CONF
+        # is (serve_thrift); self.conf may override it.
         self._spark = get_spark(
             app_name=self.app_name,
             master=self.master,
             warehouse_dir=self.warehouse_dir,
-            conf={**topo, **self.conf},
+            conf={**SINGLE_SESSION_CONF, **self.conf},
         )
         return self
 
@@ -104,7 +102,7 @@ class Engine:
         report["healthy"] = report["warehouse_writable"] and sc.defaultParallelism > 0
         return report
 
-    def logs(self, n_conf: int = 20) -> dict[str, Any]:
+    def logs(self) -> dict[str, Any]:
         """``print-hadoop-logs`` analog (A30): with no per-node daemon logs
         to cat, surface the session's execution history (job/stage counts
         from the status tracker) and the effective config."""
@@ -122,7 +120,7 @@ class Engine:
             "n_jobs_run": len(job_ids),
             "active_jobs": len(tracker.getActiveJobsIds() or []),
             "active_stages": len(tracker.getActiveStageIds() or []),
-            "conf": dict(list(interesting.items())[:n_conf]),
+            "conf": dict(list(interesting.items())[:_LOG_CONF_KEYS]),
         }
 
     # -- SQL pass-through with dialect shims (Tier B; A13, A26) --------------
@@ -207,13 +205,10 @@ class Engine:
             return self.spark.sql("SELECT 1 AS ok").limit(0)
 
         m = self._CREATE_VIEW_RE.match(sql)
-        spans = dialect._scan_literal_spans(sql)
-        if m and any(
-            any(
-                not dialect._in_literal(mm.start(), spans)
-                for mm in re.finditer(rf"\b{t}\b", sql, re.IGNORECASE)
-            )
-            for t in self._text_shims
+        if m and self._text_shims and re.search(
+            rf"\b(?:{'|'.join(map(re.escape, self._text_shims))})\b",
+            dialect.lex(sql).mask,
+            re.IGNORECASE,
         ):
             sql = self._CREATE_VIEW_RE.sub(
                 lambda mm: f"CREATE {mm.group(1) or ''}TEMPORARY VIEW {mm.group(2)}", sql, count=1
@@ -246,21 +241,12 @@ class Engine:
 
     @staticmethod
     def split_statements(text: str) -> list[str]:
-        """Split a ;-separated SQL script into statements. Full-line ``--``
-        comments are stripped before splitting, and the split is
-        literal-aware: a ';' inside a single-quoted string is part of the
-        statement, not a separator. Shared by :meth:`exec_file` and the
+        """Split a SQL script into statements at each top-level ';' (the
+        lexical rules are :mod:`..dialect`'s); an unterminated last
+        statement comes last. Shared by :meth:`exec_file` and the
         ``sql-cli`` shell."""
-        lines = [ln for ln in text.splitlines() if not ln.lstrip().startswith("--")]
-        text = "\n".join(lines)
-        spans = dialect._scan_literal_spans(text)
-        stmts, start = [], 0
-        for i, ch in enumerate(text):
-            if ch == ";" and not dialect._in_literal(i, spans):
-                stmts.append(text[start:i])
-                start = i + 1
-        stmts.append(text[start:])
-        return [s.strip() for s in stmts if s.strip()]
+        stmts, tail = dialect.split(text)
+        return [*stmts, tail.strip()] if tail else stmts
 
     def exec_file(self, path: str) -> list[DataFrame]:
         """``exec-hive-file`` analog: run each ;-terminated statement

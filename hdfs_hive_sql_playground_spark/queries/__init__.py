@@ -11,7 +11,8 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -24,6 +25,19 @@ class QuerySpec:
 
 
 REGISTRY: dict[str, QuerySpec] = {}
+
+
+def exact_cents(name: str) -> Column:
+    """Exact integer cents of a 2-decimal money column.
+
+    Money outputs are exposed as BIGINT cents rather than DECIMAL: both
+    engines then produce int64 with identical values, so the driver's
+    value-hash can't be tripped by decimal scale metadata, scientific
+    notation, or HALF_UP-vs-HALF_EVEN differences when narrowing a sum's
+    scale (the round-1 q01/q10/q12 failure mode). The matching oracle
+    fragment is ``CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT)``.
+    """
+    return (F.col(name).cast("decimal(18,2)") * 100).cast("long")
 
 
 def register(name: str, oracle: str | None, doc: str = "", bench: bool = False):

@@ -21,14 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hdfs_hive_sql_playground_spark.queries import register
+from hdfs_hive_sql_playground_spark.queries import exact_cents, register
 from hdfs_hive_sql_playground_spark.tables import load
 
 _CENTS_SQL = "CAST(CAST({col} AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _cents(name: str):
-    return (F.col(name).cast("decimal(18,2)") * 100).cast("long")
 
 
 @register(
@@ -96,7 +92,7 @@ def q18_top_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "c_name",
             "o_orderkey",
-            _cents("o_totalprice").alias("totalprice_c"),
+            exact_cents("o_totalprice").alias("totalprice_c"),
             "sum_qty",
         )
     )
@@ -118,7 +114,7 @@ def q18_top_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q24_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(_cents("o_totalprice"))
+    w = Window.partitionBy("o_orderpriority").orderBy(exact_cents("o_totalprice"))
     return o.select(
         "o_orderkey",
         "o_orderpriority",
@@ -473,13 +469,13 @@ def q38_nth_value_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_orderpriority")
-        .orderBy(_cents("o_totalprice").desc(), F.col("o_orderkey"))
+        .orderBy(exact_cents("o_totalprice").desc(), F.col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return o.select(
         "o_orderkey",
         "o_orderpriority",
-        F.nth_value(_cents("o_totalprice"), 2).over(w).alias("second_price_c"),
+        F.nth_value(exact_cents("o_totalprice"), 2).over(w).alias("second_price_c"),
         F.nth_value("o_orderkey", 3).over(w).alias("third_key"),
     )
 

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hdfs_hive_sql_playground_spark.queries import register
+from hdfs_hive_sql_playground_spark.queries import exact_cents, register
 from hdfs_hive_sql_playground_spark.tables import load
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min in microseconds
@@ -105,7 +105,7 @@ def q61_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(
-                F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long")).cast("double")
+                F.sum(exact_cents("value")).cast("double")
                 / (F.count(F.lit(1)) * 100.0),
                 6,
             ).alias("avg_value"),
@@ -372,7 +372,7 @@ def q66_range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q67_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    cents = exact_cents("value")
     minute = ev.groupBy(
         F.date_trunc("minute", "ts").alias("minute"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("sum_value_c"))

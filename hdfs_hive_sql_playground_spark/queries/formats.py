@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_hive_sql_playground_spark.queries import register
+from hdfs_hive_sql_playground_spark.queries import exact_cents, register
 from hdfs_hive_sql_playground_spark.sinks import DEFAULT_WAREHOUSE, write_range_layout
 from hdfs_hive_sql_playground_spark.sources.text import data_files
 from hdfs_hive_sql_playground_spark.tables import load
@@ -47,9 +47,7 @@ def _subset(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _agg(df: DataFrame) -> DataFrame:
     return df.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")).alias(
-            "sum_price_c"
-        ),
+        F.sum(exact_cents("l_extendedprice")).alias("sum_price_c"),
     )
 
 
@@ -145,9 +143,7 @@ def q78_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")).alias(
-                "sum_price_c"
-            ),
+            F.sum(exact_cents("l_extendedprice")).alias("sum_price_c"),
         )
     )
 
@@ -217,7 +213,7 @@ def q110_range_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "event_type",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("value_c"),
+        exact_cents("value").alias("value_c"),
     )
 
 
@@ -264,9 +260,7 @@ def q144_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("k"),
         F.col("l_linenumber").alias("ln"),
         F.col("l_returnflag").alias("flag"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        exact_cents("l_extendedprice").alias("cents"),
     )
     good = F.concat_ws("|", "k", "ln", "flag", "cents")
     line = (

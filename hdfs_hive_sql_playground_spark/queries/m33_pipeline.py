@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hdfs_hive_sql_playground_spark.m33 import DEFAULT_M33_DIR, M33_SCHEMA, m33_schem
-from hdfs_hive_sql_playground_spark.queries import register
+from hdfs_hive_sql_playground_spark.queries import exact_cents, register
 
 # DuckDB rendition of the typed view (single source for all three oracles).
 _ORACLE_VIEW = f"""
@@ -58,7 +58,7 @@ def _schem_agg(df: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.min("wavelength").alias("min_wl"),
         F.max("wavelength").alias("max_wl"),
-        F.sum((F.col("flam").cast("decimal(18,2)") * 100).cast("long")).alias("sum_flam_c"),
+        F.sum(exact_cents("flam")).alias("sum_flam_c"),
     )
 
 

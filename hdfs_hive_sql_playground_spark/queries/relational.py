@@ -7,7 +7,7 @@ Reference basis: the pass-through HiveQL surface reachable via
 ``playground.py:745-750`` (``exec-hive-query``). Each query here has a
 DuckDB oracle; numeric outputs are exact integer cents (BIGINT) for sums
 and exact-sum-derived 6-dp doubles for averages, so both engines hash
-identically (see ``_cents``/``_avg6``).
+identically (see ``exact_cents``/``_avg6``).
 
 Scale notes (100 TB design point):
 - Dimension joins (region/nation/supplier/part at TPC-H proportions) are
@@ -27,21 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hdfs_hive_sql_playground_spark.dialect import field
-from hdfs_hive_sql_playground_spark.queries import register
+from hdfs_hive_sql_playground_spark.queries import exact_cents, register
 from hdfs_hive_sql_playground_spark.tables import load
-
-
-def _cents(name: str):
-    """Exact integer cents of a 2-decimal money column.
-
-    Money aggregates are exposed as BIGINT cents rather than DECIMAL: both
-    engines then produce int64 with identical values, so the driver's
-    value-hash can't be tripped by decimal scale metadata, scientific
-    notation, or HALF_UP-vs-HALF_EVEN differences when narrowing a sum's
-    scale (the round-1 q01/q10/q12 failure mode). The matching oracle
-    fragment is ``CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT)``.
-    """
-    return (F.col(name).cast("decimal(18,2)") * 100).cast("long")
 
 
 def _avg6(cents_sum, divisor):
@@ -88,14 +75,14 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(_cents("l_quantity")).alias("sum_qty_c"),
-            F.sum(_cents("l_extendedprice")).alias("sum_base_price_c"),
-            F.sum(_cents("l_extendedprice") * (100 - _cents("l_discount"))).alias(
+            F.sum(exact_cents("l_quantity")).alias("sum_qty_c"),
+            F.sum(exact_cents("l_extendedprice")).alias("sum_base_price_c"),
+            F.sum(exact_cents("l_extendedprice") * (100 - exact_cents("l_discount"))).alias(
                 "sum_disc_price_e4"
             ),
-            _avg6(F.sum(_cents("l_quantity")), n * 100.0).alias("avg_qty"),
-            _avg6(F.sum(_cents("l_extendedprice")), n * 100.0).alias("avg_price"),
-            _avg6(F.sum(_cents("l_discount")), n * 100.0).alias("avg_disc"),
+            _avg6(F.sum(exact_cents("l_quantity")), n * 100.0).alias("avg_qty"),
+            _avg6(F.sum(exact_cents("l_extendedprice")), n * 100.0).alias("avg_price"),
+            _avg6(F.sum(exact_cents("l_discount")), n * 100.0).alias("avg_disc"),
             n.alias("count_order"),
         )
     )
@@ -150,7 +137,7 @@ def q03_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping("l_returnflag").cast("int").alias("g_rf"),
             F.grouping("l_linestatus").cast("int").alias("g_ls"),
-            F.sum(_cents("l_extendedprice")).alias("sum_price_c"),
+            F.sum(exact_cents("l_extendedprice")).alias("sum_price_c"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -179,7 +166,7 @@ def q04_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping("o_orderstatus").cast("int").alias("g_st"),
             F.grouping("o_orderpriority").cast("int").alias("g_pr"),
             F.count(F.lit(1)).alias("n"),
-            F.sum(_cents("o_totalprice")).alias("sum_price_c"),
+            F.sum(exact_cents("o_totalprice")).alias("sum_price_c"),
         )
     )
 
@@ -245,7 +232,7 @@ def q10_join_chain_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "F")
     li = load(spark, sf_dir, "lineitem")
     per_order = li.groupBy("l_orderkey").agg(
-        F.sum(_cents("l_extendedprice") * (100 - _cents("l_discount"))).alias(
+        F.sum(exact_cents("l_extendedprice") * (100 - exact_cents("l_discount"))).alias(
             "_rev"
         ),
         F.count(F.lit(1)).alias("_nli"),
@@ -287,7 +274,7 @@ def q11_broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name", "n_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            F.sum(_cents("c_acctbal")).alias("sum_acctbal_c"),
+            F.sum(exact_cents("c_acctbal")).alias("sum_acctbal_c"),
         )
     )
 
@@ -326,7 +313,7 @@ def q12_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(n, c.c_nationkey == n.n_nationkey)
         .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("r_name")
-        .agg(F.sum(_cents("l_extendedprice") * (100 - _cents("l_discount"))).alias("revenue_e4"))
+        .agg(F.sum(exact_cents("l_extendedprice") * (100 - exact_cents("l_discount"))).alias("revenue_e4"))
     )
 
 
@@ -486,8 +473,8 @@ def q21_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
-        F.sum(_cents("o_totalprice")).over(running).alias("running_spend_c"),
-        F.round(F.avg(_cents("o_totalprice")).over(moving) / 100.0, 6).alias("moving_avg"),
+        F.sum(exact_cents("o_totalprice")).over(running).alias("running_spend_c"),
+        F.round(F.avg(exact_cents("o_totalprice")).over(moving) / 100.0, 6).alias("moving_avg"),
     )
 
 
@@ -754,7 +741,7 @@ def q44_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(_cents("o_totalprice")).alias("sum_price_c"),
+            F.sum(exact_cents("o_totalprice")).alias("sum_price_c"),
         )
     )
 
@@ -1016,7 +1003,7 @@ def q08_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["l_suppkey"],
         aggs={
             "n": ("sum", F.count(F.lit(1))),
-            "sum_price_c": ("sum", F.sum(_cents("l_extendedprice"))),
+            "sum_price_c": ("sum", F.sum(exact_cents("l_extendedprice"))),
             "max_qty": ("max", F.max("l_quantity")),
         },
     )
@@ -1506,7 +1493,7 @@ def q128_stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     yd = F.col("y").cast("decimal(18,0)")
     base = c.select(
         "c_nationkey",
-        _cents("c_acctbal").alias("x"),
+        exact_cents("c_acctbal").alias("x"),
         F.col("c_custkey").alias("y"),
         F.col("c_acctbal").alias("bal_d"),
         F.col("c_custkey").cast("double").alias("key_d"),
@@ -1514,7 +1501,7 @@ def q128_stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = base.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n"),
         # Per-row cast overflow (|balance| >= ~1e16 dollars NULLs the
-        # decimal(18,2) cast inside _cents) would be silently DROPPED by
+        # decimal(18,2) cast inside exact_cents) would be silently DROPPED by
         # the moment SUMs while n still counts the row — count the non-null
         # inputs so the loud-failure guard below covers the input casts,
         # not just the combination stage.
@@ -1659,7 +1646,7 @@ def q129_bit_bool_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q131_width_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer")
     base = c.select(
-        _cents("c_acctbal").cast("double").alias("x_d"),
+        exact_cents("c_acctbal").cast("double").alias("x_d"),
         F.col("c_acctbal").alias("bal_d"),
     )
     hist = (
@@ -1778,7 +1765,7 @@ def q134_explode_outer_map_hofs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arr = F.when(
         F.col("c_custkey") % 3 == 0, F.array().cast("array<string>")
     ).otherwise(F.array(F.col("c_mktsegment"), F.upper(F.col("c_name"))))
-    bal_c = (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("long")
+    bal_c = exact_cents("c_acctbal")
     m = F.create_map(
         F.lit("bal"), bal_c, F.lit("key"), F.col("c_custkey")
     )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from hdfs_hive_sql_playground_spark.queries import register
+from hdfs_hive_sql_playground_spark.queries import exact_cents, register
 from hdfs_hive_sql_playground_spark.tables import load
 
 
@@ -78,8 +78,8 @@ def q19_pandas_udaf_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long").alias("price_c"),
-        (F.col("l_quantity").cast("decimal(18,2)") * 100).cast("long").alias("qty_c"),
+        exact_cents("l_extendedprice").alias("price_c"),
+        exact_cents("l_quantity").alias("qty_c"),
     )
     return li.groupBy("l_returnflag").agg(
         weighted_price(F.col("price_c"), F.col("qty_c")).alias("weighted_avg_price")
@@ -149,7 +149,7 @@ def q111_grouped_map_demean(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("price_c"),
+        exact_cents("o_totalprice").alias("price_c"),
     )
     n_buckets = max(4 * spark.sparkContext.defaultParallelism, 1)
     bucketed = o.withColumn(

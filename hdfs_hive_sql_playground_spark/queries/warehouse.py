@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_hive_sql_playground_spark.queries import register
+from hdfs_hive_sql_playground_spark.queries import exact_cents, register
 from hdfs_hive_sql_playground_spark.tables import load
 
 # Exact-cents expression shared with the oracle (see memory: never ship
@@ -80,7 +80,7 @@ def q101_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = updates.unionByName(inserts)
     base = load(spark, sf_dir, "customer").select(
         "c_custkey",
-        (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("bigint").alias("bal_c"),
+        exact_cents("c_acctbal").alias("bal_c"),
     )
     b, ch = base.alias("b"), changes.alias("ch")
     return b.join(ch, F.col("b.c_custkey") == F.col("ch.c_custkey"), "full_outer").select(

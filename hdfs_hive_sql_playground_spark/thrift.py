@@ -45,12 +45,15 @@ SINGLE_SESSION_CONF = {"spark.sql.hive.thriftServer.singleSession": "true"}
 
 # The reference's HiveServer2 serves CONCURRENT INDEPENDENT sessions (every
 # beeline connection gets its own session state; only the metastore is
-# shared). Build the engine with this conf (Engine(thrift_single_session=
-# False)) to match: each wire connection (one WireClient) becomes its own
-# Spark session — private temp views / SET state, shared catalog tables.
-# The two confs are build-time alternatives (the conf is static): one
-# engine topology per JVM, exactly like a real HS2 deployment choice.
+# shared). Engine.start applies SINGLE_SESSION_CONF under Engine.conf, so
+# Engine(conf=MULTI_SESSION_CONF) matches it: each wire connection (one
+# WireClient) becomes its own Spark session — private temp views / SET
+# state, shared catalog tables. The two confs are build-time alternatives
+# (the conf is static): one engine topology per JVM, exactly like a real
+# HS2 deployment choice.
 MULTI_SESSION_CONF = {"spark.sql.hive.thriftServer.singleSession": "false"}
+
+_LISTEN_TIMEOUT_S = 30.0
 
 
 def _free_port(host: str) -> int:
@@ -82,16 +85,15 @@ def start_thrift_server(
     spark: SparkSession,
     host: str = "127.0.0.1",
     port: int | None = None,
-    timeout_s: float = 30.0,
 ) -> ThriftServer:
     """Serve ``spark``'s session over the HiveServer2 Thrift protocol.
 
     Blocks until the listener accepts TCP connections (or raises after
-    ``timeout_s``). ``port=None`` picks a free port. For wire clients to
-    see the engine's temp views, the session must have been built with
-    ``SINGLE_SESSION_CONF`` (the engine does this by default); without it
-    each connection gets an isolated Spark session — still functional,
-    but only global/catalog objects are visible.
+    ``_LISTEN_TIMEOUT_S``). ``port=None`` picks a free port. For wire
+    clients to see the engine's temp views, the session must have been
+    built with ``SINGLE_SESSION_CONF`` (the engine does this by default);
+    without it each connection gets an isolated Spark session — still
+    functional, but only global/catalog objects are visible.
     """
     if port is None:
         port = _free_port(host)
@@ -101,7 +103,7 @@ def start_thrift_server(
     jserver = spark._jvm.org.apache.spark.sql.hive.thriftserver.HiveThriftServer2.startWithContext(
         spark._jsparkSession.sqlContext()
     )
-    deadline = time.monotonic() + timeout_s
+    deadline = time.monotonic() + _LISTEN_TIMEOUT_S
     while time.monotonic() < deadline:
         try:
             with socket.create_connection((host, port), timeout=1.0):
@@ -109,7 +111,7 @@ def start_thrift_server(
         except OSError:
             time.sleep(0.25)
     jserver.stop()
-    raise TimeoutError(f"thrift server did not listen on {host}:{port} within {timeout_s}s")
+    raise TimeoutError(f"thrift server did not listen on {host}:{port} within {_LISTEN_TIMEOUT_S}s")
 
 
 class WireClient:

@@ -52,14 +52,17 @@ def test_cli_sql_shell_piped_statements():
         "SELECT field('b', 'a', 'b') AS pos;\n"
         "SELECT broken FROM nowhere;\n"
         "-- a full-line comment;\n"
-        # a comment with an UNBALANCED quote must not poison the literal
-        # scanner — statements after it must still complete (the shell
-        # strips full-line comments before buffering, like split_statements)
+        # a comment with an UNBALANCED quote must not poison the lexer —
+        # statements after it must still complete
         "-- don't let a comment's apostrophe mark the rest as in-literal\n"
         # a ';' and newlines INSIDE a string literal must neither split the
         # statement nor lose the literal's interior newline
         "SELECT length('x;\n"
         "y') AS lit_len;\n"
+        # a literal line that starts with '--' is text, not a comment
+        "SELECT length('p\n"
+        "-- q\n"
+        "r') AS dash_len;\n"
         "SELECT 'tail' AS t;\n"
         "!quit\n"
         "SELECT 'after_quit' AS never;\n"
@@ -89,6 +92,8 @@ def test_cli_sql_shell_piped_statements():
     # 'x;\ny' is 4 chars: the in-literal ';' didn't split and the interior
     # newline survived buffering
     assert "|4      |" in out, out
+    # 'p\n-- q\nr' is 8 chars: the '--' line stayed inside the literal
+    assert "|8       |" in out, out
 
 
 def test_cli_sql_shell_eof_tail_and_describe():
@@ -175,7 +180,8 @@ def test_cli_shell_connect_closes_previous_wire_session(monkeypatch, capsys):
     before replacing it — otherwise every retarget leaks a server-side
     HiveServer2 session (and its temp views / SET state) for the life of
     the server. Also pins survive-on-error: a close() that raises (old
-    session already dead) must not block the new connection."""
+    session already dead) is reported as a WARN line and does not block
+    the new connection."""
     import io
     import sys as _sys
 
@@ -219,6 +225,9 @@ def test_cli_shell_connect_closes_previous_wire_session(monkeypatch, capsys):
         "close:jdbc:hive2://h/2",  # raised — and the shell survived it
         "open:jdbc:hive2://h/3",
     ], events
+    out = capsys.readouterr().out
+    assert "WARN RuntimeError: closing jdbc:hive2://h/2: session already dead" in out, out
+    assert "connected: jdbc:hive2://h/3" in out, out
 
 
 def test_cli_validate_helper_reports_pass_rowsonly_unknown(spark, sf_dir, capsys):

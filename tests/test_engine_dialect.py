@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from hdfs_hive_sql_playground_spark import dialect
 from hdfs_hive_sql_playground_spark.engine import Engine
@@ -21,6 +24,105 @@ def test_field_rewrite_ignores_literals_and_nests():
     out = dialect.rewrite_field(sql)
     assert out.startswith("SELECT 'field(a,b)' AS s, CAST(coalesce(array_position(")
     assert "CAST(coalesce(array_position(array('a', 'b'), y), 0) AS INT)" in out
+
+
+# id -> (script, statements): every form that hides a ';' from the splitter.
+_SPLIT_CASES = {
+    "backslash-escape": ("SELECT 'a\\';b' AS x; SELECT 1", ["SELECT 'a\\';b' AS x", "SELECT 1"]),
+    "double-quoted": ('SELECT "a;b"; SELECT 2', ['SELECT "a;b"', "SELECT 2"]),
+    "backtick": ("SELECT `we;ird` FROM t; SELECT 2", ["SELECT `we;ird` FROM t", "SELECT 2"]),
+    "raw-single": ("SELECT r'a\\'; SELECT 'b;'", ["SELECT r'a\\'", "SELECT 'b;'"]),
+    "raw-double": ('SELECT R"a;\\"; SELECT 2', ['SELECT R"a;\\"', "SELECT 2"]),
+    "doubled-quote": ("SELECT 'it''s;'; SELECT 2", ["SELECT 'it''s;'", "SELECT 2"]),
+    "line-and-block-comments": (
+        "SELECT 1; -- first\nSELECT 2; /* two; */ SELECT 3",
+        ["SELECT 1", "SELECT 2", "/* two; */ SELECT 3"],
+    ),
+    "line-comment-semicolon": ("SELECT 1; -- one; still a comment\nSELECT 2", ["SELECT 1", "SELECT 2"]),
+    "nested-block-comment": (
+        "SELECT /* a /* nested; */ b; */ 1; SELECT 2",
+        ["SELECT /* a /* nested; */ b; */ 1", "SELECT 2"],
+    ),
+    "hint": ("SELECT /*+ BROADCAST(t) */ * FROM t", ["SELECT /*+ BROADCAST(t) */ * FROM t"]),
+    "dashes-in-literal": ("SELECT 'x\n-- kept\ny' AS s;", ["SELECT 'x\n-- kept\ny' AS s"]),
+    "comment-apostrophe": ("-- don't\nSELECT 1;\n-- tail comment", ["SELECT 1"]),
+    # an unterminated literal is the remainder, ';' and all
+    "unterminated-literal": ("SELECT 1; SELECT 'open; x", ["SELECT 1", "SELECT 'open; x"]),
+}
+
+
+@pytest.mark.parametrize("script,want", _SPLIT_CASES.values(), ids=_SPLIT_CASES)
+def test_split_statements_lexical_forms(script, want):
+    assert Engine.split_statements(script) == want
+
+
+def test_split_keeps_open_tail_verbatim():
+    """The shell buffers the tail: an open literal keeps its newlines and
+    its '--' lines; a tail of blanks and comments is empty."""
+    assert dialect.split("SELECT 1; SELECT 'a;\n-- b\n") == (["SELECT 1"], " SELECT 'a;\n-- b\n")
+    assert dialect.split("SELECT 1; -- done\n") == (["SELECT 1"], "")
+
+
+# Text that only looks like a shim target: inside a string, raw string,
+# identifier or comment it is left alone.
+_UNTOUCHED = [
+    "SELECT 'field(a, b)' AS s",
+    'SELECT "field(a, b)" AS s',
+    "SELECT r'field(a, b)\\' AS s",
+    "SELECT `field(a, b)` FROM t",
+    "SELECT 1 /* field(a, b) */",
+    "SELECT 1 -- field(a, b)",
+    'SELECT "INPUT__FILE__NAME" AS s',
+    "SELECT `INPUT__FILE__NAME` FROM t",
+    "SELECT 1 /* INPUT__FILE__NAME */",
+    "SELECT 1 -- INPUT__FILE__NAME",
+]
+
+
+@pytest.mark.parametrize("sql", _UNTOUCHED, ids=range(len(_UNTOUCHED)))
+def test_rewrite_leaves_literals_identifiers_and_comments(sql):
+    assert dialect.rewrite(sql) == sql
+
+
+def test_field_rewrite_keeps_comma_in_double_quoted_literal():
+    assert (
+        dialect.rewrite('SELECT field(x, "a,b", "c")')
+        == 'SELECT CAST(coalesce(array_position(array("a,b", "c"), x), 0) AS INT)'
+    )
+
+
+def test_exec_file_lexical_forms(spark, tmp_path):
+    """exec_file runs every statement of a script whose literals,
+    identifiers and comments hold ';', '--' and field( text, and each
+    returns the value Spark gives it."""
+    script = tmp_path / "forms.sql"
+    script.write_text(
+        "-- header; with an apostrophe: don't\n"
+        "SELECT 'a\\';b' AS v;\n"
+        'SELECT "a;b" AS v;\n'
+        "SELECT `we;ird` AS v FROM (SELECT 'w' AS `we;ird`);\n"
+        "SELECT r'a\\' AS v;\n"
+        "SELECT 'it''s' AS v;\n"
+        "SELECT /* c; /* nested; */ */ 'c' AS v; -- trailing; comment\n"
+        "SELECT 'x\n-- kept\ny' AS v;\n"
+        "SELECT CAST(field('a,b', \"a,b\", 'c') AS STRING) AS v\n"
+    )
+    eng = Engine()
+    eng._spark = spark
+    got = [df.first().v for df in eng.exec_file(str(script))]
+    assert got == ["a';b", "a;b", "w", "a\\", "it's", "c", "x\n-- kept\ny", "1"]
+
+
+def test_m33_hql_splits_into_five_statements():
+    """perfbench's m33_statements drops the last statement by its prefix:
+    the reference HQL must split into the external table, two partitions,
+    the view and the CTAS."""
+    hql = os.path.join(os.path.dirname(__file__), "..", "examples", "hive", "m33_pipeline.hql")
+    with open(hql) as f:
+        stmts = Engine.split_statements(f.read())
+    assert len(stmts) == 5
+    assert stmts[0].startswith("CREATE EXTERNAL TABLE")
+    assert stmts[-1].startswith("CREATE TABLE m33")
 
 
 def test_top_rewrite():

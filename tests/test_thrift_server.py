@@ -19,7 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_thrift_multi_session_two_clients():
-    """Multi-session topology (Engine(thrift_single_session=False)): two
+    """Multi-session topology (Engine(conf=MULTI_SESSION_CONF)): two
     concurrent wire clients get isolated temp views + shared catalog —
     the reference HS2's stock concurrent-beeline behavior. Subprocess for
     the same static-conf reason as the single-session test."""
