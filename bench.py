@@ -2,23 +2,11 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the
 BASELINE.md-comparable m33 pipeline at the reference's own data scale
 (2.8 M rows / ~73 MB raw text — the exact workload behind the reference's
-50.1 s CTAS, 147.8 s Sqoop export, and 1.387 s LIMIT-100 numbers), and
-prints JSONL: first the full record {"metric":
-"bench_queries_total_wall", "value": total_sec, "unit": "sec", "queries":
-{name: sec}, "sf": ...} with the m33 headline keys deliberately LAST in
-the dict, then compact {"metric": "bench_trend_norms", ...} records
-carrying every calibration-normalized trend wall in whole sub-kB lines,
-then one compact headline-only record ({"metric": "bench_m33_headlines",
-...}) LAST — so the driver's 2000-char stdout tail always carries the
-four BASELINE.md-comparable numbers AND every adjudication key in
-parseable form. Tail-parsers must select on the "metric" field, NOT on
-line position — the LAST line is the headline record.
-
-Timing is per-query wall time of a full execution (noop-write action that
-materializes every row without driver collection), always through
-``_min_wall``: untimed warm passes, then the minimum of N timed draws.
-The full-scale m33 fixture is generated once into .bench_data/
-(gitignored) and cached.
+50.1 s CTAS, 147.8 s Sqoop export, and 1.387 s LIMIT-100 numbers), plus
+the scale-trend legs, and prints JSONL records (contract: ``_emit_records``).
+Every wall is a full execution (a noop write materializes every row without
+driver collection) timed by ``_min_wall``. Fixtures are generated once into
+.bench_data/ (gitignored) by ``_fixture``.
 
 ``python bench.py --legs <group>`` measures one leg group of LEG_GROUPS
 in this process and prints its walls as one JSON dict — the bench spawns
@@ -29,12 +17,14 @@ times any registry queries under the registry group's protocol.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shutil
 import subprocess
 import sys
 import time
+from unittest import mock
 
 from pyspark.sql import functions as F
 
@@ -43,11 +33,7 @@ from hdfs_hive_sql_playground_spark.m33 import M33_SCHEMA, m33_schem
 from hdfs_hive_sql_playground_spark.queries import all_queries
 from hdfs_hive_sql_playground_spark.sinks import ctas_text, read_text_table
 from hdfs_hive_sql_playground_spark.sources.jdbc import (
-    export_jdbc,
-    jdbc_connection,
-    read_jdbc,
-    sql_state,
-)
+    export_jdbc, jdbc_connection, read_jdbc, sql_state)
 from hdfs_hive_sql_playground_spark.tables import load
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -59,17 +45,27 @@ M33_FULL_ROWS_PER_FILE = 700_000
 M33_TOTAL_ROWS = 4 * M33_FULL_ROWS_PER_FILE
 
 
-def _ensure_m33_at(scale: int) -> str:
-    trend_dir = os.path.join(REPO, ".bench_data", f"m33_full_x{scale}v2")
-    marker = os.path.join(trend_dir, ".complete")
+def _fixture(name: str, build) -> str:
+    """``.bench_data/<name>``, made by ``build(path)`` on first use. The
+    ``.complete`` marker is written only after ``build`` returns, so an
+    interrupted build is redone rather than read."""
+    path = os.path.join(REPO, ".bench_data", name)
+    marker = os.path.join(path, ".complete")
     if not os.path.exists(marker):
+        build(path)
+        with open(marker, "w") as f:
+            f.write("ok\n")
+    return path
+
+
+def _m33_fixture(scale: int) -> str:
+    def build(path: str) -> None:
         sys.path.insert(0, os.path.join(REPO, "scripts"))
         from gen_m33_fixture import gen_tree
 
-        gen_tree(trend_dir, M33_FULL_ROWS_PER_FILE, n_files=scale)
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return trend_dir
+        gen_tree(path, M33_FULL_ROWS_PER_FILE, n_files=scale)
+
+    return _fixture(f"m33_full_x{scale}v2", build)
 
 
 def _warm_dir(sf_dir: str) -> str:
@@ -124,61 +120,48 @@ def _noop(df) -> None:
 # page cache), not any query plan: uniform drift in trend walls that tracks
 # calibration_x1 is machine state, drift that doesn't is a plan regression.
 CALIBRATION_ROWS = 2_000_000
-CALIBRATION_DIR = os.path.join(REPO, ".bench_data", "calibration_v1")
-# Quiet-box reference wall for the calibration workload (min-of-3, measured
-# round 10 on the 32-cpu bench host). calibration_factor = calibration_x1 /
+# Quiet-box reference wall for the calibration workload (min-of-3 on the
+# 32-cpu bench host). calibration_factor = calibration_x1 /
 # CALIBRATION_REF_SEC; calibration-normalized walls divide by that factor.
 CALIBRATION_REF_SEC = 0.43
 
 
-def _ensure_calibration_fixture(spark) -> None:
-    marker = os.path.join(CALIBRATION_DIR, ".complete")
-    if os.path.exists(marker):
-        return
-    (
-        spark.range(CALIBRATION_ROWS)
-        .select(
+def _calibration_fixture(spark) -> str:
+    def build(path: str) -> None:
+        spark.range(CALIBRATION_ROWS).select(
             (F.col("id") % 1000).alias("k"),
             (F.col("id") * 0.5).alias("v"),
             F.md5(F.col("id").cast("string")).alias("s"),
-        )
-        .coalesce(8)
-        .write.mode("overwrite")
-        .parquet(os.path.join(CALIBRATION_DIR, "cal.parquet"))
-    )
-    with open(marker, "w") as f:
-        f.write("ok\n")
+        ).coalesce(8).write.mode("overwrite").parquet(os.path.join(path, "cal.parquet"))
+
+    return os.path.join(_fixture("calibration_v1", build), "cal.parquet")
 
 
 def _calibration_wall(spark) -> float:
     """min-of-3 wall of the pinned calibration workload (1 untimed warm
     pass first so the draw measures the host, not codegen compilation)."""
+    cal = _calibration_fixture(spark)
 
     def run() -> None:
-        _noop(
-            spark.read.parquet(os.path.join(CALIBRATION_DIR, "cal.parquet"))
-            .groupBy("k")
-            .agg(
-                F.sum("v").alias("sum_v"),
-                F.count(F.lit(1)).alias("n"),
-                F.avg(F.length("s")).alias("avg_len"),
-            )
-        )
+        _noop(spark.read.parquet(cal).groupBy("k").agg(
+            F.sum("v").alias("sum_v"),
+            F.count(F.lit(1)).alias("n"),
+            F.avg(F.length("s")).alias("avg_len"),
+        ))
 
     return _min_wall(spark, run, 3, warm=1)
 
 
 # I/O-shaped calibration: the CPU-shaped workload above cannot register
 # host I/O state (dirty-page writeback, page-cache eviction), the blind
-# spot behind the x10 CTAS leg's 26.9 s draw in a run calibrated 'quiet'.
+# spot behind an x10 CTAS draw of 26.9 s in a run calibrated 'quiet'.
 # This leg writes a fixed ~100 MB of generated text and reads it fully
 # back, first and last in the run: an I/O-sensitive trend move that
 # tracks calibration_io is host state; one that doesn't is the plan.
 CALIBRATION_IO_ROWS = 1_300_000  # x ~74 B/row -> ~96 MB of text per draw
 CALIBRATION_IO_DIR = os.path.join(REPO, ".bench_data", "cal_io_tmp")
-# Quiet-box reference (min-of-3 calls of the min-of-2 leg: 0.62/0.63/0.51,
-# measured round 11 on the 32-cpu bench host);
-# calibration_io_factor = calibration_io_x1 / this.
+# Quiet-box reference (min-of-3 calls of the min-of-2 leg: 0.62/0.63/0.51
+# on the 32-cpu bench host); calibration_io_factor = calibration_io_x1 / this.
 CALIBRATION_IO_REF_SEC = 0.51
 
 
@@ -189,20 +172,10 @@ def _calibration_io_wall(spark) -> float:
     is generated, so every draw writes the same bytes."""
 
     def run() -> None:
-        (
-            spark.range(CALIBRATION_IO_ROWS)
-            .select(
-                F.concat_ws(
-                    "|",
-                    F.col("id"),
-                    F.md5(F.col("id").cast("string")),
-                    F.md5((F.col("id") + 1).cast("string")),
-                ).alias("value")
-            )
-            .coalesce(8)
-            .write.mode("overwrite")
-            .text(CALIBRATION_IO_DIR)
-        )
+        i = F.col("id")
+        spark.range(CALIBRATION_IO_ROWS).select(F.concat_ws(
+            "|", i, F.md5(i.cast("string")), F.md5((i + 1).cast("string"))
+        ).alias("value")).coalesce(8).write.mode("overwrite").text(CALIBRATION_IO_DIR)
         n = spark.read.text(CALIBRATION_IO_DIR).count()
         assert n == CALIBRATION_IO_ROWS, n
 
@@ -237,9 +210,9 @@ def _drop_derby_memory(spark, name: str) -> None:
 
 
 def _tune_derby_sink(spark) -> None:
-    """Table-level locking for the embedded Derby export target. Round-13
-    attribution sweep (fresh JVM per config, 2.8 M-row export): baseline
-    33.0 s; rowLocking=false 15.1 s (2.19x); durability=test 31.7 s;
+    """Table-level locking for the embedded Derby export target. Attribution
+    sweep (fresh JVM per config, 2.8 M-row export): baseline 33.0 s;
+    rowLocking=false 15.1 s (2.19x); durability=test 31.7 s;
     pageCacheSize=40000 41.8 s; 32 KB pages 33.1 s. The bulk-append
     bottleneck was Derby's lock manager tracking one lock per inserted
     row. Coarse locking is what the reference's Sqoop path does on SQL
@@ -263,8 +236,8 @@ def _export_wall(spark, df, db: str, rows: int) -> float:
 
     16 x 100k: with table-level locking (``_tune_derby_sink``) the next
     overhead is per-executeBatch bookkeeping, so bigger batches win
-    (round-13 interleaved min-of-3: 100k 10.91 s, 50k 11.75 s, 10k
-    12.73 s); writer count is flat at 14.1-15.4 s for 4..32."""
+    (interleaved min-of-3: 100k 10.91 s, 50k 11.75 s, 10k 12.73 s);
+    writer count is flat at 14.1-15.4 s for 4..32."""
     url = f"jdbc:derby:memory:{db};create=true"
 
     def run() -> None:
@@ -284,7 +257,7 @@ def _bench_m33(spark, timings: dict[str, float]) -> None:
     """The four BASELINE.md-comparable headlines, all steady-state: the
     reference's numbers come from a warmed, long-running Hive service, and
     a single draw on this box has been observed 2x the steady state."""
-    src = _ensure_m33_at(1)
+    src = _m33_fixture(1)
     # CTAS (baseline 50.1 s), first, before the heap carries anything
     # else. One untimed count of the view JIT-compiles the wholetext
     # decode path (cold-JIT inflates a one-shot CTAS ~50%), then min-of-2.
@@ -305,12 +278,10 @@ def _bench_m33(spark, timings: dict[str, float]) -> None:
 
     # Bulk JDBC export (baseline 147.8 s = 18.9 k rows/s, 4 Sqoop maps).
     # ~99% of this leg is the embedded Derby insert+page-store path
-    # (round-7 attribution: Spark-side scan 0.49 s of a 36.6 s export), so
-    # it measures the sink; the in-memory target shares the driver heap,
-    # hence the fresh, dropped DB per draw.
-    timings["m33_jdbc_export_2800k"] = _export_wall(
-        spark, back, "m33bench", M33_TOTAL_ROWS
-    )
+    # (measured: Spark-side scan 0.49 s of a 36.6 s export), so it measures
+    # the sink; the in-memory target shares the driver heap, hence the
+    # fresh, dropped DB per draw.
+    timings["m33_jdbc_export_2800k"] = _export_wall(spark, back, "m33bench", M33_TOTAL_ROWS)
 
 
 # --- scale-trend legs ---------------------------------------------------------
@@ -328,22 +299,19 @@ EXPORT_TREND_SCALE = 2
 # way the calibration leg does not register. Out-of-band, the leg takes up
 # to CTAS_MAX_REDRAWS extra draws (each re-checks) and reports how many it
 # used: a real plan regression survives the redraws and still fires.
-# Round 13 re-centered the band (2.7-3.8 -> 2.2-3.6) after the wholetext
-# scan stopped copying each file, which cut the 4-file x1 leg's per-file
-# cost more than the 40-file x10 leg's.
 CTAS_RATIO_BAND = (2.2, 3.6)
 CTAS_MAX_REDRAWS = 3
 
 
 def _bench_m33_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
-    """CTAS x10 and export x2 slopes. Runs in a fresh child JVM: round 6's
-    x10 CTAS tripled (9.3 -> 28.0 s, same plan) when it ran last in a
+    """CTAS x10 and export x2 slopes. Runs in a fresh child JVM: the x10
+    CTAS once tripled (9.3 -> 28.0 s, same plan) when it ran last in a
     session whose heap history kept 6-10 GB in old gen. The CTAS x1 ratio
     base is re-measured here with the identical protocol, so the slope
     compares warm to warm inside one JVM. The export x2 ratio divides by
     the parent's x1 headline (``_export_ratio``): the leg is target-bound,
     so the JVM boundary is not the resource being measured."""
-    base_dir = _ensure_m33_at(1)
+    base_dir = _m33_fixture(1)
     m33_schem(spark, base_dir).count()
     base = _ctas_wall(spark, base_dir, "m33_bench_trend_base", 2)
     timings["trend_m33_ctas_x1"] = base
@@ -351,7 +319,7 @@ def _bench_m33_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
     # The warm count parks the x10 wholetext strings (~9.5 GB) in old gen;
     # min-of-2 keeps the first draw's mixed collections out of the wall
     # (measured 17.8 s first draw vs 7.1-7.4 s later in a fresh JVM).
-    ctas_dir = _ensure_m33_at(CTAS_TREND_SCALE)
+    ctas_dir = _m33_fixture(CTAS_TREND_SCALE)
     m33_schem(spark, ctas_dir).count()
     wall = _ctas_wall(spark, ctas_dir, "m33_bench_trend", 2)
     # Min-of-N only shrinks a wall, so a too-HIGH ratio redraws the x10
@@ -369,7 +337,7 @@ def _bench_m33_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
     timings[f"trend_ctas_x{CTAS_TREND_SCALE}_redraws"] = redraws
     timings[f"trend_ctas_x{CTAS_TREND_SCALE}_over_x1_ratio"] = round(wall / base, 3)
 
-    export_dir = _ensure_m33_at(EXPORT_TREND_SCALE)
+    export_dir = _m33_fixture(EXPORT_TREND_SCALE)
     ctas_text(m33_schem(spark, export_dir), "m33_bench_export_trend")
     back = read_text_table(spark, "m33_bench_export_trend", M33_SCHEMA)
     # Scan-only control: the Spark-side share of the export wall (~1-3%).
@@ -389,9 +357,7 @@ def _export_ratio(timings: dict[str, float]) -> None:
     trend = timings.get(f"trend_m33_export_x{EXPORT_TREND_SCALE}")
     base = timings.get("m33_jdbc_export_2800k")
     if trend and base:
-        timings[f"trend_export_x{EXPORT_TREND_SCALE}_over_x1_ratio"] = round(
-            trend / base, 3
-        )
+        timings[f"trend_export_x{EXPORT_TREND_SCALE}_over_x1_ratio"] = round(trend / base, 3)
 
 
 # Corpus scale trend: documents AND embeddings replicated 8x (ids remapped
@@ -399,7 +365,7 @@ def _export_ratio(timings: dict[str, float]) -> None:
 # each query's x8 wall over its wall on an x1 fixture with the identical
 # layout (a one-file x1 base made small-x1 ratios layout artifacts).
 DOC_TREND_SCALE = 8
-# Chunk budget for the compact trend-norm JSONL records: small enough
+# Chunk budget for the compact trend-ratio JSONL records: small enough
 # that the driver's 2000-char stdout tail always holds every chunk PLUS
 # the final headline record as complete lines (combined budget asserted
 # by test_emit_records_tail_budget).
@@ -420,90 +386,6 @@ DOC_TREND_QUERIES = (
     # composed front half: every stage linear in docs
     "q143_crawl_front_pipeline",
 )
-
-
-def _ensure_doc_trend(spark, sf_dir: str, scale: int = DOC_TREND_SCALE) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    trend_dir = os.path.join(REPO, ".bench_data", f"docs_x{scale}_{tag}_v3")
-    marker = os.path.join(trend_dir, ".complete")
-    if not os.path.exists(marker):
-        for table, id_col in (("documents", "doc_id"), ("embeddings", "vec_id")):
-            src = load(spark, sf_dir, table)
-            n = src.count()
-            big = (
-                src.select(
-                    F.explode(F.sequence(F.lit(0), F.lit(scale - 1))).alias("_r"),
-                    "*",
-                )
-                .withColumn(id_col, F.col(id_col) + F.col("_r") * n)
-                .drop("_r")
-            )
-            # 32 files: a single ~1 MB file gives every trend query a
-            # one-task scan stage, understating x8 parallelism
-            big.repartition(32).write.mode("overwrite").parquet(
-                os.path.join(trend_dir, f"{table}.parquet")
-            )
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return trend_dir
-
-
-def _record_trend(timings: dict[str, float], name: str, base: float,
-                  wall: float) -> None:
-    timings[f"trend_{name}_x1"] = base
-    timings[f"trend_{name}_x{DOC_TREND_SCALE}"] = wall
-    timings[f"trend_{name}_x{DOC_TREND_SCALE}_over_x1_ratio"] = round(wall / base, 3)
-
-
-def _bench_doc_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
-    trend_dir = _ensure_doc_trend(spark, sf_dir)
-    x1_dir = _ensure_doc_trend(spark, sf_dir, scale=1)
-    specs = all_queries()
-    for name in DOC_TREND_QUERIES:
-        fn = specs[name].fn
-        # x1 bases get a third draw: sub-2 s walls dominated by fixed
-        # per-stage overhead, and every ratio divides by them.
-        base = _min_wall(spark, lambda: _noop(fn(spark, x1_dir)), 3)
-        wall = _min_wall(spark, lambda: _noop(fn(spark, trend_dir)), 2)
-        _record_trend(timings, name, base, wall)
-
-
-def _bench_q124_trend(spark, sf_dir: str, timings: dict[str, float],
-                      name: str) -> None:
-    """The three q124 legs, warm to warm in one fresh child JVM (promoted
-    round 12: the r11 fixed-cells walls moved +57% with zero plan change
-    while the cells-scaled twin improved — session heap history).
-
-    Fixed-cells leg: N_CELLS constant, the x8 corpus packs each cell 8x
-    fuller, within-cell pair work ~64x (the sum-cell^2 law). Cells-scaled
-    leg: N_CELLS x8 on the same corpus (constant occupancy, the production
-    regime), pair work linear in rows — its ratio over the same x1 base
-    should sit near the linear operators'."""
-    from hdfs_hive_sql_playground_spark.queries import similarity as sim_mod
-
-    trend_dir = _ensure_doc_trend(spark, sf_dir)
-    x1_dir = _ensure_doc_trend(spark, sf_dir, scale=1)
-    fn = all_queries()[name].fn
-
-    def x8() -> None:
-        _noop(fn(spark, trend_dir))
-
-    # one untimed warm pass: a fresh child has no session to have paid
-    # codegen and the Arrow worker pool
-    base = _min_wall(spark, lambda: _noop(fn(spark, x1_dir)), 3, warm=1)
-    _record_trend(timings, name, base, _min_wall(spark, x8, 2))
-    saved_cells = sim_mod.N_CELLS
-    sim_mod.N_CELLS = saved_cells * DOC_TREND_SCALE
-    try:
-        wall = _min_wall(spark, x8, 2)
-    finally:
-        sim_mod.N_CELLS = saved_cells
-    timings[f"trend_q124_cells_scaled_x{DOC_TREND_SCALE}"] = wall
-    timings[f"trend_q124_cells_scaled_x{DOC_TREND_SCALE}_over_x1_ratio"] = round(
-        wall / base, 3
-    )
-
-
 # Skew-stress trend: the bucketed two-pass prefix-sum rewrite of the
 # stratum-window family claims a bounded plan however skewed lang/source
 # get. The x8 corpus is rewritten so ~70% of rows collapse into ONE lang
@@ -513,66 +395,114 @@ SKEW_TREND_QUERIES = (
     "q112_sequence_packing",
     "q115_domain_mix_sample",
 )
+# The x8-over-x1 wall and ratio keys of a doc-trend leg (see _ratio_legs).
+SCALE_KEYS = ("trend_{q}_x{n}", "trend_{q}_x{n}_over_x1_ratio")
 
 
-def _ensure_doc_skew_trend(spark, sf_dir: str) -> str:
+def _doc_fixture(spark, sf_dir: str, scale: int = DOC_TREND_SCALE,
+                 skew: bool = False) -> str:
+    """The sf_dir corpus replicated ``scale``x into 32 files (a single ~1 MB
+    file gives every trend query a one-task scan stage, understating x8
+    parallelism): documents and embeddings with ids remapped unique, or
+    with ``skew`` the documents alone with a deterministic ~70% of rows
+    rewritten into one lang and one source."""
+    tables = {"documents": "doc_id"} if skew else {
+        "documents": "doc_id", "embeddings": "vec_id"}
+
+    def build(path: str) -> None:
+        for table, id_col in tables.items():
+            src = load(spark, sf_dir, table)
+            n = src.count()
+            big = src.select(
+                F.explode(F.sequence(F.lit(0), F.lit(scale - 1))).alias("_r"), "*"
+            ).withColumn(id_col, F.col(id_col) + F.col("_r") * n).drop("_r")
+            if skew:
+                hot = F.col("doc_id") % 10 < 7
+                big = big.withColumn(
+                    "lang", F.when(hot, F.lit("en")).otherwise(F.col("lang"))
+                ).withColumn("source", F.when(hot, F.lit("src0")).otherwise(F.col("source")))
+            big.repartition(32).write.mode("overwrite").parquet(f"{path}/{table}.parquet")
+
     tag = os.path.basename(sf_dir.rstrip("/"))
-    trend_dir = os.path.join(
-        REPO, ".bench_data", f"docs_skew_x{DOC_TREND_SCALE}_{tag}_v2"
+    return _fixture(
+        f"docs_skew_x{scale}_{tag}_v2" if skew else f"docs_x{scale}_{tag}_v3", build
     )
-    marker = os.path.join(trend_dir, ".complete")
-    if not os.path.exists(marker):
-        src = load(spark, sf_dir, "documents")
-        n = src.count()
-        big = (
-            src.select(
-                F.explode(F.sequence(F.lit(0), F.lit(DOC_TREND_SCALE - 1))).alias("_r"),
-                "*",
-            )
-            .withColumn("doc_id", F.col("doc_id") + F.col("_r") * n)
-            .drop("_r")
-        )
-        hot = F.col("doc_id") % 10 < 7  # deterministic ~70% hot stratum
-        skewed = big.withColumn(
-            "lang", F.when(hot, F.lit("en")).otherwise(F.col("lang"))
-        ).withColumn("source", F.when(hot, F.lit("src0")).otherwise(F.col("source")))
-        skewed.repartition(32).write.mode("overwrite").parquet(
-            os.path.join(trend_dir, "documents.parquet")
-        )
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return trend_dir
+
+
+def _ratio_legs(spark, timings: dict[str, float], names, den, nums,
+                den_draws: int = 3, warm=()) -> None:
+    """The scale-trend runner, one registry query of ``names`` at a time:
+    one untimed pass on each directory in ``warm``, the denominator wall
+    (min of ``den_draws``) on its fixture, then each numerator's wall (min
+    of 2) on its fixture under its patch, if any, and the numerator's
+    ratio over the denominator. ``den`` is (fixture, key or None); each
+    numerator is (fixture, key, ratio key, patch or None). Keys are
+    templates over ``q`` (the query) and ``n`` (DOC_TREND_SCALE)."""
+    specs = all_queries()
+    den_dir, den_key = den
+    for q in names:
+        fn = specs[q].fn
+        for d in warm:
+            _noop(fn(spark, d))
+            release_tracked_caches()
+        base = _min_wall(spark, lambda: _noop(fn(spark, den_dir)), den_draws)
+        if den_key:
+            timings[den_key.format(q=q)] = base
+        for num_dir, key, ratio_key, patch in nums:
+            with patch or contextlib.nullcontext():
+                wall = _min_wall(spark, lambda: _noop(fn(spark, num_dir)), 2)
+            timings[key.format(q=q, n=DOC_TREND_SCALE)] = wall
+            timings[ratio_key.format(q=q, n=DOC_TREND_SCALE)] = round(wall / base, 3)
+
+
+def _bench_doc_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
+    # x1 bases get a third draw: sub-2 s walls dominated by fixed
+    # per-stage overhead, and every ratio divides by them.
+    _ratio_legs(spark, timings, DOC_TREND_QUERIES,
+                (_doc_fixture(spark, sf_dir, 1), "trend_{q}_x1"),
+                [(_doc_fixture(spark, sf_dir), *SCALE_KEYS, None)])
+
+
+def _bench_q124_trend(spark, sf_dir: str, timings: dict[str, float],
+                      name: str) -> None:
+    """The three q124 legs, warm to warm in one fresh child JVM (in-session,
+    its fixed-cells walls moved +57% with zero plan change while the
+    cells-scaled twin improved — session heap history). One untimed warm
+    pass: a fresh child has no session to have paid codegen and the Arrow
+    worker pool.
+
+    Fixed-cells leg: N_CELLS constant, the x8 corpus packs each cell 8x
+    fuller, within-cell pair work ~64x (the sum-cell^2 law). Cells-scaled
+    leg: N_CELLS x8 on the same corpus (constant occupancy, the production
+    regime), pair work linear in rows — its ratio over the same x1 base
+    should sit near the linear operators'."""
+    from hdfs_hive_sql_playground_spark.queries import similarity
+
+    x1, x8 = _doc_fixture(spark, sf_dir, 1), _doc_fixture(spark, sf_dir)
+    cells = mock.patch.object(similarity, "N_CELLS",
+                              similarity.N_CELLS * DOC_TREND_SCALE)
+    _ratio_legs(spark, timings, [name], (x1, "trend_{q}_x1"), [
+        (x8, *SCALE_KEYS, None),
+        (x8, "trend_q124_cells_scaled_x{n}",
+         "trend_q124_cells_scaled_x{n}_over_x1_ratio", cells),
+    ], warm=[x1])
 
 
 def _bench_doc_skew_trend(spark, sf_dir: str, timings: dict[str, float]) -> None:
-    from hdfs_hive_sql_playground_spark.queries import text as text_mod
+    from hdfs_hive_sql_playground_spark.queries import text
 
-    balanced_dir = _ensure_doc_trend(spark, sf_dir)
-    skew_dir = _ensure_doc_skew_trend(spark, sf_dir)
-    specs = all_queries()
     # The production bucket width (1M rows) would put every stratum of
     # this 40k-row fixture in ONE bucket, degenerating the composite key
     # to the bare stratum — the very plan the test exists to rule out.
-    # Shrink it for BOTH legs (identical plans, fair ratio).
-    saved_width = text_mod.CUMSUM_BUCKET_WIDTH
-    text_mod.CUMSUM_BUCKET_WIDTH = 2048
-    try:
-        # Warm codegen at the tiny SF so the balanced leg (first) does not
-        # pay a compile the skew leg then inherits for free.
-        warm_dir = _warm_dir(sf_dir)
-        if os.path.isdir(warm_dir):
-            for name in SKEW_TREND_QUERIES:
-                _noop(specs[name].fn(spark, warm_dir))
-        for name in SKEW_TREND_QUERIES:
-            fn = specs[name].fn
-            balanced = _min_wall(spark, lambda: _noop(fn(spark, balanced_dir)), 2)
-            skew = _min_wall(spark, lambda: _noop(fn(spark, skew_dir)), 2)
-            timings[f"trend_{name}_x{DOC_TREND_SCALE}_skew"] = skew
-            timings[f"trend_{name}_skew_over_balanced_ratio"] = round(
-                skew / balanced, 3
-            )
-    finally:
-        text_mod.CUMSUM_BUCKET_WIDTH = saved_width
+    # Shrink it for BOTH legs (identical plans, fair ratio). The sf0.001
+    # pass warms codegen so the balanced leg (first) does not pay a compile
+    # the skew leg then inherits for free.
+    warm_dir = _warm_dir(sf_dir)
+    balanced, skew = _doc_fixture(spark, sf_dir), _doc_fixture(spark, sf_dir, skew=True)
+    with mock.patch.object(text, "CUMSUM_BUCKET_WIDTH", 2048):
+        _ratio_legs(spark, timings, SKEW_TREND_QUERIES, (balanced, None), [
+            (skew, "trend_{q}_x{n}_skew", "trend_{q}_skew_over_balanced_ratio", None)
+        ], den_draws=2, warm=[warm_dir] if os.path.isdir(warm_dir) else [])
 
 
 def _bench_registry_legs(spark, sf_dir: str, timings: dict[str, float],
@@ -596,9 +526,9 @@ def _bench_registry_legs(spark, sf_dir: str, timings: dict[str, float],
 # Leg groups measured in a fresh child JVM: group -> (runner, child timeout
 # in seconds, the registry queries the runner is given). A leg is promoted
 # here when its in-session wall drifts from session heap history rather
-# than from its plan (docs/DEPLOYMENT_100TB.md §9): the x10 CTAS in round
-# 6, q99 in round 8 (its in-session wall crept 1.30 -> 1.60 s while its
-# fresh-JVM stage profile summed to 1.17 s), q124's trends in round 12.
+# than from its plan (docs/DEPLOYMENT_100TB.md §9): the x10 CTAS, q99 (its
+# in-session wall crept 1.30 -> 1.60 s while its fresh-JVM stage profile
+# summed to 1.17 s) and q124's trends.
 LEG_GROUPS = {
     "registry": (_bench_registry_legs, 900, ("q99_curation_pipeline",)),
     "m33_trend": (_bench_m33_trend, 1800, ()),
@@ -726,16 +656,15 @@ def main() -> None:
     next(iter(specs.values())).fn(spark, sf_dir).count()
     spark.range(32).mapInPandas(lambda it: it, schema="id long").count()
 
-    # Every fixture BEFORE any timed section: round 3's fixture generation
-    # between timed sections regressed m33_limit100_raw_view 0.83 -> 2.06 s
+    # Every fixture BEFORE any timed section: fixture generation between
+    # timed sections once regressed m33_limit100_raw_view 0.83 -> 2.06 s
     # with no plan change. The children read them too.
-    _ensure_m33_at(1)
-    _ensure_m33_at(CTAS_TREND_SCALE)
-    _ensure_m33_at(EXPORT_TREND_SCALE)
-    _ensure_doc_trend(spark, sf_dir)
-    _ensure_doc_trend(spark, sf_dir, scale=1)
-    _ensure_doc_skew_trend(spark, sf_dir)
-    _ensure_calibration_fixture(spark)
+    for scale in (1, CTAS_TREND_SCALE, EXPORT_TREND_SCALE):
+        _m33_fixture(scale)
+    _doc_fixture(spark, sf_dir)
+    _doc_fixture(spark, sf_dir, 1)
+    _doc_fixture(spark, sf_dir, skew=True)
+    _calibration_fixture(spark)
 
     # Host calibration brackets the whole run (first and last timed
     # sections), so trend drift can be adjudicated from the artifact alone.
@@ -752,107 +681,69 @@ def main() -> None:
     spark.stop()
 
 
+# The four BASELINE.md-comparable keys, in record order.
+HEADLINE_KEYS = (
+    "m33_ctas_2800k",
+    "m33_jdbc_export_2800k",
+    "m33_limit100_raw_view",
+    "m33_limit100_warehouse",
+)
+# The watches: trend bands and host state the headline record carries.
+WATCH_KEYS = (
+    "trend_m33_ctas_x1",
+    f"trend_m33_ctas_x{CTAS_TREND_SCALE}",
+    f"trend_m33_ctas_x{CTAS_TREND_SCALE}_norm",
+    f"trend_ctas_x{CTAS_TREND_SCALE}_over_x1_ratio",
+    f"trend_ctas_x{CTAS_TREND_SCALE}_redraws",
+    f"trend_q124_cells_scaled_x{DOC_TREND_SCALE}_over_x1_ratio",
+    f"trend_export_x{EXPORT_TREND_SCALE}_over_x1_ratio",
+    f"trend_m33_export_x{EXPORT_TREND_SCALE}_scan_control",
+    "calibration_x1",
+    "calibration_factor",
+    "calibration_io_x1",
+    "calibration_io_factor",
+)
+
+
 def _emit_records(timings: dict[str, float], sf: str) -> list[str]:
-    """Derive the calibration/normalized keys and render the bench's
-    stdout JSONL records (pure — unit-tested in test_bench_harness.py).
+    """The bench's stdout JSONL records, derived from the raw walls (pure;
+    pinned byte for byte by test_emit_records_golden). The driver keeps
+    only the LAST 2000 chars of stdout and the full record overflows
+    them, so every key a run is judged on also rides in whole lines
+    inside that tail (budget asserted by test_emit_records_tail_budget):
 
-    Line 1 is the full record; then one or more compact trend-norm
-    records; the compact headline record is LAST. The driver records
-    only the LAST 2000 chars of stdout, and the full line (~70+ keys)
-    overflows that window — round 8's artifact lost the four
-    BASELINE.md-comparable m33 headlines entirely, and round 12's kept
-    most per-query _norm twins only by luck of position (its first
-    retained line started mid-JSON). So every ADJUDICATION key now rides
-    in small, whole lines inside the tail window:
-
-    - the trend-ratio records carry every banded slope watch NOT already
-      inside the headline's watches — the doc-trend x8-over-x1 ratios
-      (q124_semdedup's included) and the skew-over-balanced ratios; the
-      q124 fixed-cells ratio is a watch, so it rides in the headline —
-      with tail-budget key encoding ``<query>_x8r`` =
-      ``trend_<query>_x8_over_x1_ratio`` and ``<query>_skewr`` =
-      ``trend_<query>_skew_over_balanced_ratio`` (values rounded to 3
-      decimals), chunked into lines short enough that a tail-parse
-      recovers each whole (budget asserted by
-      test_emit_records_tail_budget);
-    - the headline record repeats the m33 headlines + the watched trend
-      bands + host-calibration metrics, and stays the final line (the
-      driver parses the last line). Round 14 (driver-visibility fix,
-      VERDICT r13 item 1): its ``queries`` dict ADDITIVELY carries every
-      registry bench leg's wall (2-decimal seconds) after the four m33
-      keys — the driver's PERF/scaling per-query surface previously saw
-      only the sink/fetch-bound m33 headlines, so core-count scaling was
-      computed over legs that cannot scale. No key was removed or
-      renamed; the m33 keys keep their exact former values and order.
-
-    Per-leg ``trend_*_norm`` twins and raw trend walls stay in the FULL
-    record (line 1) only: the tail budget cannot hold them AND the
-    registry walls, the banded evidence is the ratios (now explicit —
-    previously derivable as x8_norm/x1_norm), and absolute trend levels
-    remain recoverable from the full record when stdout is kept, or from
-    watches (raw m33 ctas/export/scan-control walls, calibration
-    factors). The round-13 compact inventory (all norm twins +
-    m33_export_x2) is superseded by this selection — declared in
-    OPTIMIZATION_r14.md."""
+    1. ``bench_queries_total_wall``: every key plus the derived
+       calibration keys and a ``_norm`` twin (wall / calibration_factor)
+       of each non-ratio trend wall, ordered registry walls, raw trend
+       walls, calibration, norms, ratios, m33 headlines, so truncation
+       eats the least needed keys first. ``value`` is the wall-clock
+       total: everything but ``trend_*`` and ``calibration_*``.
+    2. ``bench_trend_norms``, chunked near TREND_NORM_CHUNK_CHARS: every
+       x-over-x1 ratio that is not a watch (the doc trend's and q124's
+       fixed-cells one, as ``<query>_x8r``) and every skew-over-balanced
+       ratio (``<query>_skewr``), rounded to 3 decimals.
+    3. ``bench_m33_headlines``, LAST: the four m33 headlines unrounded,
+       every registry wall (2 decimals), the WATCH_KEYS (the CTAS, q124
+       cells-scaled and export bands, calibration), the calibration
+       reference and the total."""
     timings = dict(timings)
-    cal_pair = [
-        timings[k]
-        for k in ("calibration_x1_first", "calibration_x1_last")
-        if k in timings
-    ]
-    if cal_pair:
-        cal = min(cal_pair)
-        timings["calibration_x1"] = cal
-        cal_factor = round(cal / CALIBRATION_REF_SEC, 3)
-        timings["calibration_factor"] = cal_factor
-        # Calibration-normalized trend walls (raw walls stay; x-over-x1
-        # ratios are scale-invariant so only non-ratio walls get a _norm
-        # twin). The trend_ prefix keeps them out of the wall-clock total.
-        for k in [
-            k
-            for k in timings
-            if k.startswith("trend_")
-            and "_ratio" not in k
-            and not k.endswith("_redraws")  # a count, not a wall
-        ]:
-            timings[k + "_norm"] = round(timings[k] / cal_factor, 4)
-    io_pair = [
-        timings[k]
-        for k in ("calibration_io_x1_first", "calibration_io_x1_last")
-        if k in timings
-    ]
-    if io_pair:
-        # I/O-shaped host-state marker (no _norm machinery — it exists to
-        # ADJUDICATE I/O-sensitive trend moves, not to normalize them).
-        io = min(io_pair)
-        timings["calibration_io_x1"] = io
-        timings["calibration_io_factor"] = round(io / CALIBRATION_IO_REF_SEC, 3)
+    for prefix, ref in (("calibration", CALIBRATION_REF_SEC),
+                        ("calibration_io", CALIBRATION_IO_REF_SEC)):
+        pair = [timings[k] for k in (f"{prefix}_x1_first", f"{prefix}_x1_last")
+                if k in timings]
+        if pair:
+            timings[f"{prefix}_x1"] = min(pair)
+            timings[f"{prefix}_factor"] = round(min(pair) / ref, 3)
+    if "calibration_factor" in timings:
+        for k in [k for k in timings if k.startswith("trend_")
+                  and "_ratio" not in k and not k.endswith("_redraws")]:
+            timings[k + "_norm"] = round(timings[k] / timings["calibration_factor"], 4)
 
-    # m33_rows_x* entries are row-count markers, trend_* entries are
-    # scale-slope evidence, and calibration_* entries are host-state
-    # markers, not headline timings — keep all out of the wall-clock total.
-    total = round(
-        sum(
-            v
-            for k, v in timings.items()
-            if not k.startswith(("m33_rows", "trend_", "calibration_"))
-        ),
-        4,
-    )
-    headline_keys = [
-        "m33_ctas_2800k",
-        "m33_jdbc_export_2800k",
-        "m33_limit100_raw_view",
-        "m33_limit100_warehouse",
-    ]
-    # Tail-priority ordering for the full record: the driver keeps only
-    # the LAST 2000 stdout chars, so the keys that adjudicate a round
-    # ride last — raw trend walls first (sacrificed to truncation first;
-    # recoverable as _norm * calibration_factor), then calibration
-    # markers, normalized walls, the x-over-x1/skew ratios (the primary
-    # slope evidence), and the m33 headlines at the very end.
+    total = round(sum(v for k, v in timings.items()
+                      if not k.startswith(("trend_", "calibration_"))), 4)
+
     def _bucket(k: str) -> int:
-        if k in headline_keys:
+        if k in HEADLINE_KEYS:
             return 5
         if k.endswith("_ratio"):
             return 4
@@ -860,113 +751,48 @@ def _emit_records(timings: dict[str, float], sf: str) -> list[str]:
             return 3
         if k.startswith("calibration_"):
             return 2
-        if k.startswith(("trend_", "m33_rows")):
-            return 1
-        return 0
+        return 1 if k.startswith("trend_") else 0
 
-    ordered = {
-        k: timings[k]
-        for k in sorted(timings, key=lambda k: (_bucket(k), list(timings).index(k)))
-    }
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    full = json.dumps(
-        {
-            "metric": "bench_queries_total_wall",
-            "value": total,
-            "unit": "sec",
-            "queries": ordered,
-            "sf": sf_val,
-        }
-    )
-    # The watched trend bands + host-calibration metrics ride INSIDE the
-    # headline record (the last line, always fully inside the driver's
-    # 2000-char tail and parsed) so neither truncation nor host drift can
-    # hide them: CTAS x1 base + x10 wall (2.7-3.8 quiet band; the x1 base
-    # is the PRIMARY plan-vs-host evidence for this leg — rock-stable
-    # across rounds at ~3.2 s, so an out-of-band x10 ratio with a flat x1
-    # base is the x10 numerator's documented bimodality, not a plan
-    # change), q124 cells-scaled x8 ratio (2-2.5x band), export x2 ratio,
-    # and calibration_x1/factor for normalizing every other trend wall
-    # post-hoc.
-    watch_keys = [
-        "trend_m33_ctas_x1",
-        f"trend_m33_ctas_x{CTAS_TREND_SCALE}",
-        f"trend_m33_ctas_x{CTAS_TREND_SCALE}_norm",
-        f"trend_ctas_x{CTAS_TREND_SCALE}_over_x1_ratio",
-        f"trend_ctas_x{CTAS_TREND_SCALE}_redraws",
-        f"trend_q124_cells_scaled_x{DOC_TREND_SCALE}_over_x1_ratio",
-        f"trend_export_x{EXPORT_TREND_SCALE}_over_x1_ratio",
-        f"trend_m33_export_x{EXPORT_TREND_SCALE}_scan_control",
-        "calibration_x1",
-        "calibration_factor",
-        "calibration_io_x1",
-        "calibration_io_factor",
-    ]
+    full = json.dumps({
+        "metric": "bench_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": {k: timings[k] for k in sorted(timings, key=_bucket)},
+        "sf": sf_val,
+    })
     # compact separators on the tail-window records: ~150 chars of
     # whitespace matter against the driver's 2000-char capture
-    registry_legs = [k for k in sorted(timings) if _bucket(k) == 0]
-    headline = json.dumps(
-        {
-            "metric": "bench_m33_headlines",
-            "unit": "sec",
-            "queries": {
-                # m33 keys first, exact values/order as every prior round;
-                # then the registry walls (additive; 2-decimal seconds)
-                **{k: timings[k] for k in headline_keys if k in timings},
-                **{k: round(timings[k], 2) for k in registry_legs},
-            },
-            "watches": {k: timings[k] for k in watch_keys if k in timings},
-            "calibration_ref": CALIBRATION_REF_SEC,
-            "total": total,
-            "sf": sf_val,
+    compact = (",", ":")
+    headline = json.dumps({
+        "metric": "bench_m33_headlines",
+        "unit": "sec",
+        "queries": {
+            **{k: timings[k] for k in HEADLINE_KEYS if k in timings},
+            **{k: round(timings[k], 2) for k in sorted(timings) if _bucket(k) == 0},
         },
-        separators=(",", ":"),
-    )
+        "watches": {k: timings[k] for k in WATCH_KEYS if k in timings},
+        "calibration_ref": CALIBRATION_REF_SEC,
+        "total": total,
+        "sf": sf_val,
+    }, separators=compact)
 
-    # Compact trend-ratio records: every banded slope watch NOT already
-    # inside the headline's watches — doc-trend x8/x1 ratios and
-    # skew-over-balanced ratios (the q124 fixed-cells ratio is a watch and
-    # rides in the headline) — chunked into whole
-    # lines that fit the driver's tail window. (Norm twins moved to the
-    # full record only in round 14 — see the docstring.)
-    # Key encoding (tail budget): '<query>_xNr' = trend_<query>_xN_over_x1
-    # ratio, '<query>_skewr' = trend_<query>_skew_over_balanced_ratio.
-    compact: dict[str, float] = {}
+    ratios: dict[str, float] = {}
     for k, v in timings.items():
         if k.endswith("_skew_over_balanced_ratio"):
-            # round here too (not just trust the producer): an unrounded
-            # division is ~18 chars of float repr per key, and the tail
-            # budget this record exists for assumes short values
-            short = k[len("trend_") : -len("_skew_over_balanced_ratio")]
-            compact[short + "_skewr"] = round(v, 3)
-        elif (
-            k.startswith("trend_")
-            and k.endswith("_over_x1_ratio")
-            and k not in watch_keys
-        ):
-            short = k[len("trend_") : -len("_over_x1_ratio")]
-            compact[short + "r"] = round(v, 3)
-    norm_lines: list[str] = []
-    if compact:
-        chunk: dict[str, float] = {}
-        chunks: list[dict[str, float]] = [chunk]
-        for k, v in compact.items():
-            if len(json.dumps(chunk)) > TREND_NORM_CHUNK_CHARS:
-                chunk = {}
-                chunks.append(chunk)
-            chunk[k] = v
-        for i, c in enumerate(chunks):
-            norm_lines.append(
-                json.dumps(
-                    {
-                        "metric": "bench_trend_norms",
-                        "part": f"{i + 1}/{len(chunks)}",
-                        "unit": "sec/cal",
-                        "queries": c,
-                    },
-                    separators=(",", ":"),
-                )
-            )
+            ratios[k[len("trend_"):-len("_skew_over_balanced_ratio")] + "_skewr"] = round(v, 3)
+        elif k.startswith("trend_") and k.endswith("_over_x1_ratio") and k not in WATCH_KEYS:
+            ratios[k[len("trend_"):-len("_over_x1_ratio")] + "r"] = round(v, 3)
+    chunks: list[dict[str, float]] = []
+    for k, v in ratios.items():
+        if not chunks or len(json.dumps(chunks[-1])) > TREND_NORM_CHUNK_CHARS:
+            chunks.append({})
+        chunks[-1][k] = v
+    norm_lines = [
+        json.dumps({"metric": "bench_trend_norms", "part": f"{i}/{len(chunks)}",
+                    "unit": "sec/cal", "queries": c}, separators=compact)
+        for i, c in enumerate(chunks, 1)
+    ]
     return [full, *norm_lines, headline]
 
 

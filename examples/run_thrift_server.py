@@ -22,7 +22,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from hdfs_hive_sql_playground_spark.engine import Engine  # noqa: E402
-from hdfs_hive_sql_playground_spark.thrift import wire_sql, wire_tables  # noqa: E402
+from hdfs_hive_sql_playground_spark.thrift import WireClient, wire_sql  # noqa: E402
 
 
 def main() -> int:
@@ -55,13 +55,12 @@ def main() -> int:
         print("THRIFT_OK wire-ddl-visible-to-engine")
 
         # Metadata surface (beeline's !tables).
-        tables = wire_tables(engine.spark, server.url)
+        with WireClient(engine.spark, server.url) as wc:
+            tables = wc.tables()
         assert "nation" in tables and "wire_made" in tables, tables
         print(f"THRIFT_OK metadata tables={len(tables)}")
 
         # --- adversarial wire contracts -------------------------------
-        from hdfs_hive_sql_playground_spark.thrift import WireClient
-
         with WireClient(engine.spark, server.url) as wc:
             # A failing statement must surface the engine's error class
             # to the wire client (not a silent empty result), and the

@@ -96,9 +96,7 @@ def _sql_shell(eng, n: int = 20, url: str | None = None) -> None:
             return True
         if verb == "!tables":
             if state["client"] is not None:
-                from hdfs_hive_sql_playground_spark.thrift import wire_tables
-
-                names = wire_tables(eng.spark, state["url"])
+                names = state["client"].tables()
             else:
                 names = [t.name for t in eng.spark.catalog.listTables()]
             for t in sorted(names):

@@ -530,14 +530,19 @@ def _token_hash32(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("bigint")
 
 
-def _simhash_oracle_ctes(max_doc: int = 200) -> str:
+# q83 (and so q98) fingerprints the documents with doc_id below this; the
+# Spark query and the oracle CTEs both read it.
+SIMHASH_MAX_DOC = 200
+
+
+def _simhash_oracle_ctes() -> str:
     """CTE chain ending in ``sim(doc_id, simhash)`` — shared by the q83
     fingerprint oracle and the q98 banded-near-dup oracle so the two can
     never drift apart."""
     return f"""
     WITH toks AS (
       SELECT DISTINCT doc_id, UNNEST(string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0b\\f\\r]+')) AS tok
-      FROM documents WHERE doc_id < {max_doc}
+      FROM documents WHERE doc_id < {SIMHASH_MAX_DOC}
     ),
     th AS (
       SELECT doc_id, {' + '.join(
@@ -570,7 +575,7 @@ def _simhash_oracle_ctes(max_doc: int = 200) -> str:
     "nibble formula is engine-portable, so even this is oracle-checked.",
 )
 def q83_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < SIMHASH_MAX_DOC)
     toks = d.select(
         "doc_id", F.explode(F.array_distinct(_words(F.col("text")))).alias("tok")
     )

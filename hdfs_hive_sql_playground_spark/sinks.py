@@ -28,18 +28,18 @@ DEFAULT_WAREHOUSE = os.path.join(
 
 
 HIVE_TEXT_NULL = r"\N"  # LazySimpleSerDe's NULL token
+TEXT_SEP = ","  # the field delimiter ctas_text writes and read_text_table reads
 
 
 def ctas_text(
     df: DataFrame,
     table: str,
     warehouse_dir: str | None = None,
-    sep: str = ",",
 ) -> str:
     """Materialize ``df`` as a comma-delimited TEXTFILE table (A17).
 
     Serialization matches Hive's LazySimpleSerDe for the ``\\N`` NULL
-    token: cells joined with ``sep`` unquoted, NULL written as ``\\N`` —
+    token: cells joined with ``TEXT_SEP`` unquoted, NULL written as ``\\N`` —
     delimiter collisions inside values are the caller's responsibility,
     same as the reference's text tables. (This is also ~25% faster than
     the quoting CSV writer: a codegen ``concat_ws`` projection into the
@@ -58,7 +58,7 @@ def ctas_text(
     cells = [
         F.coalesce(F.col(c).cast("string"), F.lit(HIVE_TEXT_NULL)) for c in df.columns
     ]
-    df.select(F.concat_ws(sep, *cells).alias("value")).write.mode("overwrite").text(path)
+    df.select(F.concat_ws(TEXT_SEP, *cells).alias("value")).write.mode("overwrite").text(path)
     return path
 
 
@@ -67,7 +67,6 @@ def read_text_table(
     table_or_path: str,
     schema: StructType | str,
     warehouse_dir: str | None = None,
-    sep: str = ",",
 ) -> DataFrame:
     """Schema-on-read over a delimited warehouse table written by
     :func:`ctas_text` (the ``SELECT * FROM m33 LIMIT 100`` verification
@@ -78,7 +77,7 @@ def read_text_table(
         path = os.path.join(warehouse_dir or DEFAULT_WAREHOUSE, path)
     return (
         spark.read.schema(schema)
-        .option("sep", sep)
+        .option("sep", TEXT_SEP)
         .option("nullValue", HIVE_TEXT_NULL)
         .csv(path)
     )

@@ -39,14 +39,6 @@ FILE_COL = "input_file"
 # constraint Hive's split-0-only header skip imposes, made explicit.
 MAX_WHOLETEXT_FILE_BYTES = 256 * 1024 * 1024
 
-# The guard walks the directory ONCE per (path, limit) and caches the
-# verdict for the session: external-table ingest directories are immutable
-# between catalog operations (the same assumption behind Hive's metastore
-# partition statistics), so re-walking on EVERY query — five times in a
-# row for an interactive LIMIT-fetch loop — is pure listing overhead on
-# top of the listing the scan itself repeats.
-_guard_ok: set[tuple[str, int]] = set()
-
 
 def data_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ...]:
     """(path, size, mtime ms) of every data file at ``path`` (a file, a
@@ -74,9 +66,9 @@ def data_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ..
 
 def _check_wholetext_sizes(spark: SparkSession, path: str, limit: int) -> None:
     """Driver-side size guard for the wholetext path, over
-    :func:`data_files` so every scheme Spark reads is guarded."""
-    if (path, limit) in _guard_ok:
-        return
+    :func:`data_files` so every scheme Spark reads is guarded. It lists
+    the files on every build (metadata only, ~5 ms for an m33 partition
+    directory), so a file rewritten past the limit is refused."""
     for f, size, _mtime in data_files(spark, path):
         if size > limit:
             raise ValueError(
@@ -85,7 +77,6 @@ def _check_wholetext_sizes(spark: SparkSession, path: str, limit: int) -> None:
                 "Split the file upstream or read it without "
                 "skip_header_lines."
             )
-    _guard_ok.add((path, limit))
 
 
 def read_text_files(

@@ -224,8 +224,6 @@ def crawl_front_stream(
     ts_col: str = "ts",
     text_col: str = "text",
     keep_params: tuple[str, ...] = ("id",),
-    min_words: int | None = None,
-    min_word_chars: int | None = None,
 ) -> DataFrame:
     """The streaming dual of q143's crawl front half, composed from the
     same pieces the batch operator composes: canonical-URL keep-first
@@ -236,7 +234,7 @@ def crawl_front_stream(
     differ from the batch audit on one point by design: a stream can only
     emit rows it keeps, so per-drop stage attribution (q143's 'url_dup' /
     'exact_dup' rows) is the batch operator's job; the stream's job is the
-    live frontier. Thresholds default to q143's CRAWL_MIN_* constants.
+    live frontier. Thresholds are q143's CRAWL_MIN_* constants.
 
     State at 100 TB/day: two watermark-bounded dedup states — one keyed on
     the short canonical string, one on the 16-byte content hash — both
@@ -252,10 +250,6 @@ def crawl_front_stream(
         CRAWL_MIN_WORDS,
     )
 
-    if min_words is None:
-        min_words = CRAWL_MIN_WORDS
-    if min_word_chars is None:
-        min_word_chars = CRAWL_MIN_WCHARS
     norm = content_norm(F.col(text_col))
     nw = F.size(F.split(norm, " ")).cast("bigint")
     mw = F.floor(
@@ -273,17 +267,15 @@ def crawl_front_stream(
         .dropDuplicatesWithinWatermark(["h"])
     )
     return surv.filter(
-        (F.col("n_words") >= min_words) & (F.col("mw_chars") >= min_word_chars)
+        (F.col("n_words") >= CRAWL_MIN_WORDS) & (F.col("mw_chars") >= CRAWL_MIN_WCHARS)
     )
 
 
 def incremental_ingest_stream(
     docs: DataFrame,
     corpus_hashes: DataFrame,
-    probe_grams: tuple[str, ...] | None = None,
     text_col: str = "text",
     ts_col: str = "ts",
-    probe_n: int | None = None,
     content_key: Column | None = None,
 ) -> DataFrame:
     """The streaming dual of the per-ingest pair q109 + q108: dedup a live
@@ -325,10 +317,6 @@ def incremental_ingest_stream(
     ``queries/dedup.py`` instead of being re-spelled per site."""
     from hdfs_hive_sql_playground_spark.queries.curation2 import PROBE_N, PROBES
 
-    if probe_grams is None:
-        probe_grams = PROBES
-    if probe_n is None:
-        probe_n = PROBE_N
     # grams over a MATERIALIZED words column (see dedup._ngrams_of: a
     # captured split expression re-tokenizes per gram under the
     # interpreted HOF path — O(words²) per doc); __w is added just before
@@ -336,8 +324,8 @@ def incremental_ingest_stream(
     from hdfs_hive_sql_playground_spark.queries.dedup import _ngrams_of
 
     words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    grams = _ngrams_of(F.col("__w"), probe_n)
-    probes_lit = F.array(*[F.lit(p) for p in probe_grams])
+    grams = _ngrams_of(F.col("__w"), PROBE_N)
+    probes_lit = F.array(*[F.lit(p) for p in PROBES])
     # Assign the watermark only when the input doesn't already carry one:
     # Spark disallows REDEFINING a watermark downstream of a stateful
     # operator, and the chained full-pipeline case (crawl_front_stream →

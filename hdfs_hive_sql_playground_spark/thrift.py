@@ -157,6 +157,20 @@ class WireClient:
         finally:
             st.close()
 
+    def tables(self) -> list[str]:
+        """Table and view names visible to THIS wire session, sorted, via
+        JDBC DatabaseMetaData (what beeline's ``!tables`` issues). Under
+        :data:`MULTI_SESSION_CONF` that includes the session's own temp
+        views, which another connection cannot see."""
+        rs = self._conn.getMetaData().getTables(None, None, "%", None)
+        try:
+            names = []
+            while rs.next():
+                names.append(rs.getString(3))
+            return sorted(names)
+        finally:
+            rs.close()
+
     def close(self) -> None:
         self._stack.close()
 
@@ -176,14 +190,3 @@ def wire_sql(
     with WireClient(spark, url, user) as client:
         return client.sql(sql)
 
-
-def wire_tables(spark: SparkSession, url: str, user: str = "anon") -> list[str]:
-    """List table/view names over the wire via JDBC DatabaseMetaData —
-    what beeline's ``!tables`` issues."""
-    with jdbc_connection(spark, url, user) as conn:
-        rs = conn.getMetaData().getTables(None, None, "%", None)
-        names = []
-        while rs.next():
-            names.append(rs.getString(3))
-        rs.close()
-        return sorted(names)

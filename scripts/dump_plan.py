@@ -4,13 +4,23 @@ Usage: python scripts/dump_plan.py OUTDIR SUFFIX QUERY [QUERY...]
 
 Writes OUTDIR/<query>_<SUFFIX>.txt for each query, evaluated against
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01) on local[4].
+Expression ids (``#123``) are written as ``#N`` and this checkout's root
+directory as ``<repo>``, so plans dumped from two checkouts compare with
+a plain ``diff -r``.
 """
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+
+def comparable(plan: str) -> str:
+    """``plan`` with expression ids and the checkout root masked."""
+    return re.sub(r"#\d+", "#N", plan.replace(REPO, "<repo>"))
 
 
 def main() -> None:
@@ -29,9 +39,9 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = registry[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        plan = comparable(df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"
-        )
+        ))
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

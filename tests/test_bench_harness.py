@@ -7,7 +7,9 @@ measured in-session AFTER the m33 headlines, never before."""
 
 from __future__ import annotations
 
+import collections
 import json
+import os
 import subprocess
 import sys
 import types
@@ -294,7 +296,6 @@ def test_emit_records_two_lines_headlines_last_and_watches():
         "trend_m33_ctas_x1": 0.32,
         "trend_m33_ctas_x10": 3.0,
         "trend_ctas_x10_over_x1_ratio": 3.0,
-        "m33_rows_x1": 2800000.0,
         "m33_jdbc_export_2800k": 39.0,
         "m33_limit100_raw_view": 1.2,
         "m33_limit100_warehouse": 0.07,
@@ -316,7 +317,7 @@ def test_emit_records_two_lines_headlines_last_and_watches():
         "m33_limit100_raw_view",
         "m33_limit100_warehouse",
     ]
-    # rows/trend/calibration markers excluded from the wall-clock total
+    # trend/calibration markers excluded from the wall-clock total
     assert full["value"] == round(1.0 + 3.8 + 39.0 + 1.2 + 0.07, 4)
     assert headline["metric"] == "bench_m33_headlines"
     # Round 14 (driver-visibility fix): the headline record's queries dict
@@ -405,24 +406,16 @@ def test_emit_records_tail_priority_ordering():
     assert keys[-1] == "m33_ctas_2800k"
 
 
-def test_emit_records_tail_budget():
-    """Artifact-durability contract, restated round 14 (VERDICT r13 item
-    1): EVERY adjudication key — the registry bench walls (NEW: inside
-    the headline record's queries dict, so the driver's PERF/scaling
-    per-query surface finally covers parallelizable legs), every banded
-    ratio (doc-trend x8/x1, q124 fixed-cells, skew-over-balanced — now
-    explicit in the compact records instead of derivable from norm
-    twins), the watches, and the m33 headlines — must ride in complete
-    JSONL lines that together fit the driver's 2000-char stdout tail.
-    Per-leg _norm twins stay in the FULL record (line 1) only; the tail
-    cannot hold them AND the registry walls, and the banded evidence is
-    the ratios. Built with the FULL current inventory (every bench=True
-    registry leg, read from the registry; every doc-trend query x1/x8,
-    skew legs, m33 legs, q124 legs) so adding a leg that overflows the
-    budget fails HERE, not in the round's clipped artifact."""
+def _registry_legs() -> list[str]:
     from hdfs_hive_sql_playground_spark.queries import all_queries
 
-    registry_legs = [n for n, spec in all_queries().items() if spec.bench]
+    return [n for n, spec in all_queries().items() if spec.bench]
+
+
+def _full_inventory() -> dict[str, float]:
+    """Every key a full bench run produces, with fixed walls: the
+    calibration pairs, the m33 headlines, every registry leg, and the
+    m33, q124, doc and skew trend legs."""
     timings = {
         "calibration_x1_first": 0.46,
         "calibration_x1_last": 0.47,
@@ -432,7 +425,6 @@ def test_emit_records_tail_budget():
         "m33_jdbc_export_2800k": 37.056,
         "m33_limit100_raw_view": 1.089,
         "m33_limit100_warehouse": 0.047,
-        "m33_rows_x1": 2800000.0,
         "trend_m33_ctas_x1": 4.2294,
         f"trend_m33_ctas_x{bench.CTAS_TREND_SCALE}": 12.8585,
         f"trend_ctas_x{bench.CTAS_TREND_SCALE}_over_x1_ratio": 3.04,
@@ -448,7 +440,7 @@ def test_emit_records_tail_budget():
         f"trend_q124_cells_scaled_x{bench.DOC_TREND_SCALE}": 4.2501,
         f"trend_q124_cells_scaled_x{bench.DOC_TREND_SCALE}_over_x1_ratio": 2.002,
     }
-    for name in registry_legs:
+    for name in _registry_legs():
         timings[name] = 12.3456  # 2-decimal rounding asserted below
     for name in bench.DOC_TREND_QUERIES:
         timings[f"trend_{name}_x1"] = 1.2345
@@ -457,6 +449,26 @@ def test_emit_records_tail_budget():
     for name in bench.SKEW_TREND_QUERIES:
         timings[f"trend_{name}_x{bench.DOC_TREND_SCALE}_skew"] = 12.3456
         timings[f"trend_{name}_skew_over_balanced_ratio"] = 1.0123456789012345
+    return timings
+
+
+def test_emit_records_tail_budget():
+    """Artifact-durability contract, restated round 14 (VERDICT r13 item
+    1): EVERY adjudication key — the registry bench walls (NEW: inside
+    the headline record's queries dict, so the driver's PERF/scaling
+    per-query surface finally covers parallelizable legs), every banded
+    ratio (doc-trend x8/x1, q124 fixed-cells, skew-over-balanced — now
+    explicit in the compact records instead of derivable from norm
+    twins), the watches, and the m33 headlines — must ride in complete
+    JSONL lines that together fit the driver's 2000-char stdout tail.
+    Per-leg _norm twins stay in the FULL record (line 1) only; the tail
+    cannot hold them AND the registry walls, and the banded evidence is
+    the ratios. Built with the FULL current inventory (every bench=True
+    registry leg, read from the registry; every doc-trend query x1/x8,
+    skew legs, m33 legs, q124 legs) so adding a leg that overflows the
+    budget fails HERE, not in the round's clipped artifact."""
+    registry_legs = _registry_legs()
+    timings = _full_inventory()
     lines = bench._emit_records(timings, "0.1")
     norm_lines, headline_line = lines[1:-1], lines[-1]
     assert norm_lines, "full inventory must produce trend-ratio records"
@@ -495,6 +507,94 @@ def test_emit_records_tail_budget():
     # fit the driver's 2000-char capture with headroom for line breaks
     tail = "\n".join([*norm_lines, headline_line])
     assert len(tail) < 1900, f"tail budget exceeded: {len(tail)} chars"
+
+
+def test_emit_records_golden():
+    """The output contract, byte for byte: the full inventory renders to
+    exactly the lines in tests/golden/bench_emit_records.jsonl.
+    Regenerating that file is a deliberate change to what the driver
+    parses: a new bench query, key or rounding."""
+    path = os.path.join(os.path.dirname(__file__), "golden", "bench_emit_records.jsonl")
+    with open(path) as fh:
+        want = fh.read().splitlines()
+    assert bench._emit_records(_full_inventory(), "0.1") == want
+
+
+def test_ratio_legs_keep_each_legs_protocol(monkeypatch, tmp_path):
+    """The one scale-trend runner keeps every leg's protocol (README
+    "Bench protocol"): doc trend x1 min-of-3 then x8 min-of-2 per query;
+    q124 one warm x1 pass, x1 min-of-3, x8 min-of-2, then x8 min-of-2
+    with N_CELLS x8; skew one sf0.001 pass, then balanced and skewed
+    min-of-2, all under CUMSUM_BUCKET_WIDTH 2048. Every draw is
+    quiesced, the patched constants are restored, and the keys land in
+    the order the records depend on."""
+    from hdfs_hive_sql_playground_spark.queries import similarity, text
+
+    events: list[tuple] = []
+    walls = {"x1": 2.0, "x8": 6.0, "skew": 7.0}
+
+    def noop(d):
+        events.append(("pass", d))
+
+    def min_wall(spark, run, draws, warm=0, quiesce=True, after=None):
+        run()
+        d = events.pop()[1]
+        events.append((d, draws, warm, quiesce, similarity.N_CELLS,
+                       text.CUMSUM_BUCKET_WIDTH))
+        return walls[d]
+
+    def doc_fixture(spark, sf_dir, scale=bench.DOC_TREND_SCALE, skew=False):
+        return "skew" if skew else f"x{scale}"
+
+    monkeypatch.setattr(bench, "_noop", noop)
+    monkeypatch.setattr(bench, "_min_wall", min_wall)
+    monkeypatch.setattr(bench, "_doc_fixture", doc_fixture)
+    monkeypatch.setattr(bench, "release_tracked_caches", lambda: 0)
+    monkeypatch.setattr(bench, "_warm_dir", lambda sf_dir: str(tmp_path))
+    monkeypatch.setattr(
+        bench, "all_queries",
+        lambda: collections.defaultdict(
+            lambda: types.SimpleNamespace(fn=lambda spark, d: d)),
+    )
+    cells, width = similarity.N_CELLS, text.CUMSUM_BUCKET_WIDTH
+
+    timings: dict[str, float] = {}
+    bench._bench_doc_trend(None, "/sf", timings)
+    assert events == [("x1", 3, 0, True, cells, width),
+                      ("x8", 2, 0, True, cells, width)] * len(bench.DOC_TREND_QUERIES)
+    q = bench.DOC_TREND_QUERIES[0]
+    assert list(timings)[:3] == [f"trend_{q}_x1", f"trend_{q}_x8",
+                                 f"trend_{q}_x8_over_x1_ratio"]
+    assert timings[f"trend_{q}_x8_over_x1_ratio"] == 3.0
+
+    events.clear()
+    timings = {}
+    bench._bench_q124_trend(None, "/sf", timings, "q124_semdedup_prune")
+    assert events == [
+        ("pass", "x1"),
+        ("x1", 3, 0, True, cells, width),
+        ("x8", 2, 0, True, cells, width),
+        ("x8", 2, 0, True, cells * bench.DOC_TREND_SCALE, width),
+    ]
+    assert list(timings) == [
+        "trend_q124_semdedup_prune_x1",
+        "trend_q124_semdedup_prune_x8",
+        "trend_q124_semdedup_prune_x8_over_x1_ratio",
+        "trend_q124_cells_scaled_x8",
+        "trend_q124_cells_scaled_x8_over_x1_ratio",
+    ]
+
+    events.clear()
+    timings = {}
+    bench._bench_doc_skew_trend(None, "/sf", timings)
+    assert events == [("pass", str(tmp_path)),
+                      ("x8", 2, 0, True, cells, 2048),
+                      ("skew", 2, 0, True, cells, 2048)] * len(bench.SKEW_TREND_QUERIES)
+    q = bench.SKEW_TREND_QUERIES[0]
+    assert list(timings)[:2] == [f"trend_{q}_x8_skew",
+                                 f"trend_{q}_skew_over_balanced_ratio"]
+    assert timings[f"trend_{q}_skew_over_balanced_ratio"] == round(7.0 / 6.0, 3)
+    assert (similarity.N_CELLS, text.CUMSUM_BUCKET_WIDTH) == (cells, width)
 
 
 def test_derby_table_lock_export_roundtrips_exactly(spark):

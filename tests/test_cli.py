@@ -175,6 +175,40 @@ def test_cli_sql_shell_wire_mode_persistent_session():
     assert "top_v\n41" in out, out  # ...and the session survived it (TOP shim too)
 
 
+def test_cli_sql_shell_wire_tables_lists_own_session_views():
+    """!tables in wire mode lists what the shell's OWN wire session sees.
+    Under MULTI_SESSION_CONF each connection is a separate Spark session,
+    so a temp view created through the shell is visible only on the
+    shell's connection; a second connection would not list it.
+    Subprocess for the same static-conf reason as the test above."""
+    script = (
+        "import io, sys\n"
+        "from hdfs_hive_sql_playground_spark.engine import Engine\n"
+        "from hdfs_hive_sql_playground_spark.thrift import MULTI_SESSION_CONF\n"
+        "from hdfs_hive_sql_playground_spark import cli\n"
+        "eng = Engine(conf=MULTI_SESSION_CONF).start()\n"
+        "server = eng.serve_thrift()\n"
+        "sys.stdin = io.StringIO(\n"
+        "    f'!connect {server.url}\\n'\n"
+        "    'CREATE TEMPORARY VIEW tv_probe AS SELECT 1 AS v;\\n'\n"
+        "    '!tables\\n'\n"
+        ")\n"
+        "cli._sql_shell(eng, n=5)\n"
+        "server.stop()\n"
+        "eng.stop()\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=420,
+        cwd=REPO,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "connected: jdbc:hive2://" in r.stdout, r.stdout
+    assert "tv_probe" in r.stdout.splitlines(), r.stdout
+
+
 def test_cli_shell_connect_closes_previous_wire_session(monkeypatch, capsys):
     """!connect on an already-connected shell must close the old WireClient
     before replacing it — otherwise every retarget leaks a server-side

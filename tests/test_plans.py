@@ -962,3 +962,24 @@ def test_q145_nfc_is_one_arrow_pass_then_hash_exchange(spark, sf_dir):
     assert p.count("ArrowEvalPython") == 1, p
     assert plans.count_exchanges(df) == 1, p
     assert "partial_count" in p, p
+
+
+def test_dump_plan_masks_expression_ids_and_checkout_root():
+    """scripts/dump_plan.py writes plans two checkouts can `diff -r`:
+    expression ids and the checkout root are masked, nothing else."""
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "dump_plan.py")
+    spec = importlib.util.spec_from_file_location("dump_plan", path)
+    dump_plan = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(dump_plan)
+    plan = (
+        "(1) Scan parquet \nOutput [2]: [k#12L, v#345]\n"
+        f"Location: InMemoryFileIndex [file:{dump_plan.REPO}/spark-warehouse/t]\n"
+        "Condition : (k#12L > 5)"
+    )
+    assert dump_plan.comparable(plan) == (
+        "(1) Scan parquet \nOutput [2]: [k#NL, v#N]\n"
+        "Location: InMemoryFileIndex [file:<repo>/spark-warehouse/t]\n"
+        "Condition : (k#NL > 5)"
+    )

@@ -204,34 +204,20 @@ def test_q128_per_row_cast_overflow_fails_loudly(spark, tmp_path):
         spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
-def test_wholetext_size_guard_caches_per_path_and_limit(spark, tmp_path):
-    """The guard walks a (path, limit) once per session and caches the OK
-    verdict — interactive fetch loops must not re-list the tree on every
-    query (the ingest-directory-immutability assumption, documented at
-    the cache). Distinct limits stay distinct cache keys, and clearing
-    the cache re-validates."""
-    from hdfs_hive_sql_playground_spark.sources import text as text_src
+def test_wholetext_size_guard_rechecks_every_build(spark, tmp_path):
+    """The guard lists the files on every build and keeps no verdict: a
+    directory that passed once is refused after one of its files is
+    rewritten past the limit."""
+    from hdfs_hive_sql_playground_spark.sources.text import read_text_files
 
     d = tmp_path / "txt"
     d.mkdir()
     (d / "a.txt").write_text("h\nrow\n")
     uri = f"file://{d}"
-    read_text_files = text_src.read_text_files
 
     read_text_files(spark, uri, skip_header_lines=1, max_file_bytes=1024)
-    assert (uri, 1024) in text_src._guard_ok
-
-    # A file appearing AFTER the verdict is not re-checked on the cached
-    # (path, limit) — the documented immutable-ingest trade...
-    (d / "big.txt").write_text("h\n" + "x" * 4096 + "\n")
-    read_text_files(spark, uri, skip_header_lines=1, max_file_bytes=1024)
-
-    # ...but an uncached limit re-walks and refuses, and so does the same
-    # limit once the cache entry is dropped.
-    with pytest.raises(ValueError, match="big.txt"):
-        read_text_files(spark, uri, skip_header_lines=1, max_file_bytes=512)
-    text_src._guard_ok.discard((uri, 1024))
-    with pytest.raises(ValueError, match="big.txt"):
+    (d / "a.txt").write_text("h\n" + "x" * 5 * 1024 + "\n")
+    with pytest.raises(ValueError, match="a.txt"):
         read_text_files(spark, uri, skip_header_lines=1, max_file_bytes=1024)
 
 
