@@ -24,6 +24,7 @@ from hdfs_hive_sql_playground_spark import dialect
 from hdfs_hive_sql_playground_spark.session import get_spark
 from hdfs_hive_sql_playground_spark.sinks import DEFAULT_WAREHOUSE, ctas_text, read_text_table
 from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, jdbc_count, jdbc_ddl
+from hdfs_hive_sql_playground_spark.sources.text import text_partition, union_partitions
 from hdfs_hive_sql_playground_spark.tables import register_all
 
 log = logging.getLogger(__name__)
@@ -46,7 +47,8 @@ class Engine:
     conf: dict[str, str] = dc_field(default_factory=dict)
     _spark: SparkSession | None = None
     # Header-skipping external text tables the DDL shim overlays (see
-    # _intercept_ddl), by table name.
+    # _intercept_ddl), by table name: "partitions" maps each partition value
+    # to its directory, "branches" to its scan branch in this session.
     _text_shims: dict[str, dict[str, Any]] = dc_field(
         default_factory=dict, init=False, repr=False
     )
@@ -68,6 +70,8 @@ class Engine:
         return self
 
     def stop(self) -> None:
+        for shim in self._text_shims.values():
+            shim["branches"].clear()  # DataFrames of the stopped session
         if self._spark is not None:
             self._spark.stop()
             self._spark = None
@@ -147,16 +151,18 @@ class Engine:
     _CREATE_VIEW_RE = re.compile(r"CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(\w+)", re.IGNORECASE)
 
     def _refresh_text_shim(self, name: str) -> None:
-        from hdfs_hive_sql_playground_spark.sources.text import external_text_table
-
+        # A partition's scan branch is built (and its files listed) once and
+        # kept; only the union is rebuilt, so P ADDs cost P listings rather
+        # than P(P+1)/2.
         shim = self._text_shims[name]
-        if shim["partitions"]:
-            df = external_text_table(
-                self.spark,
-                partitions=shim["partitions"],
-                partition_col=shim["partition_col"],
-                skip_header_lines=shim["skip"],
-            ).withColumnRenamed("row_str", shim["row_col"])
+        branches = shim["branches"]
+        for value, path in shim["partitions"].items():
+            if value not in branches:
+                branches[value] = text_partition(
+                    self.spark, path, shim["partition_col"], value, shim["skip"]
+                )
+        if branches:
+            df = union_partitions(branches).withColumnRenamed("row_str", shim["row_col"])
         else:
             df = self.spark.createDataFrame(
                 [], f"{shim['row_col']} string, input_file string, {shim['partition_col']} string"
@@ -182,6 +188,7 @@ class Engine:
                 "partition_col": part_col,
                 "skip": skip,
                 "partitions": {},
+                "branches": {},
             }
             self._refresh_text_shim(name)
             return self.spark.sql("SELECT 1 AS ok").limit(0)
@@ -201,6 +208,7 @@ class Engine:
                 except Exception as exc:
                     log.warning("DDL shim: catalog statement %r failed: %s", stmt, exc)
             self._text_shims[name]["partitions"][value] = path
+            self._text_shims[name]["branches"].pop(value, None)
             self._refresh_text_shim(name)
             return self.spark.sql("SELECT 1 AS ok").limit(0)
 

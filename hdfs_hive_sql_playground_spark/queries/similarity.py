@@ -93,6 +93,22 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select("vec_id", _dvec(F.col("embedding")).alias("v"), "label")
 
 
+def _parallelism_floor(spark: SparkSession, sf_dir: str, df: DataFrame) -> DataFrame:
+    """``df`` round-robined over ``defaultParallelism`` partitions when the
+    embeddings scan it derives from has fewer (a small single-file table
+    scans as 1-2 partitions); unchanged otherwise, as at production
+    partition counts. ``df`` keeps the scan's partitioning (the
+    assignment is a map-side projection, its centroids broadcast), so the
+    count is taken on the plain scan: with no exchange in its plan AQE does
+    not wrap it, and ``.rdd`` runs no job. On the persisted assignment
+    ``.rdd`` would run its AQE stages and fill the cache while the query is
+    merely being built."""
+    par = spark.sparkContext.defaultParallelism
+    if load(spark, sf_dir, "embeddings").rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
+
+
 def _assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v, cell, ccos, __nv): nearest-centroid assignment via
     broadcast join; ccos is the cosine to the winning centroid (q124's
@@ -240,9 +256,7 @@ def q84_embedding_neardup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell",
         F.col("__nv").alias("__na"),
     )
-    par = spark.sparkContext.defaultParallelism
-    if probe.rdd.getNumPartitions() < par:
-        probe = probe.repartition(par)
+    probe = _parallelism_floor(spark, sf_dir, probe)
     pairs = (
         probe.join(b, "cell")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -808,14 +822,11 @@ def q124_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         # serialized onto 1-2 cores while 30 idled (measured 2.1-2.5 s;
         # 0.3 s after). Round-robin over the narrow cached assignment
         # rows; the build side is broadcast, so no co-partitioning is
-        # lost. Gated on the actual partition count: at production scale
+        # lost. Gated on the scan's partition count: at production scale
         # the scan already carries >= cores partitions and this is a
         # no-op (the sharded hot-cell branch below has always done the
         # analogous repartition on its composite key).
-        par = spark.sparkContext.defaultParallelism
-        a = assign
-        if a.rdd.getNumPartitions() < par:
-            a = a.repartition(par)
+        a = _parallelism_floor(spark, sf_dir, assign)
         b = assign.select(
             F.col("vec_id").alias("b_id"),
             F.col("v").alias("bv"),
@@ -1006,10 +1017,9 @@ def q137_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # onto 1-2 cores. Gated round-robin over the narrow rows; no-op at
     # production partition counts. Warm A/B min-of-4: 1.48 -> 1.36 s,
     # output identical.
-    base = a.select("vec_id", "v", "__nv", F.col("cell").alias("cell0"))
-    par = spark.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
-        base = base.repartition(par)
+    base = _parallelism_floor(
+        spark, sf_dir, a.select("vec_id", "v", "__nv", F.col("cell").alias("cell0"))
+    )
     picked = (
         base.crossJoin(cents)
         .withColumn("__best", best)

@@ -1724,13 +1724,14 @@ def q141_target_affinity_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # decimal(19,0) x decimal(38,0) -> decimal(38,0): exact while the
     # product fits 38 digits (~1e25 at 100 TB, far inside the bound).
-    # Past 38 digits Spark's decimal multiply yields NULL (ANSI off), so
-    # the comparison goes NULL and `selected` silently falls to 0 via the
-    # otherwise(0) — while DuckDB's HUGEINT stays exact to ~1.7e38. The
-    # divergence window is theoretical at 13 orders of magnitude beyond
-    # the design point, but if the bound ever tightens, compare via the
-    # overflow-safe cross ratio (t_mass/c_mass vs nt/nc in two decimal
-    # divisions) instead of widening the product.
+    # Past 38 digits Spark's decimal multiply raises
+    # NUMERIC_VALUE_OUT_OF_RANGE (engine sessions run with ANSI on, the
+    # Spark 4.1 default), so the query fails loudly instead of answering
+    # — while DuckDB's HUGEINT stays exact to ~1.7e38. The failure window
+    # is theoretical at 13 orders of magnitude beyond the design point,
+    # but if the bound ever tightens, compare via the overflow-safe cross
+    # ratio (t_mass/c_mass vs nt/nc in two decimal divisions) instead of
+    # widening the product.
     return doc.crossJoin(F.broadcast(tot)).select(
         "doc_id",
         "n_tok",

@@ -27,6 +27,7 @@ Design for scale:
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,21 +48,36 @@ def data_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ..
     s3a://) works, not just local paths. Metadata-only: globStatus +
     listStatus, the same listing a scan itself performs. Hidden files
     (``_``/``.`` prefixes) are skipped exactly as FileInputFormat skips
-    them."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    them.
+
+    Every py4j call is a round trip, and this runs once per table
+    registration: the Path class is named directly instead of walked
+    package by package through ``spark._jvm`` (one reflection call per
+    name), a Java array is read by index, not iterated (iterating sizes
+    it again at every step), and each entry's path is fetched once (its
+    name is the last component of its string form). A single file costs
+    12 calls."""
+    hpath = JavaClass("org.apache.hadoop.fs.Path", spark._sc._gateway._gateway_client)(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stack = list(fs.globStatus(hpath) or [])
+    stack = _elements(fs.globStatus(hpath))
     files = []
     while stack:
         st = stack.pop()
-        if st.getPath().getName().startswith(("_", ".")):
+        p = st.getPath()
+        uri = p.toString()
+        if uri.rsplit("/", 1)[-1].startswith(("_", ".")):
             continue
         if st.isDirectory():
-            stack.extend(fs.listStatus(st.getPath()))
+            stack.extend(_elements(fs.listStatus(p)))
         else:
-            files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+            files.append((uri, st.getLen(), st.getModificationTime()))
     return tuple(sorted(files))
+
+
+def _elements(array) -> list:
+    """The elements of a py4j Java array (``None`` for a null one): one
+    length call, then two per element (the index call checks the bound)."""
+    return [] if array is None else [array[i] for i in range(len(array))]
 
 
 def _check_wholetext_sizes(spark: SparkSession, path: str, limit: int) -> None:
@@ -176,15 +192,37 @@ def external_text_table(
     ``per_file_cols`` passes through to :func:`read_text_files` (per-file
     filename-derived metadata, hoisted above the explode).
     """
-    if not partitions:
+    return union_partitions({
+        value: text_partition(spark, path, partition_col, value, skip_header_lines, per_file_cols)
+        for value, path in partitions.items()
+    })
+
+
+def text_partition(
+    spark: SparkSession,
+    path: str,
+    partition_col: str,
+    value: str,
+    skip_header_lines: int = 0,
+    per_file_cols: dict | None = None,
+) -> DataFrame:
+    """One partition's scan branch of :func:`external_text_table`: the
+    files under ``path`` with ``partition_col`` the literal ``value``.
+    Building it lists the files once (the wholetext size guard); a caller
+    that adds partitions one at a time keeps the branches and unions them
+    with :func:`union_partitions`, so no directory is listed twice."""
+    return read_text_files(
+        spark, path, skip_header_lines, per_file_cols=per_file_cols
+    ).withColumn(partition_col, F.lit(value))
+
+
+def union_partitions(branches: dict[str, DataFrame]) -> DataFrame:
+    """The :func:`text_partition` branches, keyed by partition value,
+    unioned by name in value order."""
+    if not branches:
         raise ValueError("external_text_table needs at least one partition")
-    branches = [
-        read_text_files(
-            spark, path, skip_header_lines, per_file_cols=per_file_cols
-        ).withColumn(partition_col, F.lit(value))
-        for value, path in sorted(partitions.items())
-    ]
-    df = branches[0]
-    for b in branches[1:]:
+    parts = [df for _value, df in sorted(branches.items())]
+    df = parts[0]
+    for b in parts[1:]:
         df = df.unionByName(b)
     return df

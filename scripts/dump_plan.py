@@ -4,9 +4,10 @@ Usage: python scripts/dump_plan.py OUTDIR SUFFIX QUERY [QUERY...]
 
 Writes OUTDIR/<query>_<SUFFIX>.txt for each query, evaluated against
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01) on local[4].
-Expression ids (``#123``) are written as ``#N`` and this checkout's root
-directory as ``<repo>``, so plans dumped from two checkouts compare with
-a plain ``diff -r``.
+Expression ids (``#123``) are written as ``#N``, exchange plan ids
+(``plan_id=45``, a session-wide counter) as ``plan_id=N`` and this
+checkout's root directory as ``<repo>``, so plans dumped from two
+checkouts compare with a plain ``diff -r``.
 """
 from __future__ import annotations
 
@@ -19,8 +20,9 @@ sys.path.insert(0, REPO)
 
 
 def comparable(plan: str) -> str:
-    """``plan`` with expression ids and the checkout root masked."""
-    return re.sub(r"#\d+", "#N", plan.replace(REPO, "<repo>"))
+    """``plan`` with expression ids, plan ids and the checkout root masked."""
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan.replace(REPO, "<repo>"))
+    return re.sub(r"#\d+", "#N", plan)
 
 
 def main() -> None:

@@ -218,3 +218,29 @@ def test_ctas_parquet_roundtrip(spark):
     back = spark.read.parquet(path)
     assert back.count() == 4000
     assert dict(back.dtypes)["wavelength"] == "double"
+
+
+def test_ddl_shim_lists_each_added_partition_once(spark, tmp_path, monkeypatch):
+    """ALTER TABLE ... ADD PARTITION builds only the new partition's scan
+    branch: 10 ADDs list 10 directories through the wholetext size guard
+    (rebuilding every branch on each ADD listed 1 + 2 + ... + 10 = 55),
+    and the view holds every partition's rows."""
+    from hdfs_hive_sql_playground_spark.sources import text
+
+    listed = []
+    data_files = text.data_files
+    monkeypatch.setattr(text, "data_files", lambda s, path: listed.append(path) or data_files(s, path))
+    eng = Engine()
+    eng._spark = spark
+    eng.exec_sql(
+        "CREATE EXTERNAL TABLE shim_adds (row_str STRING) PARTITIONED BY (part STRING) "
+        "STORED AS TEXTFILE TBLPROPERTIES ('skip.header.line.count'='1')"
+    )
+    for i in range(10):
+        d = tmp_path / f"p{i}"
+        d.mkdir()
+        (d / "f.txt").write_text(f"header\nrow{i}\n")
+        eng.exec_sql(f"ALTER TABLE shim_adds ADD PARTITION (part='p{i}') LOCATION '{d}'")
+    assert len(listed) == 10
+    rows = eng.exec_sql("SELECT part, row_str FROM shim_adds").collect()
+    assert sorted(map(tuple, rows)) == [(f"p{i}", f"row{i}") for i in range(10)]

@@ -7,8 +7,12 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from hdfs_hive_sql_playground_spark import plans
+from hdfs_hive_sql_playground_spark.caching import release_tracked_caches
 from hdfs_hive_sql_playground_spark.queries import all_queries
+from hdfs_hive_sql_playground_spark.tables import register_all
 
 SPECS = all_queries()
 
@@ -665,41 +669,54 @@ def test_q136_past_cap_rewrite_is_shuffled_doc_id_equi_join(spark, sf_dir):
         dd.REWRITE_BCAST_CAP = orig
 
 
-def test_q136_build_schedules_no_job(spark, sf_dir):
-    """Constructing the q136 DataFrame must stay LAZY: the rewrite-join
-    strategy probe reads the corpus doc count from parquet FOOTER metadata
-    (tables.parquet_row_count), never from an eager df.count() — an eager
-    action there would charge every explain-only path, plan test, and
-    repeated spec.fn call one full-scan job per build, and at 100 TB that
-    is an extra corpus-scan stage per query run. The tables' schemas
-    come from the process-wide schema cache once a table has been loaded
-    (tables.load), so after one warm documents load the build must
-    schedule zero jobs: the strategy probe adds none (the old eager
-    d.count() added one full-scan job here)."""
-    from hdfs_hive_sql_playground_spark.tables import load, parquet_row_count
+# Registry queries whose BUILD runs Spark jobs by design, with the reason.
+BUILD_RUNS_JOBS = {
+    "q73_m33_ctas_roundtrip": "writes the CTAS text table it reads back",
+    "q74_m33_jdbc_export_roundtrip": "exports to Derby over JDBC and reads the table back",
+    "q75_orc_roundtrip": "writes the ORC files it reads back",
+    "q76_json_roundtrip": "writes the JSON files it reads back",
+    "q77_csv_roundtrip": "writes the CSV files it reads back",
+    "q78_bucketed_join": "writes the two bucketed tables it joins",
+    "q87_neardup_components": "label propagation: one checkpoint job per round until an observed count is 0",
+    "q97_ann_pandas_topk": "collects the query matrix, a closure constant of the pandas scorer",
+    "q110_range_layout_scan": "writes the range layout it scans when the source fingerprint changed",
+    "q116_canonical_per_cluster": "q87's label propagation",
+    "q124_semdedup_prune": "the max cell size (.first()) picks the dominance-join strategy",
+    "q139_leakage_safe_split": "q87's label propagation",
+    "q144_quarantine_ingest": "writes the raw text files it ingests",
+}
 
+
+@pytest.fixture(scope="module")
+def warm_schemas(spark, sf_dir):
+    register_all(spark, sf_dir)
+
+
+def test_build_allow_list_names_registry_queries():
+    assert set(BUILD_RUNS_JOBS) <= set(SPECS)
+
+
+@pytest.mark.parametrize("name", sorted(set(SPECS) - set(BUILD_RUNS_JOBS)))
+def test_registry_build_schedules_no_job(spark, sf_dir, warm_schemas, name):
+    """Constructing a registry query's DataFrame must stay LAZY once the
+    table schemas are cached (tables.load): an action at build time would
+    charge every explain-only path, plan test and repeated spec.fn call
+    its jobs, and at 100 TB a build-time scan is a full extra stage. So
+    driver-side strategy probes read metadata (q136's doc count comes from
+    parquet footers, tables.parquet_row_count), and parallelism floors
+    count the partitions of a plain scan, never of a persisted or
+    AQE-wrapped plan, where ``.rdd`` runs the stages below it (q84, q124
+    and q137 did, 3 jobs each)."""
     sc = spark.sparkContext
-
-    def jobs_during(label, fn):
-        sc.setJobGroup(label, label)
-        try:
-            fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return len(list(sc.statusTracker().getJobIdsForGroup(label) or []))
-
-    load(spark, sf_dir, "documents")
-    built = jobs_during(
-        "q136-lazy-build",
-        lambda: SPECS["q136_segment_dedup_rewrite"].fn(spark, sf_dir),
-    )
-    assert built == 0, (
-        f"building q136 scheduled {built} job(s) after a warm documents "
-        "load — the strategy probe must be metadata-only"
-    )
-    # and the footer-metadata count agrees with an executed count
-    meta_n = parquet_row_count(spark, os.path.join(sf_dir, "documents.parquet"))
-    assert meta_n == load(spark, sf_dir, "documents").count()
+    label = f"lazy-build-{name}"
+    sc.setJobGroup(label, label)
+    try:
+        SPECS[name].fn(spark, sf_dir)
+    finally:
+        sc.setJobGroup(None, None)
+        release_tracked_caches()
+    built = len(list(sc.statusTracker().getJobIdsForGroup(label) or []))
+    assert built == 0, f"building {name} scheduled {built} job(s)"
 
 
 def test_q135_recursion_is_bounded_union_loop(spark, sf_dir):
@@ -966,7 +983,8 @@ def test_q145_nfc_is_one_arrow_pass_then_hash_exchange(spark, sf_dir):
 
 def test_dump_plan_masks_expression_ids_and_checkout_root():
     """scripts/dump_plan.py writes plans two checkouts can `diff -r`:
-    expression ids and the checkout root are masked, nothing else."""
+    expression ids, exchange plan ids and the checkout root are masked,
+    nothing else."""
     import importlib.util
 
     path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "dump_plan.py")
@@ -976,10 +994,12 @@ def test_dump_plan_masks_expression_ids_and_checkout_root():
     plan = (
         "(1) Scan parquet \nOutput [2]: [k#12L, v#345]\n"
         f"Location: InMemoryFileIndex [file:{dump_plan.REPO}/spark-warehouse/t]\n"
-        "Condition : (k#12L > 5)"
+        "Condition : (k#12L > 5)\n"
+        "Arguments: RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=370]"
     )
     assert dump_plan.comparable(plan) == (
         "(1) Scan parquet \nOutput [2]: [k#NL, v#N]\n"
         "Location: InMemoryFileIndex [file:<repo>/spark-warehouse/t]\n"
-        "Condition : (k#NL > 5)"
+        "Condition : (k#NL > 5)\n"
+        "Arguments: RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=N]"
     )
