@@ -33,7 +33,7 @@ from hdfs_hive_sql_playground_spark.m33 import M33_SCHEMA, m33_schem
 from hdfs_hive_sql_playground_spark.queries import all_queries
 from hdfs_hive_sql_playground_spark.sinks import ctas_text, read_text_table
 from hdfs_hive_sql_playground_spark.sources.jdbc import (
-    export_jdbc, jdbc_connection, read_jdbc, sql_state)
+    export_jdbc, jdbc_connection, jdbc_count, sql_state)
 from hdfs_hive_sql_playground_spark.tables import load
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -209,19 +209,6 @@ def _drop_derby_memory(spark, name: str) -> None:
             raise
 
 
-def _tune_derby_sink(spark) -> None:
-    """Table-level locking for the embedded Derby export target. Attribution
-    sweep (fresh JVM per config, 2.8 M-row export): baseline 33.0 s;
-    rowLocking=false 15.1 s (2.19x); durability=test 31.7 s;
-    pageCacheSize=40000 41.8 s; 32 KB pages 33.1 s. The bulk-append
-    bottleneck was Derby's lock manager tracking one lock per inserted
-    row. Coarse locking is what the reference's Sqoop path does on SQL
-    Server (TABLOCK bulk inserts). A system property, so it must be set
-    before the Derby engine boots (first connection) in each bench JVM;
-    per-query correctness paths (q74) keep engine defaults."""
-    spark._jvm.System.setProperty("derby.storage.rowLocking", "false")
-
-
 def _ctas_wall(spark, src_dir: str, table: str, draws: int) -> float:
     return _min_wall(
         spark, lambda: ctas_text(m33_schem(spark, src_dir), table), draws
@@ -229,21 +216,16 @@ def _ctas_wall(spark, src_dir: str, table: str, draws: int) -> float:
 
 
 def _export_wall(spark, df, db: str, rows: int) -> float:
-    """min-of-2 bulk JDBC export of ``df`` (16 writers x 100k batches,
-    verified by a row count on the target). Each draw writes into a FRESH
-    in-memory Derby database, dropped untimed after it: a reused one would
-    measure Derby's page-cache reuse, an undropped one loads the heap.
-
-    16 x 100k: with table-level locking (``_tune_derby_sink``) the next
-    overhead is per-executeBatch bookkeeping, so bigger batches win
-    (interleaved min-of-3: 100k 10.91 s, 50k 11.75 s, 10k 12.73 s);
-    writer count is flat at 14.1-15.4 s for 4..32."""
+    """min-of-2 bulk JDBC export of ``df`` with the export defaults
+    (``sources.jdbc``), verified by a ``COUNT(*)`` on the target as
+    ``Engine.m33_export`` does. Each draw writes into a FRESH in-memory
+    Derby database, dropped untimed after it: a reused one would measure
+    Derby's page-cache reuse, an undropped one loads the heap."""
     url = f"jdbc:derby:memory:{db};create=true"
 
     def run() -> None:
-        export_jdbc(df, url, "m33", mode="overwrite", num_partitions=16,
-                    batchsize=100_000)
-        n = read_jdbc(spark, url, "m33").count()
+        export_jdbc(df, url, "m33", mode="overwrite")
+        n = jdbc_count(spark, url, "m33")
         assert n == rows, n
 
     return _min_wall(spark, run, 2, after=lambda: _drop_derby_memory(spark, db))
@@ -640,7 +622,6 @@ def main() -> None:
 
     if args.legs:
         spark = get_spark(app_name=f"bench-{args.legs.partition(':')[0]}")
-        _tune_derby_sink(spark)  # before the engine's first connection
         t: dict[str, float] = {}
         _measure_group(spark, sf_dir, args.legs, t)
         print(json.dumps(t))
@@ -648,7 +629,6 @@ def main() -> None:
         return
 
     spark = get_spark(app_name="bench")
-    _tune_derby_sink(spark)  # before the engine's first connection
     specs = {n: s for n, s in all_queries().items() if s.bench}
 
     # Warm the JVM + file listing + Python worker pool once so per-query

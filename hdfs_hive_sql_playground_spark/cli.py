@@ -30,6 +30,7 @@ import sys
 
 from hdfs_hive_sql_playground_spark import dialect
 from hdfs_hive_sql_playground_spark.engine import Engine
+from hdfs_hive_sql_playground_spark.sources.jdbc import EXPORT_BATCH_ROWS, EXPORT_WRITERS
 
 
 def _show(df, n: int = 20) -> None:
@@ -217,8 +218,8 @@ def main(argv: list[str] | None = None) -> int:
 
     exp = sub.add_parser("m33-export", help="CTAS + JDBC export + verification count")
     exp.add_argument("--jdbc-url", default="jdbc:derby:memory:m33db;create=true")
-    exp.add_argument("--num-partitions", type=int, default=4)
-    exp.add_argument("--batchsize", type=int, default=1000)
+    exp.add_argument("--num-partitions", type=int, default=EXPORT_WRITERS)
+    exp.add_argument("--batchsize", type=int, default=EXPORT_BATCH_ROWS)
 
     shell = sub.add_parser(
         "sql-cli",

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from hdfs_hive_sql_playground_spark import dialect
 from hdfs_hive_sql_playground_spark.session import get_spark
 from hdfs_hive_sql_playground_spark.sinks import DEFAULT_WAREHOUSE, ctas_text, read_text_table
+from hdfs_hive_sql_playground_spark.sources.jdbc import EXPORT_BATCH_ROWS, EXPORT_WRITERS
 from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, jdbc_count, jdbc_ddl
 from hdfs_hive_sql_playground_spark.sources.text import text_partition, union_partitions
 from hdfs_hive_sql_playground_spark.tables import register_all
@@ -307,8 +308,8 @@ class Engine:
         self,
         url: str,
         table: str = "m33",
-        num_partitions: int = 4,
-        batchsize: int = 1000,
+        num_partitions: int = EXPORT_WRITERS,
+        batchsize: int = EXPORT_BATCH_ROWS,
         create_ddl: str | None = None,
     ) -> int:
         """JDBC export + verification count on the target (runall steps

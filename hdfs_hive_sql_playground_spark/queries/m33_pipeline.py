@@ -108,9 +108,9 @@ def q73_m33_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q74_m33_jdbc_export_roundtrip",
     oracle=_AGG_ORACLE,
-    doc="Bulk JDBC export (A19-A26): df.write.jdbc to embedded Derby with "
-    "numPartitions=4 + batchsize (the Sqoop export pipeline as one call), "
-    "verification read back over JDBC, aggregate — exact value survival.",
+    doc="Bulk JDBC export (A19-A26): df.write.jdbc with the export defaults, 4 writers "
+    "x 100k-row batches, to table-locked embedded Derby (the Sqoop export pipeline as "
+    "one call), verification read back over JDBC, aggregate — exact value survival.",
 )
 def q74_m33_jdbc_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, read_jdbc

@@ -390,12 +390,7 @@ def incremental_ingest_stream(
     return surv.filter(F.col("n_probes_hit") == 0)
 
 
-def make_jdbc_batch_sink(
-    url: str,
-    table: str,
-    num_partitions: int = 4,
-    batchsize: int = 1000,
-):
+def make_jdbc_batch_sink(url: str, table: str):
     """Build the foreachBatch sink used by :func:`export_stream_jdbc`.
 
     Each batch is stamped with its checkpointed ``batch_id`` in a
@@ -424,21 +419,12 @@ def make_jdbc_batch_sink(
                 url,
                 f"DELETE FROM {table} WHERE batch_stamp = {int(batch_id)}",
             )
-        export_jdbc(
-            batch_df, url, table, num_partitions=num_partitions, batchsize=batchsize
-        )
+        export_jdbc(batch_df, url, table)
 
     return _sink
 
 
-def export_stream_jdbc(
-    stream_df: DataFrame,
-    url: str,
-    table: str,
-    checkpoint_dir: str,
-    num_partitions: int = 4,
-    batchsize: int = 1000,
-):
+def export_stream_jdbc(stream_df: DataFrame, url: str, table: str, checkpoint_dir: str):
     """Continuous JDBC export: the streaming version of the Sqoop bulk
     export (A19) — each microbatch lands via the same parallel batched
     ``df.write.jdbc`` path (:func:`..sources.jdbc.export_jdbc`). The
@@ -447,11 +433,8 @@ def export_stream_jdbc(
     :func:`make_jdbc_batch_sink`), so retried microbatches do not
     duplicate rows. Returns the started StreamingQuery (caller
     awaits/stops)."""
-    sink = make_jdbc_batch_sink(
-        url, table, num_partitions=num_partitions, batchsize=batchsize
-    )
     return (
-        stream_df.writeStream.foreachBatch(sink)
+        stream_df.writeStream.foreachBatch(make_jdbc_batch_sink(url, table))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

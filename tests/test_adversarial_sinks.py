@@ -23,6 +23,11 @@ unaffected — the reference's SQL Server target included).
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import pytest
 
 from hdfs_hive_sql_playground_spark.sinks import ctas_text, read_text_table
@@ -42,6 +47,7 @@ ROWS = [
     (7, "", "z"),  # empty string (distinct from NULL)
 ]
 SCHEMA = "a int, b string, c string"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -109,3 +115,50 @@ def test_jdbc_null_string_into_derby_varchar_fails_loudly(spark, adv_df):
             adv_df.filter("b IS NULL"), url, "adv_varchar",
             num_partitions=1, batchsize=10,
         )
+
+
+def test_export_target_alone_boots_with_table_locks():
+    """The export target's embedded Derby database takes only TABLE locks
+    for an insert; a database booted afterwards by a plain connection
+    still takes ROW locks, and the system property is restored. Its own
+    process: Derby reads the property when a database boots, so a
+    database or property another test left behind could make it pass."""
+    code = textwrap.dedent(
+        """
+        from pyspark.sql import SparkSession
+        from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc
+        spark = SparkSession.builder.master("local[2]").getOrCreate()
+        jvm = spark._jvm
+
+        def lock_types(url, ddl=None):
+            conn = jvm.java.sql.DriverManager.getConnection(url)
+            stmt = conn.createStatement()
+            if ddl:
+                stmt.execute(ddl)
+            conn.setAutoCommit(False)
+            stmt.execute("INSERT INTO t VALUES (1)")
+            rs = stmt.executeQuery("SELECT DISTINCT TYPE FROM SYSCS_DIAG.LOCK_TABLE")
+            types = set()
+            while rs.next():
+                types.add(rs.getString(1).strip())
+            conn.rollback()
+            conn.close()
+            return sorted(types)
+
+        export_jdbc(spark.range(10).toDF("k"), "jdbc:derby:memory:lock_export;create=true", "t")
+        print("export", lock_types("jdbc:derby:memory:lock_export"))
+        plain = "jdbc:derby:memory:lock_plain;create=true"
+        print("plain", lock_types(plain, "CREATE TABLE t (k BIGINT)"))
+        print("property", jvm.System.getProperty("derby.storage.rowLocking"))
+        """
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.splitlines()[-3:] == [
+        "export ['TABLE']",
+        "plain ['ROW', 'TABLE']",
+        "property None",
+    ], proc.stdout

@@ -598,26 +598,25 @@ def test_ratio_legs_keep_each_legs_protocol(monkeypatch, tmp_path):
 
 
 def test_derby_table_lock_export_roundtrips_exactly(spark):
-    """The round-13 export-sink tuning (derby.storage.rowLocking=false —
-    table-level locks for the bulk append) must not change WHAT the export
-    writes: 16 concurrent writers appending to one fresh table under
-    table-level locking round-trip every row and every value exactly.
-    Runs in the shared test JVM, so the property is set the same way the
-    bench sets it (System property before this database's first boot)."""
+    """Table-level locks on the export target (``sources.jdbc`` boots an
+    embedded Derby database with derby.storage.rowLocking=false) must not
+    change WHAT the export writes: concurrent writers appending to one
+    fresh table under the export defaults round-trip every row and every
+    value exactly."""
     from pyspark.sql import functions as F
 
     from hdfs_hive_sql_playground_spark.sources.jdbc import (
+        EXPORT_WRITERS,
         export_jdbc,
         read_jdbc,
     )
 
-    bench._tune_derby_sink(spark)
-    df = spark.range(100_000).select(
+    df = spark.range(0, 100_000, 1, 4 * EXPORT_WRITERS).select(
         F.col("id").alias("k"),
         (F.col("id") * 3 % 997).alias("v"),
     )
     url = "jdbc:derby:memory:tablelock_rt;create=true"
-    export_jdbc(df, url, "t", mode="overwrite", num_partitions=16, batchsize=10_000)
+    export_jdbc(df, url, "t", mode="overwrite")
     back = read_jdbc(spark, url, "t")
     assert back.count() == 100_000
     got = back.agg(

@@ -983,8 +983,8 @@ def test_q145_nfc_is_one_arrow_pass_then_hash_exchange(spark, sf_dir):
 
 def test_dump_plan_masks_expression_ids_and_checkout_root():
     """scripts/dump_plan.py writes plans two checkouts can `diff -r`:
-    expression ids, exchange plan ids and the checkout root are masked,
-    nothing else."""
+    expression ids, exchange plan ids, lambda variable suffixes and the
+    checkout root are masked, nothing else."""
     import importlib.util
 
     path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "dump_plan.py")
@@ -995,11 +995,13 @@ def test_dump_plan_masks_expression_ids_and_checkout_root():
         "(1) Scan parquet \nOutput [2]: [k#12L, v#345]\n"
         f"Location: InMemoryFileIndex [file:{dump_plan.REPO}/spark-warehouse/t]\n"
         "Condition : (k#12L > 5)\n"
+        "Output [1]: [transform(v#345, lambdafunction((lambda x_15#346 * 2), lambda x_15#346, false))]\n"
         "Arguments: RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=370]"
     )
     assert dump_plan.comparable(plan) == (
         "(1) Scan parquet \nOutput [2]: [k#NL, v#N]\n"
         "Location: InMemoryFileIndex [file:<repo>/spark-warehouse/t]\n"
         "Condition : (k#NL > 5)\n"
+        "Output [1]: [transform(v#N, lambdafunction((lambda x_N#N * 2), lambda x_N#N, false))]\n"
         "Arguments: RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=N]"
     )
