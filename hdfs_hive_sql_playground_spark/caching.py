@@ -10,8 +10,11 @@ another cached relation on the executors.
 
 ``track_persist`` registers each persisted DataFrame in a module-level
 list; long-running drivers call ``release_tracked_caches()`` after
-materializing a result (the bench harness and the pytest oracle gate
-both do). Untracked sessions (the per-round driver, short scripts) at
+materializing a result: the bench harness, the pytest oracle gate,
+``scripts/dump_plan.py`` and perfbench's ``RegistryMix.run_pass``, which
+imports it by name. Replacing the list with a per-query owner therefore
+has to keep that name working, or change perfbench in the same step.
+Untracked sessions (one-shot ``__spark_entry__`` runs, short scripts) at
 worst hold the few narrow cached relations of the queries they ran —
 MEMORY_AND_DISK, so bounded by disk, never an OOM vector.
 """

@@ -198,20 +198,20 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="hhsp-spark", description=__doc__)
     p.add_argument("--master", default=None, help="Spark master (default local[cpus])")
     sub = p.add_subparsers(dest="verb", required=True)
+    # The verbs that run SQL over registered views share these flags.
+    views = argparse.ArgumentParser(add_help=False)
+    views.add_argument("--testdata", default=None, help="sf dir to register as views")
+    views.add_argument("--m33", action="store_true", help="register m33_raw/m33_schem views")
 
     sub.add_parser("health", help="session + warehouse health report")
     sub.add_parser("logs", help="execution history + effective config (print-hadoop-logs analog)")
 
-    q = sub.add_parser("exec-sql", help="run SQL (field()/TOP dialect shims applied)")
+    q = sub.add_parser("exec-sql", parents=[views], help="run SQL (field()/TOP dialect shims applied)")
     q.add_argument("sql")
-    q.add_argument("--testdata", default=None, help="sf dir to register as views")
-    q.add_argument("--m33", action="store_true", help="register m33_raw/m33_schem views")
     q.add_argument("-n", type=int, default=20, help="rows to show")
 
-    f = sub.add_parser("exec-file", help="run ;-separated SQL file")
+    f = sub.add_parser("exec-file", parents=[views], help="run ;-separated SQL file")
     f.add_argument("path")
-    f.add_argument("--testdata", default=None)
-    f.add_argument("--m33", action="store_true")
 
     pipe = sub.add_parser("m33-pipeline", help="run the full runall.py-equivalent sequence")
     pipe.add_argument("--jdbc-url", default="jdbc:derby:memory:m33db;create=true")
@@ -223,14 +223,13 @@ def main(argv: list[str] | None = None) -> int:
 
     shell = sub.add_parser(
         "sql-cli",
+        parents=[views],
         help="interactive SQL shell (beeline-cli / sql-cli analog, "
         "playground.py:1137-1153): reads ;-terminated statements from "
         "stdin — interactive with a prompt on a TTY, or piped — applies "
         "the dialect shims, prints each result; a failed statement "
         "reports its error and the shell continues",
     )
-    shell.add_argument("--testdata", default=None, help="sf dir to register as views")
-    shell.add_argument("--m33", action="store_true", help="register m33_raw/m33_schem views")
     shell.add_argument("-n", type=int, default=20, help="rows to show per result")
     shell.add_argument(
         "--url",
@@ -258,31 +257,30 @@ def main(argv: list[str] | None = None) -> int:
 
     srv = sub.add_parser(
         "serve-thrift",
+        parents=[views],
         help="serve the session over the HiveServer2 wire protocol "
         "(start-hiveserver2 analog; connect with any hive2 JDBC client)",
     )
     srv.add_argument("--host", default="127.0.0.1")
     srv.add_argument("--port", type=int, default=None, help="default: a free port")
-    srv.add_argument("--testdata", default=None, help="sf dir to register as views")
-    srv.add_argument("--m33", action="store_true", help="register m33_raw/m33_schem views")
 
     args = p.parse_args(argv)
     eng = Engine(master=args.master).start()
     try:
-        if args.verb == "health":
-            print(json.dumps(eng.health(), indent=2))
-        elif args.verb == "logs":
-            print(json.dumps(eng.logs(), indent=2))
-        elif args.verb in ("exec-sql", "exec-file"):
+        if "m33" in vars(args):  # a verb with the shared view flags
             if args.testdata:
                 eng.register_testdata(args.testdata)
             if args.m33:
                 eng.m33_create_views()
-            if args.verb == "exec-sql":
-                _show(eng.exec_sql(args.sql), args.n)
-            else:
-                for df in eng.exec_file(args.path):
-                    _show(df)
+        if args.verb == "health":
+            print(json.dumps(eng.health(), indent=2))
+        elif args.verb == "logs":
+            print(json.dumps(eng.logs(), indent=2))
+        elif args.verb == "exec-sql":
+            _show(eng.exec_sql(args.sql), args.n)
+        elif args.verb == "exec-file":
+            for df in eng.exec_file(args.path):
+                _show(df)
         elif args.verb == "m33-pipeline":
             eng.m33_create_views()
             _show(eng.exec_sql("SELECT * FROM m33_schem ORDER BY wavelength, age_mil, is_peculiar LIMIT 5"))
@@ -296,10 +294,6 @@ def main(argv: list[str] | None = None) -> int:
             n = eng.m33_export(args.jdbc_url, num_partitions=args.num_partitions, batchsize=args.batchsize)
             print(f"exported + verified rows: {n}")
         elif args.verb == "sql-cli":
-            if args.testdata:
-                eng.register_testdata(args.testdata)
-            if args.m33:
-                eng.m33_create_views()
             _sql_shell(eng, n=args.n, url=args.url)
         elif args.verb == "validate":
             from hdfs_hive_sql_playground_spark.queries import all_queries
@@ -308,10 +302,6 @@ def main(argv: list[str] | None = None) -> int:
             if validate(eng.spark, names, args.testdata):
                 return 1
         elif args.verb == "serve-thrift":
-            if args.testdata:
-                eng.register_testdata(args.testdata)
-            if args.m33:
-                eng.m33_create_views()
             server = eng.serve_thrift(host=args.host, port=args.port)
             print(f"listening: {server.url}", flush=True)
             try:

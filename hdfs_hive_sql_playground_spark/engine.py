@@ -25,7 +25,7 @@ from hdfs_hive_sql_playground_spark.session import get_spark
 from hdfs_hive_sql_playground_spark.sinks import DEFAULT_WAREHOUSE, ctas_text, read_text_table
 from hdfs_hive_sql_playground_spark.sources.jdbc import EXPORT_BATCH_ROWS, EXPORT_WRITERS
 from hdfs_hive_sql_playground_spark.sources.jdbc import export_jdbc, jdbc_count, jdbc_ddl
-from hdfs_hive_sql_playground_spark.sources.text import text_partition, union_partitions
+from hdfs_hive_sql_playground_spark.sources.text import TextTable
 from hdfs_hive_sql_playground_spark.tables import register_all
 
 log = logging.getLogger(__name__)
@@ -48,11 +48,9 @@ class Engine:
     conf: dict[str, str] = dc_field(default_factory=dict)
     _spark: SparkSession | None = None
     # Header-skipping external text tables the DDL shim overlays (see
-    # _intercept_ddl), by table name: "partitions" maps each partition value
-    # to its directory, "branches" to its scan branch in this session.
-    _text_shims: dict[str, dict[str, Any]] = dc_field(
-        default_factory=dict, init=False, repr=False
-    )
+    # _intercept_ddl), by table name. Their temp views live in this
+    # session, so stop() forgets them.
+    _text_tables: dict[str, TextTable] = dc_field(default_factory=dict, init=False, repr=False)
 
     # -- lifecycle (A27-A29) -------------------------------------------------
 
@@ -71,8 +69,7 @@ class Engine:
         return self
 
     def stop(self) -> None:
-        for shim in self._text_shims.values():
-            shim["branches"].clear()  # DataFrames of the stopped session
+        self._text_tables.clear()
         if self._spark is not None:
             self._spark.stop()
             self._spark = None
@@ -110,10 +107,19 @@ class Engine:
     def logs(self) -> dict[str, Any]:
         """``print-hadoop-logs`` analog (A30): with no per-node daemon logs
         to cat, surface the session's execution history (job/stage counts
-        from the status tracker) and the effective config."""
+        from the status store and tracker) and the effective config.
+
+        ``n_jobs_run`` counts every job, in a job group or not (each wire
+        statement of the Thrift server runs under one). Job ids count up
+        from 0 and the status store keeps only the latest
+        ``spark.ui.retainedJobs`` of them, so the count is its highest id
+        + 1, not its size."""
         sc = self.spark.sparkContext
         tracker = sc.statusTracker()
-        job_ids = list(tracker.getJobIdsForGroup(None) or [])
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        n_jobs = jobs.size() and max(jobs.apply(0).jobId(), jobs.apply(jobs.size() - 1).jobId()) + 1
         conf = dict(sorted(self.spark.sparkContext.getConf().getAll()))
         interesting = {
             k: v
@@ -122,7 +128,7 @@ class Engine:
         }
         return {
             "app_id": sc.applicationId,
-            "n_jobs_run": len(job_ids),
+            "n_jobs_run": n_jobs,
             "active_jobs": len(tracker.getActiveJobsIds() or []),
             "active_stages": len(tracker.getActiveStageIds() or []),
             "conf": dict(list(interesting.items())[:_LOG_CONF_KEYS]),
@@ -151,25 +157,6 @@ class Engine:
     )
     _CREATE_VIEW_RE = re.compile(r"CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(\w+)", re.IGNORECASE)
 
-    def _refresh_text_shim(self, name: str) -> None:
-        # A partition's scan branch is built (and its files listed) once and
-        # kept; only the union is rebuilt, so P ADDs cost P listings rather
-        # than P(P+1)/2.
-        shim = self._text_shims[name]
-        branches = shim["branches"]
-        for value, path in shim["partitions"].items():
-            if value not in branches:
-                branches[value] = text_partition(
-                    self.spark, path, shim["partition_col"], value, shim["skip"]
-                )
-        if branches:
-            df = union_partitions(branches).withColumnRenamed("row_str", shim["row_col"])
-        else:
-            df = self.spark.createDataFrame(
-                [], f"{shim['row_col']} string, input_file string, {shim['partition_col']} string"
-            )
-        df.createOrReplaceTempView(name)
-
     def _intercept_ddl(self, sql: str) -> DataFrame | None:
         # Anchor every DDL pattern to the start of the trimmed statement:
         # a non-DDL statement that merely CONTAINS a matching fragment
@@ -184,18 +171,12 @@ class Engine:
                     self.spark.sql(sql)  # catalog parity (SHOW PARTITIONS etc.)
                 except Exception as exc:
                     log.warning("DDL shim: catalog statement %r failed: %s", sql, exc)
-            self._text_shims[name] = {
-                "row_col": row_col,
-                "partition_col": part_col,
-                "skip": skip,
-                "partitions": {},
-                "branches": {},
-            }
-            self._refresh_text_shim(name)
+            table = self._text_tables[name] = TextTable(self.spark, part_col, skip, row_col=row_col)
+            table.df().createOrReplaceTempView(name)
             return self.spark.sql("SELECT 1 AS ok").limit(0)
 
         m = self._ADD_PART_RE.match(sql)
-        if m and m.group(1) in self._text_shims:
+        if m and m.group(1) in self._text_tables:
             name, col, value, path = m.group(1), m.group(2), m.group(3), m.group(4)
             if self._catalog_is_hive():
                 # Qualified name bypasses the shim temp view so the
@@ -208,14 +189,12 @@ class Engine:
                     self.spark.sql(stmt)
                 except Exception as exc:
                     log.warning("DDL shim: catalog statement %r failed: %s", stmt, exc)
-            self._text_shims[name]["partitions"][value] = path
-            self._text_shims[name]["branches"].pop(value, None)
-            self._refresh_text_shim(name)
+            self._text_tables[name].add_partition(value, path).df().createOrReplaceTempView(name)
             return self.spark.sql("SELECT 1 AS ok").limit(0)
 
         m = self._CREATE_VIEW_RE.match(sql)
-        if m and self._text_shims and re.search(
-            rf"\b(?:{'|'.join(map(re.escape, self._text_shims))})\b",
+        if m and self._text_tables and re.search(
+            rf"\b(?:{'|'.join(map(re.escape, self._text_tables))})\b",
             dialect.lex(sql).mask,
             re.IGNORECASE,
         ):

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hdfs_hive_sql_playground_spark.dialect import field
-from hdfs_hive_sql_playground_spark.sources.text import external_text_table
+from hdfs_hive_sql_playground_spark.sources.text import TextTable
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT_M33_DIR = os.path.join(REPO_ROOT, "data", "m33_mini")
@@ -42,13 +42,10 @@ def m33_raw(
     """The raw external table: one STRING row per data line, partitioned by
     ``peculiarity`` ∈ {cp, nocp} (partition value from the catalog map)."""
     base = base_dir or DEFAULT_M33_DIR
-    return external_text_table(
-        spark,
-        partitions={"cp": os.path.join(base, "cp"), "nocp": os.path.join(base, "nocp")},
-        partition_col=PARTITION_COL,
-        skip_header_lines=SKIP_HEADER_LINES,
-        per_file_cols=per_file_cols,
-    )
+    table = TextTable(spark, PARTITION_COL, SKIP_HEADER_LINES, per_file_cols or {})
+    for value in ("cp", "nocp"):
+        table.add_partition(value, os.path.join(base, value))
+    return table.df()
 
 
 def m33_schem(spark: SparkSession, base_dir: str | None = None) -> DataFrame:

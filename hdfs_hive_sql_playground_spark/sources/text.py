@@ -27,6 +27,9 @@ Design for scale:
 
 from __future__ import annotations
 
+import functools
+from dataclasses import dataclass, field as dc_field
+
 from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,8 +108,10 @@ def read_text_files(
     """One STRING row per line of every text file under ``path``, minus the
     first ``skip_header_lines`` lines of EACH file.
 
-    Columns: ``row_str`` (the raw line), ``input_file`` (full file URI —
-    the Spark analog of Hive's INPUT__FILE__NAME virtual column, A9).
+    Columns, in this order on both scan paths: ``row_str`` (the raw line),
+    ``input_file`` (full file URI — the Spark analog of Hive's
+    INPUT__FILE__NAME virtual column, A9), then the ``per_file_cols`` in
+    their mapping order.
 
     ``per_file_cols`` maps extra column names to ``fn(file_col) -> Column``
     deriving metadata from the file path (the reference encodes data in
@@ -116,17 +121,33 @@ def read_text_files(
     ~1 s per million rows when computed per-row, and exactly 4 regexp
     calls when computed per file.
     """
-    per_file_cols = per_file_cols or {}
+    raw = _scan(spark, path, skip_header_lines, max_file_bytes)
+    return _lines(raw, skip_header_lines, per_file_cols or {}, ROW_COL)
+
+
+def _scan(
+    spark: SparkSession, path: str, skip_header_lines: int, max_file_bytes: int = MAX_WHOLETEXT_FILE_BYTES
+) -> DataFrame:
+    """The text scan under :func:`_lines`: a ``value`` row per line, or
+    per whole file (size-guarded) when headers are skipped."""
+    if skip_header_lines:
+        _check_wholetext_sizes(spark, path, max_file_bytes)
+    return spark.read.text(path, wholetext=skip_header_lines > 0)
+
+
+def _lines(raw: DataFrame, skip_header_lines: int, per_file_cols: dict, row_col: str) -> DataFrame:
+    """The projection behind :func:`read_text_files`: ``raw`` is a text
+    scan's ``value`` column (one row per line, or one per file when
+    ``skip_header_lines`` > 0); the result is ``row_col``, ``input_file``
+    and the per-file columns."""
+    derived = [fn(F.input_file_name()).alias(n) for n, fn in per_file_cols.items()]
     if skip_header_lines == 0:
         # Line-mode scan: there is no pre-explode row to hoist onto, so
         # derived columns evaluate per line (same as Hive's virtual-column
         # semantics).
-        return spark.read.text(path).select(
-            F.col("value").alias(ROW_COL),
-            F.input_file_name().alias(FILE_COL),
-            *[fn(F.input_file_name()).alias(n) for n, fn in per_file_cols.items()],
+        return raw.select(
+            F.col("value").alias(row_col), F.input_file_name().alias(FILE_COL), *derived
         )
-    _check_wholetext_sizes(spark, path, max_file_bytes)
     # Line-terminator contract: Hadoop's LineRecordReader (the line-mode
     # path above, and Hive TEXTFILE — the reference semantics) terminates
     # lines on CR, LF, or CRLF and never includes the terminator in the
@@ -158,12 +179,12 @@ def read_text_files(
     lines = F.when(
         v.contains("\r"), F.split(v, "\r\n|\r|\n")
     ).otherwise(F.split(v, "\n"))
-    whole = spark.read.text(path, wholetext=True).select(
+    whole = raw.select(
         F.input_file_name().alias(FILE_COL),
         lines.alias("_lines"),
         # once-per-file evaluation: the explode below only replicates the
         # already-computed value into each output row
-        *[fn(F.input_file_name()).alias(n) for n, fn in per_file_cols.items()],
+        *derived,
     )
     _l = F.col("_lines")
     # one phantom "" iff the file ends with a terminator — see above
@@ -173,56 +194,46 @@ def read_text_files(
         skip_header_lines + 1,
         F.greatest(F.size(_l) - skip_header_lines - tail_adj, F.lit(0)),
     )
-    return whole.select(
-        FILE_COL, *per_file_cols.keys(), F.explode(body).alias(ROW_COL)
-    )
+    return whole.select(F.explode(body).alias(row_col), FILE_COL, *per_file_cols)
 
 
-def external_text_table(
-    spark: SparkSession,
-    partitions: dict[str, str],
-    partition_col: str,
-    skip_header_lines: int = 0,
-    per_file_cols: dict | None = None,
-) -> DataFrame:
-    """Partitioned external text table: ``{partition_value: directory}``.
+@dataclass
+class TextTable:
+    """A partitioned external text table: ``CREATE EXTERNAL TABLE ...
+    PARTITIONED BY (partition_col STRING) STORED AS TEXTFILE`` with
+    ``skip.header.line.count``, plus one :meth:`add_partition` per
+    ``ADD PARTITION (partition_col='value') LOCATION 'dir'``. The value is
+    bound by the catalog (this object), never parsed from paths.
 
-    Mirrors ``ADD PARTITION (col='value') LOCATION 'dir'`` — the value is
-    bound by this mapping (catalog semantics), never parsed from paths.
-    ``per_file_cols`` passes through to :func:`read_text_files` (per-file
-    filename-derived metadata, hoisted above the explode).
-    """
-    return union_partitions({
-        value: text_partition(spark, path, partition_col, value, skip_header_lines, per_file_cols)
-        for value, path in partitions.items()
-    })
+    :meth:`df` has the columns ``row_col``, ``input_file``, the
+    ``per_file_cols`` and ``partition_col``, in that order, whatever the
+    header-skip count and however many partitions there are (none
+    included). Each partition is one scan branch, built (its files listed
+    once, by the wholetext size guard) when it is added, so P adds list P
+    directories; adding a value again rebuilds only that branch."""
 
+    spark: SparkSession
+    partition_col: str
+    skip_header_lines: int = 0
+    per_file_cols: dict = dc_field(default_factory=dict)
+    row_col: str = ROW_COL
+    _branches: dict[str, DataFrame] = dc_field(default_factory=dict, init=False, repr=False)
 
-def text_partition(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    value: str,
-    skip_header_lines: int = 0,
-    per_file_cols: dict | None = None,
-) -> DataFrame:
-    """One partition's scan branch of :func:`external_text_table`: the
-    files under ``path`` with ``partition_col`` the literal ``value``.
-    Building it lists the files once (the wholetext size guard); a caller
-    that adds partitions one at a time keeps the branches and unions them
-    with :func:`union_partitions`, so no directory is listed twice."""
-    return read_text_files(
-        spark, path, skip_header_lines, per_file_cols=per_file_cols
-    ).withColumn(partition_col, F.lit(value))
+    def add_partition(self, value: str, path: str) -> "TextTable":
+        raw = _scan(self.spark, path, self.skip_header_lines)
+        self._branches[value] = self._layout(raw, value)
+        return self
 
+    def df(self) -> DataFrame:
+        """The branches unioned by name in partition-value order; with no
+        partition, the same layout over no rows."""
+        if not self._branches:
+            return self._layout(self.spark.createDataFrame([], "value string"), None)
+        parts = [df for _value, df in sorted(self._branches.items())]
+        return functools.reduce(DataFrame.unionByName, parts)
 
-def union_partitions(branches: dict[str, DataFrame]) -> DataFrame:
-    """The :func:`text_partition` branches, keyed by partition value,
-    unioned by name in value order."""
-    if not branches:
-        raise ValueError("external_text_table needs at least one partition")
-    parts = [df for _value, df in sorted(branches.items())]
-    df = parts[0]
-    for b in parts[1:]:
-        df = df.unionByName(b)
-    return df
+    def _layout(self, raw: DataFrame, value: str | None) -> DataFrame:
+        lines = _lines(raw, self.skip_header_lines, self.per_file_cols, self.row_col)
+        # The cast types the empty table's NULL value as a partition value;
+        # on a string value the optimizer drops it.
+        return lines.withColumn(self.partition_col, F.lit(value).cast("string"))

@@ -281,3 +281,19 @@ def test_cli_validate_helper_reports_pass_rowsonly_unknown(spark, sf_dir, capsys
     assert "UNKNOWN no_such_query" in out, out
     assert fails == ["no_such_query"]
     assert "VALIDATE_DONE checked=3 fails=1" in out, out
+
+
+def test_cli_exec_file_registers_views(tmp_path):
+    """exec-file takes the view flags the other SQL verbs take and
+    registers the views before its statements run."""
+    sql = tmp_path / "q.sql"
+    sql.write_text("SELECT COUNT(*) AS n FROM m33_schem;\n")
+    r = subprocess.run(
+        [sys.executable, "-m", "hdfs_hive_sql_playground_spark.cli", "exec-file", "--m33", str(sql)],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        cwd=REPO,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert re.search(r"\|\s*4000\s*\|", r.stdout), r.stdout[-2000:]

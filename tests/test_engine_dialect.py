@@ -244,3 +244,58 @@ def test_ddl_shim_lists_each_added_partition_once(spark, tmp_path, monkeypatch):
     assert len(listed) == 10
     rows = eng.exec_sql("SELECT part, row_str FROM shim_adds").collect()
     assert sorted(map(tuple, rows)) == [(f"p{i}", f"row{i}") for i in range(10)]
+
+
+@pytest.mark.parametrize("skip", [0, 3])
+def test_ddl_shim_select_star_layout_is_fixed(spark, tmp_path, skip):
+    """``SELECT *`` over a shimmed table gives the declared row column,
+    ``input_file`` and the partition column, in that order and as strings,
+    with no partition, one and two, whatever the header-skip count."""
+    from pyspark.sql.types import StringType
+
+    eng = Engine()
+    eng._spark = spark
+    name = f"shim_layout_{skip}"
+    eng.exec_sql(
+        f"CREATE EXTERNAL TABLE {name} (line STRING) PARTITIONED BY (part STRING) "
+        f"STORED AS TEXTFILE TBLPROPERTIES ('skip.header.line.count'='{skip}')"
+    )
+    want = [("line", StringType()), ("input_file", StringType()), ("part", StringType())]
+    layouts = [[(f.name, f.dataType) for f in eng.exec_sql(f"SELECT * FROM {name}").schema]]
+    for value in ("b", "a"):
+        d = tmp_path / value
+        d.mkdir()
+        (d / "f.txt").write_text("h1\nh2\nh3\n" * (skip > 0) + f"row_{value}\n")
+        eng.exec_sql(f"ALTER TABLE {name} ADD PARTITION (part='{value}') LOCATION '{d}'")
+        layouts.append([(f.name, f.dataType) for f in eng.exec_sql(f"SELECT * FROM {name}").schema])
+    assert layouts == [want] * 3
+    rows = eng.exec_sql(f"SELECT line, part FROM {name}").collect()
+    assert sorted(map(tuple, rows)) == [("row_a", "a"), ("row_b", "b")]
+
+
+@pytest.mark.parametrize("skip", [0, 1])
+def test_read_text_files_column_order(spark, tmp_path, skip):
+    from hdfs_hive_sql_playground_spark.sources.text import read_text_files
+
+    (tmp_path / "f.txt").write_text("h\nrow\n")
+    df = read_text_files(
+        spark, str(tmp_path), skip, per_file_cols={"name_len": lambda f: F.length(f)}
+    )
+    assert df.columns == ["row_str", "input_file", "name_len"]
+
+
+def test_logs_counts_jobs_run_in_a_job_group(spark):
+    """Jobs under a job group (every Thrift wire statement runs in one)
+    count in ``n_jobs_run`` like any other job."""
+    eng = Engine()
+    eng._spark = spark
+    before = eng.logs()["n_jobs_run"]
+    sc = spark.sparkContext
+    sc.setJobGroup("logs-count", "jobs that logs() must count")
+    try:
+        spark.range(10).collect()
+        spark.range(10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert eng.logs()["n_jobs_run"] >= before + 2
