@@ -438,15 +438,25 @@ def q81_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("i"))
     )
     return (
+        _jaccard(inter, sizes)
+        .filter(F.col("jaccard") >= JACCARD_MIN)
+        .orderBy("doc_a", "doc_b")
+    )
+
+
+def _jaccard(inter: DataFrame, sizes: DataFrame, *extra: Column) -> DataFrame:
+    """``(doc_a, doc_b, *extra, jaccard)`` from the pairs' shingle
+    intersection count ``inter.i`` and each document's shingle count
+    ``sizes.n``: |A n B| / (|A| + |B| - |A n B|), rounded to 6 places."""
+    return (
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
         .select(
             "doc_a",
             "doc_b",
+            *extra,
             F.round(F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= JACCARD_MIN)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -503,16 +513,7 @@ def q82_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("i"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("i").alias("n_common"),
-            F.round(F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6).alias("jaccard"),
-        )
-    )
+    return _jaccard(inter, sizes, F.col("i").alias("n_common"))
 
 
 # ---------------------------------------------------------------------------

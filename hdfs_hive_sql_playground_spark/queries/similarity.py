@@ -28,9 +28,9 @@ DuckDB oracles (``list_sum(list_transform(...))``) evaluate the dot
 product as a sequential left fold over float32 values exactly cast to
 double, so cosines are bit-identical and rank order is engine-independent.
 Every hot scoring stage pre-computes per-ROW norms so it folds one dot
-per candidate pair instead of three; because the sqrt/multiply/divide
-order matches ``_cos`` exactly, the values (and the oracle hashes) are
-unchanged.
+per candidate pair instead of three; every cosine, ``_cos`` included, is
+``_normed_cos`` over ``_norm``s, so the sqrt/multiply/divide order — and
+the oracle hash — is the same in every stage.
 
 Centroid "training" is deterministic: the first N_CELLS vectors serve as
 the coarse quantizer (a fixed seed sample — at scale, replace with
@@ -79,13 +79,24 @@ def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
-def _cos(a: Column, b: Column) -> Column:
+def _norm(v: Column) -> Column:
+    return F.sqrt(_dot(v, v))
+
+
+def _normed_cos(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their ``_norm``s ``na`` and ``nb``:
+    hot pair stages pass norms computed once per row, so they fold one dot
+    per pair instead of three."""
     # try_divide, not `/`: a zero-norm embedding (padding row, all-stopword
     # doc) must yield NULL — which sorts LAST under any DESC rank, matching
     # DuckDB's divide-by-zero semantics — instead of an ANSI DIVIDE_BY_ZERO
     # crash (or, with ANSI off, a NaN that sorts FIRST and tops every ANN
     # list). Value is bit-identical to plain division for nonzero norms.
-    return F.try_divide(_dot(a, b), F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+    return F.try_divide(_dot(a, b), na * nb)
+
+
+def _cos(a: Column, b: Column) -> Column:
+    return _normed_cos(a, b, _norm(a), _norm(b))
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,41 +157,41 @@ def _assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     CENTROID can never win a non-null score — both exactly what the
     oracle's ORDER BY ccos DESC (NULLS LAST), cid produces. Contract-
     tested on the zero/underflow fixture in test_adversarial_corpus."""
-    e = _embeddings(spark, sf_dir).withColumn(
-        "__nv", F.sqrt(_dot(F.col("v"), F.col("v")))
+    e = _embeddings(spark, sf_dir).withColumn("__nv", _norm(F.col("v")))
+    cents = e.filter(F.col("vec_id") < N_CELLS).select(
+        F.col("vec_id").alias("cid"),
+        F.col("v").alias("cv"),
+        F.col("__nv").alias("__ncv"),
     )
-    cents = F.broadcast(
-        e.filter(F.col("vec_id") < N_CELLS)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("v").alias("cv"),
-            F.col("__nv").alias("__ncv"),
-        )
-        .agg(F.collect_list(F.struct("cid", "cv", "__ncv")).alias("__cents"))
+    return _nearest_centroid(e, cents).select(
+        "vec_id",
+        "v",
+        F.col("__best.cid").alias("cell"),
+        F.col("__best.ccos").alias("ccos"),
+        "__nv",
+    )
+
+
+def _nearest_centroid(rows: DataFrame, cents: DataFrame) -> DataFrame:
+    """``rows`` (with ``v`` and its norm ``__nv``) plus ``__best``, the
+    struct ``(ccos, __negcid, cid)`` of the nearest of ``cents`` (``cid``,
+    ``cv`` and its norm ``__ncv``): the per-row ``array_max`` fold over the
+    broadcast centroid array described in :func:`_assignments`, ties to
+    the smaller cid."""
+    arr = F.broadcast(
+        cents.agg(F.collect_list(F.struct("cid", "cv", "__ncv")).alias("__cents"))
     )
     best = F.array_max(
         F.transform(
             F.col("__cents"),
             lambda c: F.struct(
-                F.try_divide(
-                    _dot(F.col("v"), c["cv"]), F.col("__nv") * c["__ncv"]
-                ).alias("ccos"),
+                _normed_cos(F.col("v"), c["cv"], F.col("__nv"), c["__ncv"]).alias("ccos"),
                 (-c["cid"]).alias("__negcid"),
                 c["cid"].alias("cid"),
             ),
         )
     )
-    return (
-        e.crossJoin(cents)
-        .withColumn("__best", best)
-        .select(
-            "vec_id",
-            "v",
-            F.col("__best.cid").alias("cell"),
-            F.col("__best.ccos").alias("ccos"),
-            "__nv",
-        )
-    )
+    return rows.crossJoin(arr).withColumn("__best", best)
 
 
 # -- shared DuckDB oracle fragments -----------------------------------------
@@ -228,8 +239,7 @@ _SQL_ASSIGN = f"""
 )
 def q84_embedding_neardup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row norms once (carried on the assignment), one fold per
-    # candidate pair (order-identical to _cos, so cos_r6 hashes
-    # bit-identically against the oracle)
+    # candidate pair (_normed_cos)
     #
     # Round 13, mirroring q124's dominance stage: (a) persist the
     # assignment — both join sides derive from it, so the un-persisted
@@ -247,9 +257,7 @@ def q84_embedding_neardup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cell"),
         F.col("__nv").alias("__nb"),
     )
-    cos = F.try_divide(
-        _dot(F.col("va"), F.col("vb")), F.col("__na") * F.col("__nb")
-    )
+    cos = _normed_cos(F.col("va"), F.col("vb"), F.col("__na"), F.col("__nb"))
     probe = a.select(
         F.col("vec_id").alias("vec_a"),
         F.col("v").alias("va"),
@@ -291,9 +299,7 @@ def q84_embedding_neardup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q85_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact-side norms once per row, query norms once per broadcast row:
     # the scoring stage folds one dot per (query, vector), not three
-    e = _embeddings(spark, sf_dir).withColumn(
-        "__nv", F.sqrt(_dot(F.col("v"), F.col("v")))
-    )
+    e = _embeddings(spark, sf_dir).withColumn("__nv", _norm(F.col("v")))
     q = F.broadcast(
         e.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
@@ -307,9 +313,7 @@ def q85_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.try_divide(
-                _dot(F.col("qv"), F.col("v")), F.col("__nq") * F.col("__nv")
-            ).alias("cos"),
+            _normed_cos(F.col("qv"), F.col("v"), F.col("__nq"), F.col("__nv")).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -362,7 +366,7 @@ def q86_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("__nq"),
+        _norm(F.col("v")).alias("__nq"),
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("cid"))
     qcells = (
@@ -390,8 +394,7 @@ def q86_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical, SortMergeJoin eliminated from the plan).
     qcells = F.broadcast(qcells)
     # candidate ranking is the hot stage: per-row candidate norms come
-    # precomputed on the assignment, one fold per (query, candidate) —
-    # order-identical to _cos
+    # precomputed on the assignment, one fold per (query, candidate)
     cand_side = assign.select(
         F.col("vec_id").alias("neighbor_id"), "v", "cell", "__nv"
     )
@@ -401,9 +404,7 @@ def q86_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            F.try_divide(
-                _dot(F.col("qv"), F.col("v")), F.col("__nq") * F.col("__nv")
-            ).alias("cos"),
+            _normed_cos(F.col("qv"), F.col("v"), F.col("__nq"), F.col("__nv")).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -657,20 +658,12 @@ def q103_srp_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = track_persist(  # 3 consumers: bands + 2 verify sides
         _embeddings(spark, sf_dir)
         .filter(F.col("vec_id") < SRP_MAX_VEC)
-        .select(
-            "vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("__n")
-        )
+        .select("vec_id", "v", _norm(F.col("v")).alias("__n"))
     )
-
-    def dot(j: int) -> Column:
-        w = F.array(*[F.lit(x) for x in _SRP_W[j]])
-        return F.aggregate(
-            F.zip_with(F.col("v"), w, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-
-    bits = [F.when(dot(j) >= 0, 1).otherwise(0) for j in range(SRP_BITS)]
+    bits = [
+        F.when(_dot(F.col("v"), F.array(*[F.lit(x) for x in w])) >= 0, 1).otherwise(0)
+        for w in _SRP_W
+    ]
     band_cols = []
     for b in range(_SRP_N_BANDS):
         expr = None
@@ -706,10 +699,9 @@ def q103_srp_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "vec_b",
     )
-    # one fold per verified pair; order-identical to _cos
+    # one fold per verified pair
     cos_r6 = F.round(
-        F.try_divide(_dot(F.col("va"), F.col("vb")), F.col("__na") * F.col("__nb")),
-        6,
+        _normed_cos(F.col("va"), F.col("vb"), F.col("__na"), F.col("__nb")), 6
     )
     return pairs.select("vec_a", "vec_b", cos_r6.alias("cos_r6")).filter(
         F.col("cos_r6") >= NEARDUP_COS
@@ -805,13 +797,16 @@ def q124_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (computed once per ROW upstream) instead of being folded twice per
     # PAIR inside the join (the naive _cos form folds three 64-dim
     # aggregates per candidate pair — 3x the hot-stage arithmetic).
-    # sqrt/multiply/divide order is identical to _cos, so the value —
-    # and the oracle hash — is bit-identical.
-    pair_cos = F.try_divide(
-        _dot(F.col("v"), F.col("bv")), F.col("__nv") * F.col("__nb")
-    )
+    pair_cos = _normed_cos(F.col("v"), F.col("bv"), F.col("__nv"), F.col("__nb"))
     dominates = (F.col("b_ccos") > F.col("ccos")) | (
         (F.col("b_ccos") == F.col("ccos")) & (F.col("b_id") < F.col("vec_id"))
+    )
+    b = assign.select(
+        F.col("vec_id").alias("b_id"),
+        F.col("v").alias("bv"),
+        "cell",
+        F.col("ccos").alias("b_ccos"),
+        F.col("__nv").alias("__nb"),
     )
 
     if max_cell <= SEMDEDUP_CELL_CAP:
@@ -827,13 +822,6 @@ def q124_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no-op (the sharded hot-cell branch below has always done the
         # analogous repartition on its composite key).
         a = _parallelism_floor(spark, sf_dir, assign)
-        b = assign.select(
-            F.col("vec_id").alias("b_id"),
-            F.col("v").alias("bv"),
-            "cell",
-            F.col("ccos").alias("b_ccos"),
-            F.col("__nv").alias("__nb"),
-        )
         dominated = (
             a.join(b, "cell")
             .filter(dominates)
@@ -869,14 +857,7 @@ def q124_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("__sb", all_shards)
         )
         b = (
-            assign.select(
-                F.col("vec_id").alias("b_id"),
-                F.col("v").alias("bv"),
-                "cell",
-                F.col("ccos").alias("b_ccos"),
-                F.col("__nv").alias("__nb"),
-            )
-            .join(shards, "cell")
+            b.join(shards, "cell")
             .withColumn(
                 "__sb", F.pmod(F.xxhash64("b_id"), F.col("__n_shards")).cast("int")
             )
@@ -992,25 +973,6 @@ def q137_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cv"),
         )
     )
-    # re-assignment is the same zero-shuffle per-row array_max fold as
-    # _assignments (struct max over (rcos, -cid) == ORDER BY rcos DESC, cid)
-    cents = F.broadcast(
-        cent1.withColumn("__ncv", F.sqrt(_dot(F.col("cv"), F.col("cv")))).agg(
-            F.collect_list(F.struct("cid", "cv", "__ncv")).alias("__cents")
-        )
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("__cents"),
-            lambda c: F.struct(
-                F.try_divide(
-                    _dot(F.col("v"), c["cv"]), F.col("__nv") * c["__ncv"]
-                ).alias("rcos"),
-                (-c["cid"]).alias("__negcid"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
     # Parallelism floor on the re-assignment scan (round 13, the q124/q84
     # pattern): the cached assignment carries the 1-2-partition layout of
     # a small single-file scan, serializing the n x N_CELLS x dim rescore
@@ -1020,15 +982,14 @@ def q137_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _parallelism_floor(
         spark, sf_dir, a.select("vec_id", "v", "__nv", F.col("cell").alias("cell0"))
     )
-    picked = (
-        base.crossJoin(cents)
-        .withColumn("__best", best)
-        .select(
-            "vec_id",
-            "cell0",
-            F.col("__best.cid").alias("cell"),
-            F.col("__best.rcos").alias("rcos"),
-        )
+    # re-assignment is the same zero-shuffle per-row array_max fold as
+    # _assignments (struct max over (rcos, -cid) == ORDER BY rcos DESC, cid)
+    cents = cent1.withColumn("__ncv", _norm(F.col("cv")))
+    picked = _nearest_centroid(base, cents).select(
+        "vec_id",
+        "cell0",
+        F.col("__best.cid").alias("cell"),
+        F.col("__best.ccos").alias("rcos"),
     )
     return picked.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vecs"),

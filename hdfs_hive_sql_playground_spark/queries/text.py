@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hdfs_hive_sql_playground_spark.queries import register
 from hdfs_hive_sql_playground_spark.queries.dedup import (
+    MERSENNE_P,
     _CANONICAL_URL_SQL,
     _SYNTH_URL_SQL,
     _canonical_url,
@@ -38,7 +39,6 @@ LEXICON: dict[str, tuple[str, ...]] = {
 }
 
 STOPWORDS = LEXICON["en"]
-MERSENNE_P = (1 << 31) - 1
 
 
 def _lex_values_sql() -> str:
@@ -125,6 +125,48 @@ CUMSUM_BUCKET_WIDTH = 1 << 20
 MD5_BUCKET_PREFIX = 4
 
 
+def _with_bucket_offsets(
+    df: DataFrame,
+    local: DataFrame,
+    stratum: str,
+    bucket: Column,
+    total: Column,
+    alias: str,
+) -> DataFrame:
+    """Second pass of the bucketed prefix scan: ``local`` (``df`` with
+    ``__bucket`` and its within-bucket window value ``__local``) joined on
+    (stratum, bucket) to the sum of ``total`` over the stratum's earlier
+    buckets, giving ``alias = __off + __local``.
+
+    The totals aggregate the INPUT ``df``, not the window output: this
+    plan branch then costs one re-scan plus a map-side partial aggregation
+    whose shuffle carries <= (#strata x #buckets) rows — never a second
+    full corpus exchange (window branches don't qualify for runtime
+    exchange reuse when column pruning differs)."""
+    from pyspark.sql.window import Window
+
+    totals = (
+        df.withColumn("__bucket", bucket)
+        .groupBy(stratum, "__bucket")
+        .agg(total.alias("__tot"))
+    )
+    off_w = (
+        Window.partitionBy(stratum)
+        .orderBy("__bucket")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = totals.select(
+        stratum,
+        "__bucket",
+        F.coalesce(F.sum("__tot").over(off_w), F.lit(0).cast("bigint")).alias("__off"),
+    )
+    return (
+        local.join(offsets, [stratum, "__bucket"])
+        .withColumn(alias, (F.col("__off") + F.col("__local")).cast("bigint"))
+        .drop("__bucket", "__local", "__off")
+    )
+
+
 def _bucketed_running_sum(
     df: DataFrame,
     stratum: str,
@@ -138,39 +180,16 @@ def _bucketed_running_sum(
     non-negative integer key (doc_id)."""
     from pyspark.sql.window import Window
 
-    width = CUMSUM_BUCKET_WIDTH
-    b = df.withColumn("__bucket", F.expr(f"{order_col} div {width}"))
+    bucket = F.expr(f"{order_col} div {CUMSUM_BUCKET_WIDTH}")
     local_w = (
         Window.partitionBy(stratum, "__bucket")
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    b = b.withColumn("__local", F.sum(value).over(local_w))
-    # Per-bucket totals aggregate the INPUT, not the window output: the
-    # second plan branch then costs one re-scan plus a map-side partial
-    # aggregation whose shuffle carries <= (#strata x #buckets) rows —
-    # never a second full corpus exchange (window branches don't qualify
-    # for runtime exchange reuse when column pruning differs).
-    totals = (
-        df.withColumn("__bucket", F.expr(f"{order_col} div {width}"))
-        .groupBy(stratum, "__bucket")
-        .agg(F.sum(value).alias("__tot"))
+    local = df.withColumn("__bucket", bucket).withColumn(
+        "__local", F.sum(value).over(local_w)
     )
-    off_w = (
-        Window.partitionBy(stratum)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        stratum,
-        "__bucket",
-        F.coalesce(F.sum("__tot").over(off_w), F.lit(0).cast("bigint")).alias("__off"),
-    )
-    return (
-        b.join(offsets, [stratum, "__bucket"])
-        .withColumn(alias, (F.col("__local") + F.col("__off")).cast("bigint"))
-        .drop("__bucket", "__local", "__off")
-    )
+    return _with_bucket_offsets(df, local, stratum, bucket, F.sum(value), alias)
 
 
 def _bucketed_rank(
@@ -190,31 +209,14 @@ def _bucketed_rank(
     N x #buckets per stratum instead of the corpus."""
     from pyspark.sql.window import Window
 
-    b = df.withColumn("__bucket", bucket_col)
     local_w = Window.partitionBy(stratum, "__bucket").orderBy(*order_cols)
-    b = b.withColumn("__local", F.row_number().over(local_w))
-    # counts from the input, not the window output — see _bucketed_running_sum
-    counts = (
-        df.withColumn("__bucket", bucket_col)
-        .groupBy(stratum, "__bucket")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
-    off_w = (
-        Window.partitionBy(stratum)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        stratum,
-        "__bucket",
-        F.coalesce(F.sum("__cnt").over(off_w), F.lit(0).cast("bigint")).alias("__off"),
+    local = df.withColumn("__bucket", bucket_col).withColumn(
+        "__local", F.row_number().over(local_w)
     )
     if keep_at_most is not None:
-        b = b.filter(F.col("__local") <= keep_at_most)
-    return (
-        b.join(offsets, [stratum, "__bucket"])
-        .withColumn(alias, (F.col("__off") + F.col("__local")).cast("bigint"))
-        .drop("__bucket", "__local", "__off")
+        local = local.filter(F.col("__local") <= keep_at_most)
+    return _with_bucket_offsets(
+        df, local, stratum, bucket_col, F.count(F.lit(1)), alias
     )
 
 

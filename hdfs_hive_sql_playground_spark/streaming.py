@@ -227,7 +227,7 @@ def crawl_front_stream(
 ) -> DataFrame:
     """The streaming dual of q143's crawl front half, composed from the
     same pieces the batch operator composes: canonical-URL keep-first
-    (``dedup_crawl_frontier``'s construction), exact content dedup among
+    (``dedup_crawl_frontier`` itself), exact content dedup among
     URL survivors (q80's md5, ``dropDuplicatesWithinWatermark`` on the
     16-byte hash), then the Gopher-lite quality gate — emitting the
     SURVIVING fetches with their quality signals. Streaming semantics
@@ -241,10 +241,7 @@ def crawl_front_stream(
     O(pages per watermark window); the quality gate is stateless
     projection. Stage order matches DEPLOYMENT_100TB §8: each stage sees
     only the prior stage's survivors."""
-    from hdfs_hive_sql_playground_spark.queries.dedup import (
-        _canonical_url,
-        content_norm,
-    )
+    from hdfs_hive_sql_playground_spark.queries.dedup import content_norm
     from hdfs_hive_sql_playground_spark.queries.text import (
         CRAWL_MIN_WCHARS,
         CRAWL_MIN_WORDS,
@@ -256,14 +253,10 @@ def crawl_front_stream(
         (F.length(norm) - (nw - F.lit(1))) / nw
     ).cast("bigint")
     surv = (
-        fetches.withColumn(
-            "canonical_url", _canonical_url(F.col(url_col), keep_params)
-        )
+        dedup_crawl_frontier(fetches, url_col, ts_col, keep_params)
         .withColumn("h", F.md5(norm))
         .withColumn("n_words", nw)
         .withColumn("mw_chars", mw)
-        .withWatermark(ts_col, WATERMARK)
-        .dropDuplicatesWithinWatermark(["canonical_url"])
         .dropDuplicatesWithinWatermark(["h"])
     )
     return surv.filter(
@@ -321,9 +314,9 @@ def incremental_ingest_stream(
     # captured split expression re-tokenizes per gram under the
     # interpreted HOF path — O(words²) per doc); __w is added just before
     # the gram projection below and dropped from the output.
-    from hdfs_hive_sql_playground_spark.queries.dedup import _ngrams_of
+    from hdfs_hive_sql_playground_spark.queries.dedup import _ngrams_of, _words
 
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    words = _words(F.col(text_col))
     grams = _ngrams_of(F.col("__w"), PROBE_N)
     probes_lit = F.array(*[F.lit(p) for p in PROBES])
     # Assign the watermark only when the input doesn't already carry one:
